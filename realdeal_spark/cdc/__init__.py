@@ -11,9 +11,10 @@ from realdeal_spark.cdc.apply import CdcApplier, EpochReport
 from realdeal_spark.cdc.backfill import backfill
 from realdeal_spark.cdc.evolve import plan_evolution, reconcile
 from realdeal_spark.cdc.replicate import (
+    advance_replica,
     create_replica,
+    replica_surface,
     replicate_interval,
-    stream_replicate,
 )
 from realdeal_spark.cdc.quarantine import (
     RedriveReport,
@@ -32,9 +33,7 @@ from realdeal_spark.cdc.joinview import (
     JoinViewMaintainer,
     advance_join_view,
     create_join_view,
-    join_view_lag,
     join_view_watermark,
-    stream_maintain_join_view,
 )
 
 __all__ = [
@@ -51,15 +50,14 @@ __all__ = [
     "reconcile",
     "Measure",
     "RollupMaintainer",
+    "advance_replica",
     "create_replica",
+    "replica_surface",
     "replicate_interval",
     "rollup_advance",
     "rollup_full",
-    "stream_replicate",
     "JoinViewMaintainer",
     "advance_join_view",
     "create_join_view",
-    "join_view_lag",
     "join_view_watermark",
-    "stream_maintain_join_view",
 ]

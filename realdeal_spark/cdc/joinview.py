@@ -45,7 +45,8 @@ and the watermarks are recovered from the applied-epoch ids in-band
 
 Reference analogue: none — the reference joins scraped records to
 their metadata by re-reading the whole store per report run
-(generate_report.py); the maintained delta-join is the lake recast.
+(realdeal/luigi/email_deals.py); the maintained delta-join is the
+lake recast.
 """
 
 from __future__ import annotations
@@ -167,16 +168,16 @@ def advance_join_view(
     view: LakeTable,
     on,
     dim_cols: Sequence[str] | None = None,
-    fact_to: int | None = None,
-    dim_to: int | None = None,
+    to_version: int | None = None,
     mode: str = "cow",
     fk_index: LakeTable | None = None,
     fk_scan_fallback_fraction: float | None = 0.01,
     fk_index_mode: str = "mor",
     auto_evolve: bool = True,
 ) -> MergeResult | None:
-    """Advance the view to ``(fact_to, dim_to)`` (default: both
-    tables' current versions) using only the two changes feeds.
+    """Advance the view to fact version ``to_version`` (default: the
+    fact's current version) and the dim's current version, using only
+    the two changes feeds.
 
     Equivalence contract (tested + oracle-checked): after any
     sequence of advances, ``view == fact.read() LEFT JOIN
@@ -200,11 +201,16 @@ def advance_join_view(
     path is the 100-TB trickle answer.
     """
     pairs = _fk_pairs(on)
+    if fk_index is not None and len(pairs) > 1:
+        raise ValueError(
+            "fk_index is a single-column value index; it cannot serve "
+            f"a {len(pairs)}-column join"
+        )
     dim_cols = _dim_payload(dim, on, dim_cols)
     fk_cols = [f for f, _ in pairs]
     dkey_cols = [d for _, d in pairs]
-    vf2 = fact.current_version() if fact_to is None else int(fact_to)
-    vd2 = dim.current_version() if dim_to is None else int(dim_to)
+    vf2 = fact.current_version() if to_version is None else int(to_version)
+    vd2 = dim.current_version()
     wm = join_view_watermark(view)
 
     if wm is None:
@@ -283,7 +289,7 @@ def advance_join_view(
                 *[F.col(d).alias(f) for f, d in pairs]
             ).distinct()
             vpin = view.current_version()
-            if fk_index is not None and len(pairs) == 1:
+            if fk_index is not None:
                 from realdeal_spark.lake.valueindex import (
                     advance_value_index,
                     lookup_by_value,
@@ -365,37 +371,22 @@ def advance_join_view(
     return res
 
 
-def join_view_lag(fact: LakeTable, dim: LakeTable, view: LakeTable) -> dict:
-    """Monitor surface: how far is the view behind each input?"""
-    wm = join_view_watermark(view)
-    return {
-        "fact_version": fact.current_version(),
-        "dim_version": dim.current_version(),
-        "view_fact_watermark": wm[0] if wm else None,
-        "view_dim_watermark": wm[1] if wm else None,
-        "fact_versions_behind": (
-            fact.current_version() - wm[0] if wm else None
-        ),
-        "dim_versions_behind": (
-            dim.current_version() - wm[1] if wm else None
-        ),
-    }
-
-
 class JoinViewMaintainer:
-    """Standing consumer: ``refresh()`` after each committed epoch on
-    either input advances the view to both inputs' current versions
-    (bootstrap on first call).  State lives in the view table itself
-    — watermarks in-band via epoch ids — so a restarted maintainer
-    resumes with no side checkpoint.
+    """Standing consumer and maintained surface (``streaming.Surface``)
+    whose source is the FACT table, the hot input: ``advance()`` after
+    each committed epoch on either input advances the view (bootstrap
+    on first call); dim edits ride the next advance.  State lives in the view
+    table itself — watermarks in-band via epoch ids — so a restarted
+    maintainer resumes with no side checkpoint.
 
-    ``compact_every``: compact the view after every N advancing
-    refreshes — the MoR delta-stack amortizer (the same lever as
+    ``compact_every``: compact the view after every N effective
+    advances — the MoR delta-stack amortizer (the same lever as
     ``CdcApplier(compact_every=…)``; BENCH_JOINVIEW.md's 64M
     trickle outlier is what an uncompacted stack costs).  Compaction
     is a maintenance commit: the changes feed skips it and the
     in-band watermarks are untouched, so it composes with
-    exactly-once replay for free (tested)."""
+    exactly-once replay for free (tested).  Other keyword arguments
+    pass through to every :func:`advance_join_view` call."""
 
     def __init__(
         self,
@@ -403,88 +394,31 @@ class JoinViewMaintainer:
         dim: LakeTable,
         view: LakeTable,
         on,
-        dim_cols: Sequence[str] | None = None,
-        mode: str = "cow",
-        fk_index: LakeTable | None = None,
-        fk_scan_fallback_fraction: float | None = 0.01,
         compact_every: int | None = None,
+        **advance_kw,
     ):
-        self.fact, self.dim, self.view = fact, dim, view
-        self.on, self.dim_cols, self.mode = on, dim_cols, mode
-        self.fk_index = fk_index
-        self.fk_scan_fallback_fraction = fk_scan_fallback_fraction
+        self.source, self.dim, self.view, self.on = fact, dim, view, on
         self.compact_every = compact_every
+        self.advance_kw = advance_kw
         self._since_compact = 0
 
-    def refresh(
-        self, fact_to: int | None = None, dim_to: int | None = None
-    ) -> MergeResult | None:
+    def watermark(self) -> int | None:
+        """The fact version the view reflects."""
+        wm = join_view_watermark(self.view)
+        return None if wm is None else wm[0]
+
+    def advance(self, to_version: int | None = None) -> MergeResult | None:
         res = advance_join_view(
-            self.fact,
-            self.dim,
-            self.view,
-            self.on,
-            dim_cols=self.dim_cols,
-            fact_to=fact_to,
-            dim_to=dim_to,
-            mode=self.mode,
-            fk_index=self.fk_index,
-            fk_scan_fallback_fraction=self.fk_scan_fallback_fraction,
+            self.source, self.dim, self.view, self.on,
+            to_version=to_version, **self.advance_kw,
         )
         if res is not None and self.compact_every:
             self._since_compact += 1
             if self._since_compact >= self.compact_every:
                 self.view.compact()
-                if self.fk_index is not None:
-                    self.fk_index.compact()
+                fk_index = self.advance_kw.get("fk_index")
+                if fk_index is not None:
+                    fk_index.compact()
                 self._since_compact = 0
         return res
 
-
-def stream_maintain_join_view(
-    fact: LakeTable,
-    dim: LakeTable,
-    view: LakeTable,
-    on,
-    checkpoint_dir: str,
-    dim_cols: Sequence[str] | None = None,
-    starting_version: str | int = "earliest",
-    max_versions_per_trigger: int | None = None,
-    mode: str = "cow",
-    fk_index: LakeTable | None = None,
-    trigger: dict | None = None,
-    compact_every: int | None = None,
-    fk_scan_fallback_fraction: float | None = 0.01,
-):
-    """Standing maintenance driven by the FACT table's changes-feed
-    descriptor stream (the hot input); each trigger also catches the
-    view up to the dim's current version, so dim edits ride the next
-    fact micro-batch (or an empty one).  Exactly-once composes from
-    Spark's checkpointed offsets + the epoch-id guard in
-    :func:`advance_join_view`.  ``compact_every`` /
-    ``fk_scan_fallback_fraction`` pass through to
-    :class:`JoinViewMaintainer` (new knobs appended AFTER ``trigger``
-    so existing positional callers keep their meaning)."""
-    from realdeal_spark.streaming.cdf_source import foreach_changes
-
-    m = JoinViewMaintainer(
-        fact, dim, view, on, dim_cols=dim_cols, mode=mode,
-        fk_index=fk_index, compact_every=compact_every,
-        fk_scan_fallback_fraction=fk_scan_fallback_fraction,
-    )
-    # catch up before tailing: covers dim-only edits made while no
-    # maintainer was running (the fact stream alone would never fire)
-    m.refresh()
-
-    def _apply(changes_df: DataFrame, fv: int, tv: int) -> None:
-        m.refresh(fact_to=tv)
-
-    return foreach_changes(
-        fact,
-        _apply,
-        checkpoint_dir,
-        starting_version=starting_version,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
-    )

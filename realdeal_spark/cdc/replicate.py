@@ -26,11 +26,14 @@ widened types), the feed emits current-schema rows and
 commits) before the MERGE.
 
 Reference analogue: none — the reference writes one Fusion Tables
-store and re-renders from it (generate_report.py); fan-out to
-derived stores without rescanning is the lake-format recast.
+store and re-renders its report from it (realdeal/luigi/
+email_deals.py); fan-out to derived stores without rescanning is the
+lake-format recast.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -104,50 +107,47 @@ def replica_watermark(dst: LakeTable) -> int | None:
     return interval_watermark(dst, "cdf-replicate:")
 
 
-def replication_lag(src: LakeTable, dst: LakeTable) -> dict:
-    """How far behind is the replica?  ``versions_behind`` is the
-    metric a monitor alerts on (the per-epoch lag analogue for the
-    replication path); ``source_version``/``replica_watermark`` give
-    the retention check — expire_snapshots on the source must keep at
-    least the watermark snapshot or the replica cannot resume."""
-    wm = replica_watermark(dst)
-    cur = src.current_version()
-    return {
-        "source_version": cur,
-        "replica_watermark": wm,
-        "versions_behind": (cur - wm) if wm is not None else None,
-    }
-
-
-def stream_replicate(
+def advance_replica(
     src: LakeTable,
     dst: LakeTable,
-    checkpoint_dir: str,
-    starting_version: str | int = "earliest",
-    max_versions_per_trigger: int | None = None,
+    to_version: int | None = None,
     auto_evolve: bool = True,
     mode: str = "cow",
-    trigger: dict | None = None,
-):
-    """Standing replication: one O(changes) MERGE on the replica per
-    source commit, driven by the ``lake_changes`` descriptor stream
-    (Spark-checkpointed offsets + the epoch-id guard above =
-    exactly-once under restart/replay).  Returns the StreamingQuery."""
-    from realdeal_spark.streaming.cdf_source import foreach_changes
+) -> MergeResult | None:
+    """Catch the replica up from its watermark to ``to_version``
+    (default: the source's current version) — one
+    :func:`replicate_interval`.
 
-    def _apply(changes_df, fv: int, tv: int) -> None:
-        # foreach_changes hands us the default feed; recompute through
-        # replicate_interval so the epoch-id/evolution path is shared
-        replicate_interval(
-            src, dst, fv, tv, auto_evolve=auto_evolve, mode=mode
+    First advance (watermark None) **bootstraps from the source
+    snapshot**: every live row at ``to_version`` upserts with its own
+    order tuple.  A feed replay from the earliest retained snapshot
+    would miss every row that predates it and never changed since.
+    The bootstrap's epoch id has the interval shape, so the watermark
+    reads the same as for a feed-seeded replica."""
+    tv = src.current_version() if to_version is None else int(to_version)
+    wm = replica_watermark(dst)
+    if wm is not None:
+        return replicate_interval(
+            src, dst, wm, tv, auto_evolve=auto_evolve, mode=mode
         )
+    rows = src.read(version=tv)
+    if auto_evolve:
+        reconcile(dst, rows.schema)
+    return merge_apply(
+        dst,
+        rows.withColumn("op", F.lit("update")),
+        epoch_id=f"cdf-replicate:{src.versions()[0]}-{tv}",
+        mode=mode,
+    )
 
-    return foreach_changes(
+
+def replica_surface(src: LakeTable, dst: LakeTable, **advance_kw):
+    """The replica as a maintained surface (``streaming.Surface``);
+    ``advance_kw`` pass through to :func:`advance_replica`."""
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
         src,
-        _apply,
-        checkpoint_dir,
-        starting_version=starting_version,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
+        partial(replica_watermark, dst),
+        partial(advance_replica, src, dst, **advance_kw),
     )

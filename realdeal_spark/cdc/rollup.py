@@ -381,9 +381,10 @@ def rollup_advance(
 
 
 class RollupMaintainer:
-    """Keeps a rollup continuously in sync with a LakeTable.
+    """Keeps a rollup continuously in sync with a LakeTable — a
+    maintained surface (``streaming.Surface``) over ``source``.
 
-    ``refresh()`` advances the maintained state to the table's current
+    ``advance()`` advances the maintained state to the table's current
     snapshot: bootstrap via :func:`rollup_full` on first call, then
     :func:`rollup_advance` over the CDF feed for every subsequent
     epoch — the standing consumer a CdcApplier/StreamingCdcApplier
@@ -406,12 +407,12 @@ class RollupMaintainer:
         measures: Sequence[Measure],
         state_dir: str | None = None,
     ):
-        self.table = table
+        self.source = table
         self.dims = list(dims)
         self.measures = list(measures)
         self.state_dir = state_dir
         self._state: DataFrame | None = None
-        self._version: int | None = None
+        self._watermark: int | None = None
         if state_dir:
             os.makedirs(state_dir, exist_ok=True)
             v = self._latest_persisted()
@@ -419,7 +420,7 @@ class RollupMaintainer:
                 self._state = table.spark.read.parquet(
                     os.path.join(state_dir, f"v={v}")
                 )
-                self._version = v
+                self._watermark = v
 
     def _latest_persisted(self) -> int | None:
         vs = [
@@ -429,12 +430,11 @@ class RollupMaintainer:
         ]
         return max(vs) if vs else None
 
-    @property
-    def version(self) -> int | None:
+    def watermark(self) -> int | None:
         """Table version the maintained state reflects."""
-        return self._version
+        return self._watermark
 
-    def refresh(self, to_version: int | None = None) -> DataFrame:
+    def advance(self, to_version: int | None = None) -> DataFrame:
         """Advance to the table's current version (or to an explicit
         ``to_version`` — the streaming-consumer path, where each
         micro-batch targets its descriptor's interval end) and return
@@ -443,30 +443,30 @@ class RollupMaintainer:
         state, which makes this handler idempotent under exactly-once
         replay."""
         cur = (
-            self.table.current_version()
+            self.source.current_version()
             if to_version is None
             else int(to_version)
         )
         if (
-            self._version is not None
-            and cur <= self._version
+            self._watermark is not None
+            and cur <= self._watermark
             and self._state is not None
         ):
             return self._state
         resumable = self._state is not None
         if resumable:
             try:  # the base snapshot may have been expired since
-                self.table.snapshot(self._version)
+                self.source.snapshot(self._watermark)
             except Exception:
                 resumable = False
         if resumable:
             state = rollup_advance(
-                self.table, self._state, self._version, cur,
+                self.source, self._state, self._watermark, cur,
                 self.dims, self.measures,
             )
         else:
             state = rollup_full(
-                self.table, self.dims, self.measures, version=cur
+                self.source, self.dims, self.measures, version=cur
             )
         # materialize: the next advance must not re-execute the whole
         # chain of prior advances (unbounded lineage)
@@ -477,14 +477,14 @@ class RollupMaintainer:
             state.write.mode("overwrite").parquet(tmp)
             shutil.rmtree(out, ignore_errors=True)
             os.rename(tmp, out)
-            state = self.table.spark.read.parquet(out)
+            state = self.source.spark.read.parquet(out)
             for d in os.listdir(self.state_dir):
                 m = re.fullmatch(r"v=(\d+)", d)
-                if m and int(m.group(1)) not in (cur, self._version):
+                if m and int(m.group(1)) not in (cur, self._watermark):
                     shutil.rmtree(
                         os.path.join(self.state_dir, d), ignore_errors=True
                     )
         else:
             state = state.localCheckpoint(eager=True)
-        self._state, self._version = state, cur
+        self._state, self._watermark = state, cur
         return state

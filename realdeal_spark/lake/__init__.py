@@ -28,6 +28,7 @@ from realdeal_spark.lake.dml import delete_where, update_where
 from realdeal_spark.lake.dedupidx import (
     advance_dedup_index,
     create_dedup_index,
+    dedup_index_surface,
     dedup_index_watermark,
     neardup_probe,
 )
@@ -36,6 +37,7 @@ from realdeal_spark.lake.scd import (
     create_history_table,
     enrich_asof,
     history_rows,
+    history_surface,
     history_watermark,
     read_history_asof,
 )
@@ -54,11 +56,13 @@ __all__ = [
     "advance_dedup_index",
     "advance_history",
     "create_dedup_index",
+    "dedup_index_surface",
     "dedup_index_watermark",
     "neardup_probe",
     "create_history_table",
     "enrich_asof",
     "history_rows",
+    "history_surface",
     "history_watermark",
     "read_history_asof",
     "delete_where",

@@ -31,6 +31,8 @@ near-dup at ingest is the training-data-pipeline generalization.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -178,17 +180,16 @@ def advance_dedup_index(
     with different (num_perm, bands, shingle_n) than the index was
     built with silently corrupts it, exactly as mixing permutation
     families would in any LSH store; keep them pinned at the call
-    site (the streaming maintainer does)."""
+    site (:func:`dedup_index_surface` does)."""
     mark = _phase_timer()
     tv = int(to_version) if to_version is not None else src.current_version()
     fv = dedup_index_watermark(idx)
     key, orders, _ = _base_columns(src)
     mark("didx.watermark")
     if fv is None:
-        epoch_v0 = src.versions()[0]
-        if tv <= epoch_v0:
-            return None
-        epoch_id = f"{_EPOCH_PREFIX}{epoch_v0}-{tv}"
+        if not src.snapshot(tv).files:
+            return None  # nothing past create
+        epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
         if epoch_id in idx.snapshot().applied_epochs:
             return None
         live = src.read(version=tv).where(F.col(text_col).isNotNull())
@@ -250,6 +251,19 @@ def advance_dedup_index(
     out = merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
     mark("didx.merge")
     return out
+
+
+def dedup_index_surface(src: LakeTable, idx: LakeTable, **advance_kw):
+    """The index as a maintained surface (``streaming.Surface``) with
+    its LSH parameters pinned: ``advance_kw`` pass through to every
+    :func:`advance_dedup_index` call."""
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
+        src,
+        partial(dedup_index_watermark, idx),
+        partial(advance_dedup_index, src, idx, **advance_kw),
+    )
 
 
 def neardup_probe(

@@ -34,6 +34,8 @@ unanswerable there, and is exactly what this module answers.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -245,13 +247,15 @@ def advance_history(
     snapshots coarsens history for both representations equally; the
     watermark version itself must still be retained (the standard
     incremental-read constraint)."""
+    tv = int(to_version) if to_version is not None else src.current_version()
+    fv = history_watermark(hist)
+    if fv is not None and tv <= fv:
+        return None
     if to_version is not None:
         # resolve it: a bogus/future version would otherwise commit a
         # too-high watermark epoch id, silently no-op-ing every later
         # advance until the "no longer retained" error — unrecoverable
-        src.snapshot(int(to_version))
-    tv = int(to_version) if to_version is not None else src.current_version()
-    fv = history_watermark(hist)
+        src.snapshot(tv)
     # src schema evolution since create/last advance: mirror added
     # columns onto the history table (field-id evolution, no rewrite).
     # Re-check the meta-name clash create_history_table enforces: a
@@ -268,10 +272,9 @@ def advance_history(
         if f.name not in hist_cols:
             hist.add_column(f.name, f.dataType.simpleString())
     if fv is None:
-        epoch_v0 = src.versions()[0]
-        if tv <= epoch_v0:
-            return None
-        epoch_id = f"{_EPOCH_PREFIX}{epoch_v0}-{tv}"
+        if not src.snapshot(tv).files:
+            return None  # nothing past create
+        epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
         if epoch_id in hist.snapshot().applied_epochs:
             return None
         events = (
@@ -280,8 +283,6 @@ def advance_history(
             .withColumn(OP_COL, F.lit(OP_UPDATE))
         )
         return merge_apply(hist, events, epoch_id=epoch_id, mode=mode)
-    if tv <= fv:
-        return None
     epoch_id = f"{_EPOCH_PREFIX}{fv}-{tv}"
     if epoch_id in hist.snapshot().applied_epochs:
         return None
@@ -337,6 +338,18 @@ def advance_history(
         .withColumn(OP_COL, F.lit(OP_UPDATE))
     )
     return merge_apply(hist, events, epoch_id=epoch_id, mode=mode)
+
+
+def history_surface(src: LakeTable, hist: LakeTable, **advance_kw):
+    """The history table as a maintained surface (``streaming.Surface``);
+    ``advance_kw`` pass through to :func:`advance_history`."""
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
+        src,
+        partial(history_watermark, hist),
+        partial(advance_history, src, hist, **advance_kw),
+    )
 
 
 def read_history_asof(

@@ -988,9 +988,9 @@ class LakeTable:
         A CDC engine must *emit* CDC as well as apply it — this is the
         Iceberg incremental-read shape (changelog scan between two
         snapshot ids), and it is what lets a downstream consumer (an
-        index builder, a replica, the reference's report stage —
-        generate_report.py reads "what changed" per run) tail this
-        table without rescanning it.
+        index builder, a replica, the reference's report stage,
+        realdeal/luigi/email_deals.py) tail this table without
+        rescanning it.
 
         Semantics: for every key whose latest (order-tuple) row at
         ``to_version`` differs from its row at ``from_version``, emit

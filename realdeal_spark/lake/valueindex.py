@@ -31,6 +31,7 @@ owns the index.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -171,7 +172,6 @@ def advance_value_index(
     value_column: str,
     to_version: int | None = None,
     mode: str = "cow",
-    bootstrap: str = "snapshot",
 ) -> MergeResult | None:
     """Catch the index up from its watermark to ``to_version``
     (default: the base's current version) in one interval.
@@ -186,47 +186,43 @@ def advance_value_index(
     it).  It is also *complete* under snapshot expiry: the feed over
     (earliest-retained, v] misses rows that predate the earliest
     retained snapshot and never changed; the snapshot read cannot.
-    Pass ``bootstrap="feed"`` to keep the replay path (tests exercise
-    both for equivalence).  Steady state is unchanged: O(changes)
-    intervals via the feed."""
+    The bootstrap skips the feed's no-op deletes (against an empty
+    index they only mint tombstones) and its epoch id spans
+    (earliest-retained, v] like a feed interval, so the watermark and
+    every later advance are the same as for a feed-seeded index.
+    Steady state: O(changes) intervals via the feed."""
     fv = value_index_watermark(idx)
     tv = int(to_version) if to_version is not None else src.current_version()
-    if fv is None and bootstrap == "snapshot":
-        return _bootstrap_from_snapshot(src, idx, value_column, tv, mode=mode)
-    if fv is None:
-        fv = src.versions()[0]
-    return advance_interval(src, idx, value_column, fv, tv, mode=mode)
-
-
-def _bootstrap_from_snapshot(
-    src: LakeTable,
-    idx: LakeTable,
-    value_column: str,
-    to_version: int,
-    mode: str = "cow",
-) -> MergeResult | None:
-    """Build the empty index from the base's live rows at
-    ``to_version`` — semantically the feed bootstrap minus the no-op
-    deletes (deletes against an empty index only mint tombstones,
-    which compaction would purge anyway).  The epoch id spans
-    (earliest-retained, to_version] exactly like the feed path, so
-    the watermark and every later incremental advance are identical
-    for an index bootstrapped either way."""
-    fv = src.versions()[0]
-    if int(to_version) <= int(fv):
-        return None
-    epoch_id = f"{_EPOCH_PREFIX}{int(fv)}-{int(to_version)}"
+    if fv is not None:
+        return advance_interval(src, idx, value_column, fv, tv, mode=mode)
+    if not src.snapshot(tv).files:
+        return None  # nothing past create
+    epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
     if epoch_id in idx.snapshot().applied_epochs:
         return None
     keys, orders, _ = _base_columns(src)
     rows = (
-        src.read(version=int(to_version))
+        src.read(version=tv)
         .where(F.col(value_column).isNotNull())
         .select(
             value_column, *keys, *orders, F.lit(OP_UPDATE).alias(OP_COL)
         )
     )
     return merge_apply(idx, rows, epoch_id=epoch_id, mode=mode)
+
+
+def value_index_surface(
+    src: LakeTable, idx: LakeTable, value_column: str, **advance_kw
+):
+    """The index as a maintained surface (``streaming.Surface``);
+    ``advance_kw`` pass through to :func:`advance_value_index`."""
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
+        src,
+        partial(value_index_watermark, idx),
+        partial(advance_value_index, src, idx, value_column, **advance_kw),
+    )
 
 
 def lookup_by_value(
@@ -357,48 +353,4 @@ def _values_frame(
         idx.spark.createDataFrame(
             [(v,) for v in values], f"{value_column} {vtype}"
         ).distinct()
-    )
-
-
-def value_index_lag(src: LakeTable, idx: LakeTable) -> dict:
-    """Monitoring shape shared with cdc/replicate.py: how many base
-    versions the index is behind, plus the retention check bound
-    (expire_snapshots on the base must keep the watermark snapshot
-    or the index cannot resume incrementally)."""
-    wm = value_index_watermark(idx)
-    cur = src.current_version()
-    return {
-        "source_version": cur,
-        "index_watermark": wm,
-        "versions_behind": (cur - wm) if wm is not None else None,
-    }
-
-
-def stream_maintain_value_index(
-    src: LakeTable,
-    idx: LakeTable,
-    value_column: str,
-    checkpoint_dir: str,
-    starting_version: str | int = "earliest",
-    max_versions_per_trigger: int | None = None,
-    mode: str = "cow",
-    trigger: dict | None = None,
-):
-    """Standing maintenance: one O(changes) index MERGE per base
-    commit, driven by the ``lake_changes`` descriptor stream — the
-    same exactly-once composition as stream_replicate (Spark offsets
-    pick the interval, the epoch-id guard absorbs replays)."""
-    from realdeal_spark.streaming.cdf_source import foreach_changes
-
-    def _apply(changes_df: DataFrame, fv: int, tv: int) -> None:
-        advance_interval(src, idx, value_column, fv, tv, mode=mode)
-
-    return foreach_changes(
-        src,
-        _apply,
-        checkpoint_dir,
-        starting_version=starting_version,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
     )

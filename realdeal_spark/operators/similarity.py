@@ -680,9 +680,9 @@ def ivf_index_advance(
     BECOMES null is treated as a delete of its index entry.
 
     Reference analogue: none — the reference re-scrapes and re-renders
-    whole reports per run (generate_report.py); incremental secondary
-    -index maintenance is the Spark-first recast of "keep derived
-    artifacts current without recomputing them".
+    whole reports per run (realdeal/luigi/email_deals.py); incremental
+    secondary-index maintenance is the Spark-first recast of "keep
+    derived artifacts current without recomputing them".
     """
     import json
     import os
@@ -795,6 +795,34 @@ def ivf_index_advance(
         json.dump(meta, f)
     os.replace(tmp, meta_path)
     return {**stats, "advanced": True}
+
+
+def ivf_index_watermark(index_dir: str) -> int | None:
+    """The table version a persisted IVF index reflects (its sidecar
+    stamp), None if it was built without ``table_version``."""
+    import json
+    import os
+
+    with open(os.path.join(index_dir, "centroids.json")) as f:
+        v = json.load(f).get("table_version")
+    return None if v is None else int(v)
+
+
+def ivf_surface(table, index_dir: str, **advance_kw):
+    """A persisted IVF index as a maintained surface
+    (``streaming.Surface``); ``advance_kw`` pass through to
+    :func:`ivf_index_advance`.  There is no snapshot bootstrap here:
+    build the index with ``build_ivf_index(..., table_version=...)``
+    first — the advance rejects an unstamped one."""
+    from functools import partial
+
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
+        table,
+        partial(ivf_index_watermark, index_dir),
+        partial(ivf_index_advance, table, index_dir, **advance_kw),
+    )
 
 
 def ivf_knn_indexed(

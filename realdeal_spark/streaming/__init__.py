@@ -1,12 +1,11 @@
 from realdeal_spark.streaming.cdf_source import (
     LakeChangesDataSource,
+    Surface,
     foreach_changes,
+    maintainer_lag,
     register_lake_changes,
     stream_changes,
-    stream_maintain_dedup_index,
-    stream_maintain_history,
-    stream_maintain_ivf,
-    stream_maintain_rollup,
+    stream_maintain,
 )
 from realdeal_spark.streaming.enrich import enrich_batch, stream_enrich
 from realdeal_spark.streaming.stream_apply import StreamingCdcApplier
@@ -16,16 +15,15 @@ from realdeal_spark.streaming.windows import session_rollup, tumbling_rollup
 __all__ = [
     "LakeChangesDataSource",
     "StreamingCdcApplier",
+    "Surface",
     "enrich_batch",
     "foreach_changes",
+    "maintainer_lag",
     "register_lake_changes",
     "session_rollup",
     "stream_changes",
     "stream_enrich",
-    "stream_maintain_dedup_index",
-    "stream_maintain_history",
-    "stream_maintain_ivf",
-    "stream_maintain_rollup",
+    "stream_maintain",
     "suppress_unchanged",
     "tumbling_rollup",
 ]

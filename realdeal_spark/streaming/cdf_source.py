@@ -14,7 +14,7 @@ produced by a PySpark 4 Python DataSource
 (:class:`SimpleDataSourceStreamReader` — explicitly intended for
 driver-side, metadata-rate sources).  The offset IS the table version,
 checkpointed by Spark exactly like a Kafka offset.  Each micro-batch
-then *expands* its descriptor inside ``foreachBatch`` through the
+hands its interval to the consumer, which derives the feed through the
 existing distributed ``read_changes`` plan — winner reconcile,
 carryover elimination, bucket-pruned pre-images all stay in the
 DataFrame engine, scanning O(changes) data files, never O(table).
@@ -25,26 +25,33 @@ it is a cross-partition join) or a driver-side collect (the
 anti-pattern).  Control-plane stream + data-plane DataFrame is the
 standard connector recast of that constraint.
 
+Maintained surfaces
+-------------------
+The seven derived stores kept current from a table's feed share one
+protocol, :class:`Surface`; :func:`stream_maintain` drives any of them
+from the descriptor stream and :func:`maintainer_lag` reports how far
+behind one is.
+
 Exactly-once: offsets live in the Spark checkpoint; on restart the
 last in-flight batch replays via ``readBetweenOffsets`` with the same
-``(from_version, to_version)``, and ``read_changes`` is a pure
-function of those versions — so any idempotent-per-interval handler
-(RollupMaintainer's per-version state, ``ivf_index_advance``'s
-stamped sidecar) reconverges to the identical state.
+``(from_version, to_version)``, and every surface's advance is a no-op
+for a target at or below its watermark — so a replayed or stale
+interval reconverges to the identical state.
 
 Retention contract (same as Delta CDF / Iceberg incremental reads):
-``expire_snapshots`` must keep at least the stream's lag worth of
-snapshots — a checkpointed offset whose snapshot was expired fails
-loudly at ``read_changes`` time rather than silently rescanning.
+``expire_snapshots`` must keep each surface's watermark snapshot —
+the advance reads the feed from there, and a watermark whose snapshot
+was expired fails loudly at ``read_changes`` time rather than
+silently rescanning.  :func:`maintainer_lag` reports that bound.
 
-Reference analogue: the reference re-scrapes and re-renders the whole
-report per run (realdeal/generate_report.py); a standing "what
-changed since my last run" subscription is the Spark-first recast.
+Reference analogue: the reference re-renders the whole deal report
+per run (realdeal/luigi/email_deals.py); a standing "what changed
+since my last run" subscription is the Spark-first recast.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Tuple
+from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
@@ -96,15 +103,14 @@ class LakeChangesStreamReader(SimpleDataSourceStreamReader):
         if self.starting == "latest":
             v = vs[-1]
         elif self.starting == "earliest":
-            # NOTE: baseline-EXCLUSIVE — the offset starts AT the
-            # oldest retained snapshot and the stream delivers changes
-            # strictly after it.  On a fresh table that snapshot is
-            # the empty create commit, so "earliest" sees everything;
-            # after expire_snapshots it holds accumulated state a new
-            # consumer must bootstrap separately (read the snapshot,
-            # then tail from it — the create_replica pattern seeds the
-            # replica from the feed only because replicas start before
-            # expiry).  Unlike Delta CDF's inclusive startingVersion.
+            # baseline-EXCLUSIVE: the offset starts AT the oldest
+            # retained snapshot and the stream delivers changes strictly
+            # after it (unlike Delta CDF's inclusive startingVersion).
+            # After expire_snapshots that snapshot holds accumulated
+            # state the feed never shows, so no consumer bootstraps by
+            # replaying from "earliest": a maintained surface
+            # bootstraps through its advance (a snapshot read) and
+            # tails from its watermark — see stream_maintain.
             v = vs[0]
         else:
             v = int(self.starting)
@@ -213,48 +219,34 @@ def stream_changes(
     return r.load()
 
 
+
+
 def foreach_changes(
     table,
-    handler: Callable[[DataFrame, int, int], None],
+    handler: Callable[[int, int], None],
     checkpoint_dir: str,
     starting_version: str | int = "latest",
     max_versions_per_trigger: int | None = None,
-    include_preimage: bool = False,
     trigger: dict | None = None,
-    expand: bool = True,
 ):
-    """Run ``handler(changes_df, from_version, to_version)`` for every
-    epoch the table advances — the standing CDF consumer.
+    """Run ``handler(from_version, to_version)`` for every interval the
+    table advances — the standing CDF consumer.
 
-    ``changes_df`` is the full distributed ``read_changes`` plan for
-    the interval.  The handler MUST be idempotent per interval (a
-    replayed batch after restart re-presents the same versions).
+    The handler derives what it needs from the interval (typically
+    through ``read_changes``) and MUST be idempotent per interval: a
+    replayed batch after restart re-presents the same versions.
     Returns the StreamingQuery; ``trigger`` kwargs pass through (e.g.
-    ``{"availableNow": True}`` to drain and stop).
-
-    ``expand=False`` passes ``changes_df=None`` and skips building the
-    feed plan here — every ``stream_maintain_*`` wrapper sets it
-    because the advance it calls re-derives the feed internally
-    (building it twice doubles per-trigger manifest/plan work, and
-    with ``include_preimage`` the wasted build even runs eager
-    jobs)."""
+    ``{"availableNow": True}`` to drain and stop)."""
     desc = stream_changes(
         table.spark, table.root, starting_version, max_versions_per_trigger
     )
 
-    def _expand(batch_df: DataFrame, batch_id: int) -> None:
+    def _each(batch_df: DataFrame, batch_id: int) -> None:
         # descriptor rows: at most one per source per batch — metadata
         for row in batch_df.collect():
-            fv, tv = int(row["from_version"]), int(row["to_version"])
-            handler(
-                table.read_changes(fv, tv, include_preimage=include_preimage)
-                if expand
-                else None,
-                fv,
-                tv,
-            )
+            handler(int(row["from_version"]), int(row["to_version"]))
 
-    w = desc.writeStream.foreachBatch(_expand).option(
+    w = desc.writeStream.foreachBatch(_each).option(
         "checkpointLocation", checkpoint_dir
     )
     if trigger:
@@ -262,160 +254,68 @@ def foreach_changes(
     return w.start()
 
 
-def stream_maintain_rollup(
-    maintainer,
+class Surface(NamedTuple):
+    """A maintained surface: a derived store kept current from one
+    LakeTable's changes feed.  Any object with these three members
+    works with :func:`stream_maintain` / :func:`maintainer_lag`;
+    ``RollupMaintainer`` and ``JoinViewMaintainer`` implement them
+    directly, the function-backed surfaces get one from their
+    module's ``*_surface`` factory.
+
+    - ``source`` — the LakeTable the surface tails;
+    - ``watermark()`` — the highest source version the surface
+      reflects, None before its first advance;
+    - ``advance(to_version=None)`` — catch up from the watermark to
+      ``to_version`` (default: the source's current version).  With no
+      watermark it bootstraps from the source SNAPSHOT at the target,
+      never from a feed replay; for any target at or below the
+      watermark it does nothing."""
+
+    source: Any
+    watermark: Callable[[], int | None]
+    advance: Callable[..., Any]
+
+
+def stream_maintain(
+    surface,
     checkpoint_dir: str,
     max_versions_per_trigger: int | None = None,
     trigger: dict | None = None,
 ):
-    """Keep a :class:`~realdeal_spark.cdc.rollup.RollupMaintainer`
-    continuously current: one O(changes) advance per table commit.
+    """Keep ``surface`` continuously current: one O(changes) advance
+    per source commit.  Returns the StreamingQuery.
 
-    The maintainer's per-version parquet state makes the handler
-    idempotent (re-advancing to a version it already reflects is a
-    no-op), so exactly-once composes from Spark's offset checkpoint
-    alone.  Starts from the maintainer's own resume point — the
-    descriptor stream begins at its persisted version when it has one
-    (bootstrap otherwise handles itself via rollup_full)."""
-    start = maintainer.version if maintainer.version is not None else "latest"
-
-    def _advance(changes_df: DataFrame, fv: int, tv: int) -> None:
-        maintainer.refresh(to_version=tv)
-
+    Bootstraps (or catches up) synchronously first, so a surface
+    created after ``expire_snapshots`` still holds every live row and
+    edits made while no maintainer ran are applied before the tail
+    starts; then tails the source from the surface's watermark.
+    Exactly-once composes from Spark's offset checkpoint plus the
+    surface's no-op-at-or-below-watermark advance: a restart off a
+    checkpoint older than the watermark replays harmlessly."""
+    v = surface.source.current_version()
+    surface.advance(to_version=v)
+    wm = surface.watermark()
     return foreach_changes(
-        maintainer.table,
-        _advance,
+        surface.source,
+        lambda fv, tv: surface.advance(to_version=tv),
         checkpoint_dir,
-        starting_version=start,
+        # an empty source bootstraps to nothing and sets no watermark;
+        # the surface still equals the source at v
+        starting_version=v if wm is None else wm,
         max_versions_per_trigger=max_versions_per_trigger,
         trigger=trigger,
-        expand=False,
     )
 
 
-def stream_maintain_ivf(
-    table,
-    index_dir: str,
-    checkpoint_dir: str,
-    max_versions_per_trigger: int | None = None,
-    trigger: dict | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Keep a persisted IVF index (:func:`build_ivf_index`) in sync
-    with the table: per commit, rewrite only the affected cells
-    (``ivf_index_advance`` — O(changes + affected cells)).
-
-    Idempotent per interval: the advance anti-joins removals and
-    re-adds upserts, and the sidecar version stamps last, so a
-    replayed batch reconverges.  Starts at the index's own stamped
-    version."""
-    import json
-    import os
-
-    from realdeal_spark.operators.similarity import ivf_index_advance
-
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        start = int(json.load(f)["table_version"])
-
-    def _advance(changes_df: DataFrame, fv: int, tv: int) -> None:
-        ivf_index_advance(
-            table, index_dir, to_version=tv, vec_col=vec_col, id_col=id_col
-        )
-
-    return foreach_changes(
-        table,
-        _advance,
-        checkpoint_dir,
-        starting_version=start,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
-    )
-
-
-def stream_maintain_dedup_index(
-    src,
-    idx,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_versions_per_trigger: int | None = None,
-    trigger: dict | None = None,
-):
-    """Keep a near-dup LSH index (:func:`~realdeal_spark.lake.dedupidx.
-    create_dedup_index`) continuously current: one O(changes) advance
-    per base commit, so every newly-ingested document is probe-able
-    against the corpus one trigger later.
-
-    Idempotent per interval through the index's own epoch guard
-    (``dedupidx:<from>-<to>``); exactly-once composes from Spark's
-    offset checkpoint alone.  An empty index bootstraps synchronously
-    before the stream starts."""
-    from realdeal_spark.lake.dedupidx import (
-        advance_dedup_index,
-        dedup_index_watermark,
-    )
-
-    params = dict(
-        text_col=text_col, num_perm=num_perm,
-        bands=bands, shingle_n=shingle_n,
-    )
-    wm = dedup_index_watermark(idx)
-    if wm is None:
-        advance_dedup_index(src, idx, **params)
-        wm = dedup_index_watermark(idx)
-    start = wm if wm is not None else src.current_version()
-
-    def _advance(changes_df: DataFrame, fv: int, tv: int) -> None:
-        advance_dedup_index(src, idx, to_version=tv, **params)
-
-    return foreach_changes(
-        src,
-        _advance,
-        checkpoint_dir,
-        starting_version=start,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
-    )
-
-
-def stream_maintain_history(
-    src,
-    hist,
-    checkpoint_dir: str,
-    max_versions_per_trigger: int | None = None,
-    trigger: dict | None = None,
-):
-    """Keep an SCD2 history table (:func:`~realdeal_spark.lake.scd.
-    create_history_table`) continuously current: one O(changes)
-    advance per src commit.
-
-    Idempotent per interval through the history table's own epoch
-    guard (``scd2:<from>-<to>``), so exactly-once composes from
-    Spark's offset checkpoint alone.  An empty history bootstraps
-    synchronously before the stream starts (the descriptor source
-    needs a concrete starting version)."""
-    from realdeal_spark.lake.scd import advance_history, history_watermark
-
-    wm = history_watermark(hist)
-    if wm is None:
-        advance_history(src, hist)
-        wm = history_watermark(hist)
-    start = wm if wm is not None else src.current_version()
-
-    def _advance(changes_df: DataFrame, fv: int, tv: int) -> None:
-        advance_history(src, hist, to_version=tv)
-
-    return foreach_changes(
-        src,
-        _advance,
-        checkpoint_dir,
-        starting_version=start,
-        max_versions_per_trigger=max_versions_per_trigger,
-        trigger=trigger,
-        expand=False,
-    )
+def maintainer_lag(surface) -> dict:
+    """How far behind its source is the surface?  ``versions_behind``
+    is the metric a monitor alerts on; ``watermark`` is the retention
+    bound — ``expire_snapshots`` on the source must keep that snapshot
+    or the surface cannot resume incrementally."""
+    cur = surface.source.current_version()
+    wm = surface.watermark()
+    return {
+        "source_version": cur,
+        "watermark": wm,
+        "versions_behind": None if wm is None else cur - wm,
+    }

@@ -1,8 +1,8 @@
 """Streaming changes-feed source (streaming/cdf_source): a LakeTable
 as a Structured Streaming source — version-tail descriptors with
-Spark-checkpointed offsets, expanded per micro-batch through the
-distributed read_changes plan; maintained-rollup and maintained-IVF
-consumers riding it with exactly-once semantics."""
+Spark-checkpointed offsets handed to the consumer per micro-batch; a
+maintained rollup riding it through stream_maintain with exactly-once
+semantics."""
 
 from __future__ import annotations
 
@@ -17,7 +17,7 @@ from realdeal_spark.lake.table import LakeTable
 from realdeal_spark.streaming.cdf_source import (
     foreach_changes,
     stream_changes,
-    stream_maintain_rollup,
+    stream_maintain,
 )
 
 SCHEMA = "k string, ts timestamp_ntz, lsn bigint, cat string, v double"
@@ -74,27 +74,14 @@ def _seed(spark, tmp_path):
 def test_descriptor_stream_tails_from_earliest(spark, tmp_path):
     t, (v1, v2, v3) = _seed(spark, tmp_path)
     v0 = t.versions()[0]  # the empty create snapshot
-    seen: list[tuple[int, int, tuple]] = []
-
-    def handler(df, fv, tv):
-        rows = sorted(
-            (r["k"], r["change_type"]) for r in df.collect()
-        )
-        seen.append((fv, tv, tuple(rows)))
-
+    seen: list[tuple[int, int]] = []
     q = foreach_changes(
-        t, handler, str(tmp_path / "ckpt"), starting_version="earliest"
+        t, lambda fv, tv: seen.append((fv, tv)), str(tmp_path / "ckpt"),
+        starting_version="earliest",
     )
     _drain(q)
-    # one descriptor netting the whole committed interval; the rows the
-    # stream hands its consumer ARE the batch feed for that interval
-    assert [(fv, tv) for fv, tv, _ in seen] == [(v0, v3)]
-    batch = sorted(
-        (r["k"], r["change_type"])
-        for r in t.read_changes(v0, v3).collect()
-    )
-    assert seen[0][2] == tuple(batch)
-    assert ("a", "upsert") in batch and ("c", "upsert") in batch
+    # one descriptor netting the whole committed interval
+    assert seen == [(v0, v3)]
 
 
 def test_max_versions_per_trigger_paces_epochs(spark, tmp_path):
@@ -102,7 +89,7 @@ def test_max_versions_per_trigger_paces_epochs(spark, tmp_path):
     seen: list[tuple[int, int]] = []
     q = foreach_changes(
         t,
-        lambda df, fv, tv: seen.append((fv, tv)),
+        lambda fv, tv: seen.append((fv, tv)),
         str(tmp_path / "ckpt"),
         starting_version=v1,
         max_versions_per_trigger=1,
@@ -115,7 +102,7 @@ def test_starting_latest_sees_only_new_commits(spark, tmp_path):
     t, (v1, v2, v3) = _seed(spark, tmp_path)
     seen: list[tuple[int, int]] = []
     q = foreach_changes(
-        t, lambda df, fv, tv: seen.append((fv, tv)), str(tmp_path / "c1")
+        t, lambda fv, tv: seen.append((fv, tv)), str(tmp_path / "c1")
     )
     q.processAllAvailable()
     assert seen == []  # nothing committed since stream start
@@ -131,7 +118,7 @@ def test_restart_resumes_from_checkpoint_no_overlap(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     seen: list[tuple[int, int]] = []
     q = foreach_changes(
-        t, lambda df, fv, tv: seen.append((fv, tv)), ckpt,
+        t, lambda fv, tv: seen.append((fv, tv)), ckpt,
         starting_version="earliest",
     )
     _drain(q)
@@ -139,7 +126,7 @@ def test_restart_resumes_from_checkpoint_no_overlap(spark, tmp_path):
     merge_apply(t, _ev(spark, [(7, "insert", "e", 30, "z", 9.0)]))
     v4 = t.current_version()
     q2 = foreach_changes(
-        t, lambda df, fv, tv: seen.append((fv, tv)), ckpt,
+        t, lambda fv, tv: seen.append((fv, tv)), ckpt,
         starting_version="earliest",  # ignored: checkpoint wins
     )
     _drain(q2)
@@ -149,7 +136,7 @@ def test_restart_resumes_from_checkpoint_no_overlap(spark, tmp_path):
 def test_bad_starting_version_rejected(spark, tmp_path):
     t, _ = _seed(spark, tmp_path)
     q = foreach_changes(
-        t, lambda df, fv, tv: None, str(tmp_path / "ckpt"),
+        t, lambda fv, tv: None, str(tmp_path / "ckpt"),
         starting_version=999,
     )
     with pytest.raises(Exception, match="not a live snapshot"):
@@ -175,17 +162,17 @@ def test_stream_maintained_rollup_matches_full(spark, tmp_path):
     m = RollupMaintainer(
         t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
     )
-    m.refresh()  # bootstrap at v3
+    m.advance()  # bootstrap at v3
     # two more epochs while the consumer is running
-    q = stream_maintain_rollup(m, str(tmp_path / "ckpt"))
+    q = stream_maintain(m, str(tmp_path / "ckpt"))
     merge_apply(t, _ev(spark, [
         (8, "insert", "f", 40, "x", 11.0),
         (9, "update", "c", 41, "x", 13.0),   # cat y -> x
     ]))
     merge_apply(t, _ev(spark, [(10, "delete", "a", 42, None, None)]))
     _drain(q)
-    assert m.version == t.current_version()
-    assert _norm(m.refresh()) == _norm(
+    assert m.watermark() == t.current_version()
+    assert _norm(m.advance()) == _norm(
         rollup_full(t, ["cat"], MEASURES)
     )
 
@@ -195,37 +182,25 @@ def test_stream_maintained_rollup_restart_is_idempotent(spark, tmp_path):
     m = RollupMaintainer(
         t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
     )
-    m.refresh()
+    m.advance()
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain_rollup(m, ckpt)
+    q = stream_maintain(m, ckpt)
     merge_apply(t, _ev(spark, [(11, "insert", "g", 50, "y", 17.0)]))
     _drain(q)
     v_after = t.current_version()
-    assert m.version == v_after
+    assert m.watermark() == v_after
     # restart with a FRESH maintainer over the same state dir and the
     # same checkpoint: nothing new to do, state must not regress
     m2 = RollupMaintainer(
         t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
     )
-    q2 = stream_maintain_rollup(m2, ckpt)
+    q2 = stream_maintain(m2, ckpt)
     merge_apply(t, _ev(spark, [(12, "insert", "h", 60, "x", 19.0)]))
     _drain(q2)
-    assert m2.version == t.current_version()
-    assert _norm(m2.refresh()) == _norm(
+    assert m2.watermark() == t.current_version()
+    assert _norm(m2.advance()) == _norm(
         rollup_full(t, ["cat"], MEASURES)
     )
-
-
-def test_refresh_to_version_never_regresses(spark, tmp_path):
-    t, (v1, v2, v3) = _seed(spark, tmp_path)
-    m = RollupMaintainer(t, ["cat"], MEASURES)
-    m.refresh()
-    assert m.version == v3
-    # a replayed old descriptor must be a no-op, not a rollback
-    before = _norm(m.refresh())
-    m.refresh(to_version=v2)
-    assert m.version == v3
-    assert _norm(m.refresh()) == before
 
 
 def test_descriptor_schema_and_raw_stream(spark, tmp_path):
@@ -250,7 +225,7 @@ def test_max_versions_pacing_jumps_expiry_gaps(spark, tmp_path):
     seen: list[tuple[int, int]] = []
     q = foreach_changes(
         t,
-        lambda df, fv, tv: seen.append((fv, tv)),
+        lambda fv, tv: seen.append((fv, tv)),
         str(tmp_path / "ckpt_gap"),
         starting_version=v1,
         max_versions_per_trigger=1,

@@ -3,10 +3,10 @@ changelog-scan shape — net per-key change between two snapshots,
 emitting only files added in the interval, with rewrite/compaction
 carryover eliminated payload-light.
 
-Reference analogue: the report stage consumes "what changed this
-run" (realdeal/generate_report.py reads the batch's new/changed rows)
-— here re-expressed as a snapshot-range incremental read any
-downstream consumer can tail.
+Reference analogue: the report stage consumes each run's rows
+(realdeal/luigi/email_deals.py) — here "what changed this run" is
+re-expressed as a snapshot-range incremental read any downstream
+consumer can tail.
 """
 
 from __future__ import annotations

@@ -16,11 +16,12 @@ from realdeal_spark.lake import LakeTable, merge_apply
 from realdeal_spark.lake.dedupidx import (
     advance_dedup_index,
     create_dedup_index,
+    dedup_index_surface,
     dedup_index_watermark,
     neardup_probe,
 )
 from realdeal_spark.operators.dedup import banded_minhash, minhash_lsh_pairs
-from realdeal_spark.streaming import stream_maintain_dedup_index
+from realdeal_spark.streaming import stream_maintain
 
 SCHEMA = "doc_id bigint, ts timestamp_ntz, lsn bigint, text string"
 LSH = dict(num_perm=8, bands=4, shingle_n=2)
@@ -181,8 +182,9 @@ def test_stream_maintainer_tracks_base(spark, tmp_path):
     src = _seed(spark, tmp_path)
     idx = create_dedup_index(src, str(tmp_path / "idx"))
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain_dedup_index(
-        src, idx, ckpt, max_versions_per_trigger=1, **LSH
+    q = stream_maintain(
+        dedup_index_surface(src, idx, **LSH), ckpt,
+        max_versions_per_trigger=1,
     )
     try:
         q.processAllAvailable()
@@ -194,7 +196,7 @@ def test_stream_maintainer_tracks_base(spark, tmp_path):
         (30, "update", 6, _TEXTS[1]),   # 6 now dups 1
         (31, "delete", 5, None),
     ]))
-    q2 = stream_maintain_dedup_index(src, idx, ckpt, **LSH)
+    q2 = stream_maintain(dedup_index_surface(src, idx, **LSH), ckpt)
     try:
         q2.processAllAvailable()
     finally:

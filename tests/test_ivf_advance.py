@@ -203,11 +203,12 @@ def test_advance_noop_and_missing_stamp(spark, tmp_path):
 
 
 def test_stream_maintained_ivf_tracks_table(spark, tmp_path):
-    """stream_maintain_ivf keeps the persisted index cell-identical to
-    a rebuild while the table takes commits — one bounded advance per
+    """stream_maintain keeps the persisted index cell-identical to a
+    rebuild while the table takes commits — one bounded advance per
     epoch, driven by the lake_changes descriptor stream with Spark
     offset checkpointing."""
-    from realdeal_spark.streaming.cdf_source import stream_maintain_ivf
+    from realdeal_spark.operators.similarity import ivf_surface
+    from realdeal_spark.streaming.cdf_source import stream_maintain
 
     t = _mk(spark, tmp_path)
     idx = str(tmp_path / "ivf")
@@ -215,7 +216,9 @@ def test_stream_maintained_ivf_tracks_table(spark, tmp_path):
         t.read(), idx, n_lists=8, table_version=t.current_version()
     )
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain_ivf(t, idx, ckpt, max_versions_per_trigger=1)
+    q = stream_maintain(
+        ivf_surface(t, idx), ckpt, max_versions_per_trigger=1
+    )
     try:
         merge_apply(t, _ev(spark,
             [(2, "update", i, _vec(i, salt=4)) for i in range(10, 30)]
@@ -234,19 +237,3 @@ def test_stream_maintained_ivf_tracks_table(spark, tmp_path):
     _rebuild(t, idx, rb, t.current_version())
     assert _cells(spark, idx) == _cells(spark, rb)
 
-
-def test_advance_to_older_target_is_noop(spark, tmp_path):
-    """A stale checkpoint replaying an interval whose end precedes the
-    index's stamped version must be a no-op, never an inverted feed
-    read or a regression."""
-    t = _mk(spark, tmp_path, n=40)
-    idx = str(tmp_path / "ivf")
-    v1 = t.current_version()
-    build_ivf_index(t.read(), idx, n_lists=4, table_version=v1)
-    merge_apply(t, _ev(spark, [(2, "update", i, _vec(i, salt=5))
-                               for i in range(5)]))
-    ivf_index_advance(t, idx)
-    before = _cells(spark, idx)
-    s = ivf_index_advance(t, idx, to_version=v1)  # older than stamped
-    assert s["advanced"] is False
-    assert _cells(spark, idx) == before

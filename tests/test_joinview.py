@@ -13,11 +13,11 @@ from realdeal_spark.cdc.joinview import (
     JoinViewMaintainer,
     advance_join_view,
     create_join_view,
-    join_view_lag,
     join_view_watermark,
 )
 from realdeal_spark.lake.merge import merge_apply
 from realdeal_spark.lake.table import LakeTable
+from realdeal_spark.streaming.cdf_source import maintainer_lag, stream_maintain
 
 FACT_SCHEMA = "k bigint, ts bigint, fk bigint, val double"
 DIM_SCHEMA = "dk bigint, dts bigint, label string, weight double"
@@ -161,9 +161,9 @@ def test_replay_is_noop_and_lag(spark, jv):
     v = view.current_version()
     assert advance_join_view(fact, dim, view, {"fk": "dk"}) is None
     assert view.current_version() == v
-    lag = join_view_lag(fact, dim, view)
-    assert lag["fact_versions_behind"] == 0
-    assert lag["dim_versions_behind"] == 0
+    m = JoinViewMaintainer(fact, dim, view, {"fk": "dk"})
+    assert maintainer_lag(m)["versions_behind"] == 0
+    assert join_view_watermark(view)[1] == dim.current_version()
 
 
 def test_irrelevant_dim_epoch_marker_advances_watermark(spark, jv):
@@ -200,36 +200,39 @@ def test_fk_index_arrangement_path(spark, tmp_path):
     m = JoinViewMaintainer(fact, dim, view, {"fk": "dk"}, fk_index=idx)
     _apply(fact, spark, FACT_SCHEMA, F1)
     _apply(dim, spark, DIM_SCHEMA, D1)
-    m.refresh()
+    m.advance()
     _apply(dim, spark, DIM_SCHEMA, [
         (100, 20, "a-v2", 0.9, "update"),
         (200, 20, "b-v1", 0.6, "delete"),
     ])
-    m.refresh()
+    m.advance()
     _assert_converged(fact, dim, view)
     got = {r["k"]: r["label"] for r in view.read().collect()}
     assert got[1] == "a-v2" and got[3] is None
+    # a single-column arrangement cannot serve a composite join
+    with pytest.raises(ValueError, match="single-column"):
+        advance_join_view(
+            fact, dim, view, [("fk", "dk"), ("k", "dts")], fk_index=idx
+        )
 
 
 def test_streaming_maintainer(spark, tmp_path):
-    from realdeal_spark.cdc.joinview import stream_maintain_join_view
-
     fact, dim, view = _mk_tables(spark, str(tmp_path))
     _apply(fact, spark, FACT_SCHEMA, F1)
     _apply(dim, spark, DIM_SCHEMA, D1)
     _apply(fact, spark, FACT_SCHEMA, [(5, 20, 200, 5.0, "update")])
-    q = stream_maintain_join_view(
-        fact, dim, view, {"fk": "dk"},
-        checkpoint_dir=f"{tmp_path}/ckpt",
+    q = stream_maintain(
+        JoinViewMaintainer(fact, dim, view, {"fk": "dk"}),
+        f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)
     _assert_converged(fact, dim, view)
     # a dim-only edit rides the next drain even with no fact traffic
     _apply(dim, spark, DIM_SCHEMA, [(200, 30, "b-v2", 0.66, "update")])
-    q = stream_maintain_join_view(
-        fact, dim, view, {"fk": "dk"},
-        checkpoint_dir=f"{tmp_path}/ckpt",
+    q = stream_maintain(
+        JoinViewMaintainer(fact, dim, view, {"fk": "dk"}),
+        f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)
@@ -275,19 +278,19 @@ def test_maintainer_compaction_amortizer(spark, jv):
     )
     _apply(fact, spark, FACT_SCHEMA, F1)
     _apply(dim, spark, DIM_SCHEMA, D1)
-    m.refresh()  # 1st advancing refresh
+    m.advance()  # 1st effective advance
     _apply(fact, spark, FACT_SCHEMA, [(5, 20, 200, 5.0, "update")])
-    m.refresh()  # 2nd → compacts
+    m.advance()  # 2nd → compacts
     snap = view.snapshot()
     assert snap.summary.get("operation") == "compact"
     wm = join_view_watermark(view)
     _assert_converged(fact, dim, view)
     # replay after compaction: still a no-op, watermark unchanged
-    assert m.refresh() is None
+    assert m.advance() is None
     assert join_view_watermark(view) == wm
     # and the next real epoch advances straight across the compaction
     _apply(dim, spark, DIM_SCHEMA, [(200, 30, "b-v2", 0.7, "update")])
-    m.refresh()
+    m.advance()
     _assert_converged(fact, dim, view)
 
 
@@ -295,18 +298,16 @@ def test_streaming_maintainer_with_compaction(spark, tmp_path):
     """compact_every through the STREAMING entry point: the drain
     still converges, the view history shows a compact commit, and a
     checkpointed re-drain after compaction replays nothing."""
-    from realdeal_spark.cdc.joinview import stream_maintain_join_view
-
     fact, dim, view = _mk_tables(spark, str(tmp_path))
     _apply(fact, spark, FACT_SCHEMA, F1)
     _apply(dim, spark, DIM_SCHEMA, D1)
     _apply(fact, spark, FACT_SCHEMA, [(5, 20, 200, 5.0, "update")])
-    q = stream_maintain_join_view(
-        fact, dim, view, {"fk": "dk"},
-        checkpoint_dir=f"{tmp_path}/ckpt",
-        mode="mor",
+    q = stream_maintain(
+        JoinViewMaintainer(
+            fact, dim, view, {"fk": "dk"}, mode="mor", compact_every=1
+        ),
+        f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
-        compact_every=1,
     )
     q.awaitTermination(120)
     _assert_converged(fact, dim, view)
@@ -314,12 +315,12 @@ def test_streaming_maintainer_with_compaction(spark, tmp_path):
     assert "compact" in ops
     wm = join_view_watermark(view)
     v = view.current_version()
-    q = stream_maintain_join_view(
-        fact, dim, view, {"fk": "dk"},
-        checkpoint_dir=f"{tmp_path}/ckpt",
-        mode="mor",
+    q = stream_maintain(
+        JoinViewMaintainer(
+            fact, dim, view, {"fk": "dk"}, mode="mor", compact_every=1
+        ),
+        f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
-        compact_every=1,
     )
     q.awaitTermination(120)
     assert join_view_watermark(view) == wm

@@ -1,10 +1,17 @@
-"""Continuous-maintenance soak: ALL THREE standing maintainers —
-table replication, the secondary value index, and the persisted IVF
-index — run with processingTime triggers against ONE base table that
-keeps taking commits while they run.  Lag must return to zero and
-every maintained surface must equal its from-scratch twin (VERDICT r4
-next-round item #8; the availableNow variants are covered per-surface
-in test_replicate / test_valueindex / test_ivf_advance)."""
+"""All seven maintained surfaces through the one protocol
+(``streaming.cdf_source``: Surface / stream_maintain / maintainer_lag)
+— replica, rollup, IVF index, value index, dedup index, SCD2 history
+and join view — over ONE base table plus a small dim table for the
+join view:
+
+- a surface created after ``expire_snapshots(keep_last=1)`` serves
+  every live row (regression: a feed replay from "earliest" left a
+  replica empty and a value index without a watermark);
+- an advance at or below the watermark is a no-op on every surface,
+  which restarting a stream off an older checkpoint relies on;
+- a processingTime soak: all seven maintainers run while the base
+  keeps taking commits; lag returns to zero and every surface equals
+  its from-scratch twin."""
 
 from __future__ import annotations
 
@@ -13,30 +20,54 @@ import os
 import random
 import time as _time
 
+import pytest
 from pyspark.sql import functions as F
 
-from realdeal_spark.cdc.replicate import (
-    create_replica,
-    replication_lag,
-    stream_replicate,
-)
+from realdeal_spark.cdc.joinview import JoinViewMaintainer, create_join_view
+from realdeal_spark.cdc.replicate import create_replica, replica_surface
+from realdeal_spark.cdc.rollup import Measure, RollupMaintainer, rollup_full
 from realdeal_spark.lake import LakeTable, merge_apply
+from realdeal_spark.lake.dedupidx import create_dedup_index, dedup_index_surface
+from realdeal_spark.lake.scd import (
+    create_history_table,
+    history_rows,
+    history_surface,
+)
 from realdeal_spark.lake.valueindex import (
-    advance_value_index,
     create_value_index,
     lookup_by_value,
-    stream_maintain_value_index,
-    value_index_lag,
+    value_index_surface,
 )
-from realdeal_spark.operators.similarity import build_ivf_index
-from realdeal_spark.streaming.cdf_source import stream_maintain_ivf
+from realdeal_spark.operators.dedup import banded_minhash
+from realdeal_spark.operators.similarity import (
+    build_ivf_index,
+    ivf_index_watermark,
+    ivf_surface,
+)
+from realdeal_spark.streaming.cdf_source import maintainer_lag, stream_maintain
 
 DIM = 6
 SCHEMA = (
     "vec_id bigint, lsn bigint, embedding array<double>, "
-    "lang string, v double"
+    "lang string, v double, text string"
 )
+DIM_SCHEMA = "lang string, dts bigint, label string"
 LANGS = ["de", "en", "fr"]
+WORDS = "crawl merge feed page index delta snapshot bucket bloom epoch".split()
+KINDS = [
+    "replica", "rollup", "ivf", "value_index",
+    "dedup_index", "history", "join_view",
+]
+MEASURES = [
+    Measure("n", "count"),
+    Measure("sum_v", "sum", "v"),
+    Measure("max_lsn", "max", "lsn"),
+]
+LSH = dict(num_perm=8, bands=4, shingle_n=2)
+HIST_COLS = [
+    "vec_id", "lsn", "lang", "v",
+    "_live", "_valid_from", "_valid_to", "_commit_version",
+]
 
 
 def _vec(i: int, salt: int = 0) -> list[float]:
@@ -44,27 +75,92 @@ def _vec(i: int, salt: int = 0) -> list[float]:
     return [rng.uniform(-1, 1) for _ in range(DIM)]
 
 
+def _text(i: int, salt: int = 0) -> str:
+    # ids ten apart share a text: near-dup candidates for the LSH index
+    rng = random.Random((i % 10) * 31 + salt)
+    return " ".join(rng.choice(WORDS) for _ in range(8))
+
+
 def _ev(spark, rows):
     """rows: (lsn, op, vec_id, salt-or-None)."""
     return spark.createDataFrame(
         [
-            (
-                vid,
-                lsn,
-                None if op == "delete" else _vec(vid, salt),
-                None if op == "delete" else LANGS[(vid + (salt or 0)) % 3],
-                None if op == "delete" else float(vid),
-                op,
+            (vid, lsn)
+            + (
+                (None,) * 4
+                if op == "delete"
+                else (
+                    _vec(vid, salt),
+                    LANGS[(vid + salt) % 3],
+                    float(vid),
+                    _text(vid, salt),
+                )
             )
+            + (op,)
             for (lsn, op, vid, salt) in rows
         ],
         SCHEMA + ", op string",
     )
 
 
+def _dim_ev(spark, rows):
+    """rows: (lang, dts, label, op)."""
+    return spark.createDataFrame(rows, DIM_SCHEMA + ", op string")
+
+
+def _base(spark, root: str, n: int) -> LakeTable:
+    src = LakeTable.create(
+        spark, f"{root}/base", SCHEMA,
+        key_columns=["vec_id"], order_columns=["lsn"],
+        n_buckets=4, soft_delete=True,
+    )
+    merge_apply(src, _ev(spark, [(1, "insert", i, 0) for i in range(n)]))
+    return src
+
+
+def _dim(spark, root: str) -> LakeTable:
+    dim = LakeTable.create(
+        spark, f"{root}/dim", DIM_SCHEMA,
+        key_columns=["lang"], order_columns=["dts"],
+        n_buckets=2, soft_delete=True,
+    )
+    merge_apply(
+        dim, _dim_ev(spark, [(g, 1, f"{g}-v1", "insert") for g in LANGS])
+    )
+    return dim
+
+
+def _build(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
+    """(surface, handle): the handle is what the surface persists — its
+    LakeTable, the IVF index dir, or None for the rollup (whose state
+    lives on the maintainer)."""
+    if kind == "replica":
+        h = create_replica(src, f"{root}/replica", n_buckets=2)
+        return replica_surface(src, h), h
+    if kind == "rollup":
+        return RollupMaintainer(src, ["lang"], MEASURES), None
+    if kind == "ivf":
+        h = f"{root}/ivf"
+        build_ivf_index(
+            src.read(), h, n_lists=4, table_version=src.current_version()
+        )
+        return ivf_surface(src, h), h
+    if kind == "value_index":
+        h = create_value_index(src, f"{root}/vidx", "lang", n_buckets=4)
+        return value_index_surface(src, h, "lang"), h
+    if kind == "dedup_index":
+        h = create_dedup_index(src, f"{root}/didx", n_buckets=4)
+        return dedup_index_surface(src, h, **LSH), h
+    if kind == "history":
+        h = create_history_table(src, f"{root}/hist")
+        return history_surface(src, h), h
+    h = create_join_view(src, dim, {"lang": "lang"}, f"{root}/jv")
+    return JoinViewMaintainer(src, dim, h, {"lang": "lang"}), h
+
+
 def _state(t: LakeTable):
     return sorted(
-        (r["vec_id"], r["lsn"], r["lang"], r["v"],
+        (r["vec_id"], r["lsn"], r["lang"], r["v"], r["text"],
          tuple(round(x, 9) for x in r["embedding"]))
         for r in t.read().collect()
     )
@@ -95,41 +191,124 @@ def _scanned(src, langs):
     )
 
 
-def test_three_maintainers_soak_processing_time(spark, tmp_path):
-    src = LakeTable.create(
-        spark, str(tmp_path / "base"), SCHEMA,
-        key_columns=["vec_id"], order_columns=["lsn"],
-        n_buckets=4, soft_delete=True,
-    )
-    merge_apply(
-        src, _ev(spark, [(1, "insert", i, 0) for i in range(60)])
+def _rollup_rows(df):
+    return sorted(
+        (r["lang"], r["n"], r["sum_v"], r["max_lsn"]) for r in df.collect()
     )
 
-    dst = create_replica(src, str(tmp_path / "replica"), n_buckets=2)
-    vidx = create_value_index(src, str(tmp_path / "vidx"), "lang")
-    advance_value_index(src, vidx, "lang")
-    ivf = str(tmp_path / "ivf")
-    build_ivf_index(
-        src.read(), ivf, n_lists=4, table_version=src.current_version()
+
+def _bands(idx):
+    return sorted(
+        (r["band"], r["bh"], r["vec_id"])
+        for r in idx.read().select("band", "bh", "vec_id").collect()
     )
+
+
+def _scratch_bands(src):
+    live = src.read().where(F.col("text").isNotNull())
+    return sorted(
+        (r["band"], r["bh"], r["_id"])
+        for r in banded_minhash(live, "text", "vec_id", **LSH).collect()
+    )
+
+
+def _hist(df):
+    rows = [tuple(r) for r in df.select(*HIST_COLS).collect()]
+    return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
+
+
+def _joined(src, dim):
+    return _view_rows(
+        src.read().join(
+            dim.read().select("lang", "label"), on="lang", how="left"
+        )
+    )
+
+
+def _view_rows(df):
+    return sorted(
+        (r["vec_id"], r["lsn"], r["lang"], r["label"]) for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("kind", ["replica", "value_index"])
+def test_stream_maintain_bootstraps_after_expiry(spark, tmp_path, kind):
+    src = _base(spark, str(tmp_path), 10)
+    merge_apply(src, _ev(spark, [(2, "update", i, 3) for i in range(4)]))
+    src.expire_snapshots(keep_last=1)
+    assert len(src.versions()) == 1
+    s, h = _build(kind, src, None, str(tmp_path))
+    q = stream_maintain(
+        s, str(tmp_path / "ckpt"), trigger={"availableNow": True}
+    )
+    q.awaitTermination(120)
+    if kind == "replica":
+        assert len(_state(h)) == 10
+        assert _state(h) == _state(src)
+    else:
+        assert len(_served(src, h, LANGS)) == 10
+        assert _served(src, h, LANGS) == _scanned(src, LANGS)
+    assert maintainer_lag(s)["versions_behind"] == 0
+
+
+@pytest.fixture(scope="module")
+def base_and_dim(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("surfaces"))
+    src = _base(spark, root, 24)
+    merge_apply(
+        src,
+        _ev(spark, [(2, "update", i, 5) for i in range(6)]
+            + [(2, "delete", i, None) for i in range(6, 9)]),
+    )
+    return src, _dim(spark, root)
+
+
+def _content(spark, kind, s, h):
+    if kind == "rollup":
+        return _rollup_rows(s.advance())
+    if kind == "ivf":
+        return _cells(spark, h)
+    return h.current_version()
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_advance_at_or_below_watermark_is_noop(
+    spark, tmp_path, base_and_dim, kind
+):
+    """After a bootstrap, advancing to any retained version at or
+    below the watermark — a replayed interval from an older checkpoint
+    — commits nothing on a LakeTable-backed surface and changes
+    neither the state nor the watermark of the rollup or the IVF
+    stamp."""
+    src, dim = base_and_dim
+    s, h = _build(kind, src, dim, str(tmp_path))
+    s.advance()
+    wm = s.watermark()
+    assert wm == src.current_version()
+    before = _content(spark, kind, s, h)
+    for t in src.versions():
+        s.advance(to_version=t)
+    assert s.watermark() == wm
+    assert _content(spark, kind, s, h) == before
+
+
+def test_seven_maintainers_soak_processing_time(spark, tmp_path):
+    root = str(tmp_path)
+    src = _base(spark, root, 60)
+    dim = _dim(spark, root)
+    built = {k: _build(k, src, dim, root) for k in KINDS}
 
     trig = {"processingTime": "1 seconds"}
     queries = [
-        stream_replicate(
-            src, dst, str(tmp_path / "ck_rep"), trigger=trig
-        ),
-        stream_maintain_value_index(
-            src, vidx, "lang", str(tmp_path / "ck_vix"), trigger=trig
-        ),
-        stream_maintain_ivf(
-            src, ivf, str(tmp_path / "ck_ivf"), trigger=trig,
-            vec_col="embedding", id_col="vec_id",
-        ),
+        stream_maintain(s, f"{root}/ck_{k}", trigger=trig)
+        for k, (s, _) in built.items()
     ]
     try:
         # waves of commits WHILE the maintainers run: vector moves
-        # (cell churn), lang flips (index retire+insert), deletes,
-        # inserts, and an out-of-order straggler that must lose
+        # (cell churn), lang flips (index retire+insert, rollup group
+        # moves, join re-enrichment), text rewrites (band retirement),
+        # deletes, inserts, a dim edit the join view must pick up, and
+        # an out-of-order straggler that must lose
         waves = [
             [(10, "update", i, 3) for i in range(0, 20)]
             + [(10, "insert", i, 0) for i in range(60, 75)],
@@ -138,26 +317,24 @@ def test_three_maintainers_soak_processing_time(spark, tmp_path):
             [(5, "update", i, 9) for i in range(0, 8)]  # stale: lsn 5
             + [(30, "update", i, 11) for i in range(50, 60)],
         ]
-        for w in waves:
+        for i, w in enumerate(waves):
             merge_apply(src, _ev(spark, w))
+            if i == 0:
+                merge_apply(
+                    dim, _dim_ev(spark, [("de", 2, "de-v2", "update")])
+                )
             _time.sleep(1.5)
 
         deadline = _time.monotonic() + 180
         while _time.monotonic() < deadline:
-            rep_behind = replication_lag(src, dst)["versions_behind"]
-            vix_behind = value_index_lag(src, vidx)["versions_behind"]
-            with open(os.path.join(ivf, "centroids.json")) as f:
-                ivf_v = json.load(f)["table_version"]
-            if (
-                rep_behind == 0
-                and vix_behind == 0
-                and ivf_v == src.current_version()
-            ):
+            behind = {
+                k: maintainer_lag(s)["versions_behind"]
+                for k, (s, _) in built.items()
+            }
+            if all(b == 0 for b in behind.values()):
                 break
             _time.sleep(2)
-        assert rep_behind == 0, f"replica lag stuck at {rep_behind}"
-        assert vix_behind == 0, f"value-index lag stuck at {vix_behind}"
-        assert ivf_v == src.current_version(), "IVF never caught up"
+        assert all(b == 0 for b in behind.values()), f"lag stuck: {behind}"
     finally:
         for q in queries:
             q.stop()
@@ -165,10 +342,12 @@ def test_three_maintainers_soak_processing_time(spark, tmp_path):
             q.awaitTermination()
 
     # every maintained surface == its from-scratch twin
-    assert _state(dst) == _state(src)
-    for langs in (["de"], ["en"], ["fr"], LANGS):
-        assert _served(src, vidx, langs) == _scanned(src, langs)
-    rebuilt = str(tmp_path / "ivf_rebuild")
+    assert _state(built["replica"][1]) == _state(src)
+    assert _rollup_rows(built["rollup"][0].advance()) == _rollup_rows(
+        rollup_full(src, ["lang"], MEASURES)
+    )
+    ivf = built["ivf"][1]
+    rebuilt = f"{root}/ivf_rebuild"
     with open(os.path.join(ivf, "centroids.json")) as f:
         meta = json.load(f)
     cents = [
@@ -178,7 +357,14 @@ def test_three_maintainers_soak_processing_time(spark, tmp_path):
         src.read(), rebuilt, centroids=cents,
         table_version=src.current_version(),
     )
+    assert ivf_index_watermark(ivf) == src.current_version()
     assert _cells(spark, ivf) == _cells(spark, rebuilt)
+    vidx = built["value_index"][1]
+    for langs in (["de"], ["en"], ["fr"], LANGS):
+        assert _served(src, vidx, langs) == _scanned(src, langs)
+    assert _bands(built["dedup_index"][1]) == _scratch_bands(src)
+    assert _hist(built["history"][1].read()) == _hist(history_rows(src))
+    assert _view_rows(built["join_view"][1].read()) == _joined(src, dim)
     # the stale wave lost: lsn-5 straggler never overwrote lsn-10 rows
     got = {r["vec_id"]: r["lsn"] for r in src.read().collect()}
     assert all(got[i] == 10 for i in range(0, 5))

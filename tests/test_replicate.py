@@ -12,10 +12,11 @@ from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.replicate import (
     create_replica,
+    replica_surface,
     replicate_interval,
-    stream_replicate,
 )
 from realdeal_spark.lake import LakeTable, merge_apply
+from realdeal_spark.streaming.cdf_source import maintainer_lag, stream_maintain
 
 SCHEMA = "k string, ts timestamp_ntz, lsn bigint, cat string, v double"
 
@@ -118,7 +119,9 @@ def test_stream_replicate_with_restart(spark, tmp_path):
     src = _seed(spark, tmp_path)
     dst = create_replica(src, str(tmp_path / "dst"), n_buckets=2)
     ckpt = str(tmp_path / "ckpt")
-    q = stream_replicate(src, dst, ckpt, max_versions_per_trigger=1)
+    q = stream_maintain(
+        replica_surface(src, dst), ckpt, max_versions_per_trigger=1
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -130,7 +133,7 @@ def test_stream_replicate_with_restart(spark, tmp_path):
         (100, "update", "k3", "q", 99.0),
         (101, "delete", "new1", None, None),
     ]))
-    q2 = stream_replicate(src, dst, ckpt)
+    q2 = stream_maintain(replica_surface(src, dst), ckpt)
     try:
         q2.processAllAvailable()
     finally:
@@ -161,19 +164,20 @@ def test_out_of_order_protection_carries_to_replica(spark, tmp_path):
 
 
 def test_replication_watermark_and_lag(spark, tmp_path):
-    from realdeal_spark.cdc.replicate import replica_watermark, replication_lag
+    from realdeal_spark.cdc.replicate import replica_watermark
 
     src = _seed(spark, tmp_path)
     dst = create_replica(src, str(tmp_path / "dst"))
+    surface = replica_surface(src, dst)
     assert replica_watermark(dst) is None
-    assert replication_lag(src, dst)["versions_behind"] is None
+    assert maintainer_lag(surface)["versions_behind"] is None
     vs = src.versions()
     replicate_interval(src, dst, vs[0], vs[1])
     assert replica_watermark(dst) == vs[1]
-    lag = replication_lag(src, dst)
+    lag = maintainer_lag(surface)
     assert lag["versions_behind"] == src.current_version() - vs[1] > 0
     replicate_interval(src, dst, vs[1], src.current_version())
-    assert replication_lag(src, dst)["versions_behind"] == 0
+    assert maintainer_lag(surface)["versions_behind"] == 0
 
 
 def test_inverted_or_empty_interval_is_noop(spark, tmp_path):

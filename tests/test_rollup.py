@@ -336,7 +336,7 @@ def test_rollup_minmax_extreme_hit_triggers_rescan_only_for_hit_group(
 
 
 def test_rollup_maintainer_persists_and_resumes(spark, tmp_path):
-    """The standing-consumer shape: refresh() after each epoch, state
+    """The standing-consumer shape: advance() after each epoch, state
     persisted per table version; a RESTARTED maintainer resumes from
     the persisted state and only advances over the new epochs."""
     from realdeal_spark.cdc.rollup import RollupMaintainer
@@ -348,28 +348,28 @@ def test_rollup_maintainer_persists_and_resumes(spark, tmp_path):
     merge_apply(t, _ev(spark, [
         (1, "insert", "a", 10, "x", 1.0), (2, "insert", "b", 11, "y", 2.0),
     ]))
-    s1 = m.refresh()
-    assert m.version == t.current_version()
+    s1 = m.advance()
+    assert m.watermark() == t.current_version()
     assert _rows(s1) == _rows(rollup_full(t, ["cat"], MEASURES))
-    # idempotent refresh: same version → same frame, no work
-    assert m.refresh() is s1
+    # idempotent advance: same version → same frame, no work
+    assert m.advance() is s1
 
     merge_apply(t, _ev(spark, [
         (3, "update", "a", 20, "y", 9.0), (4, "insert", "c", 21, "x", 3.0),
     ]))
-    m.refresh()
+    m.advance()
 
     # ---- restart: a fresh maintainer resumes from disk
     m2 = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
-    assert m2.version == t.current_version()
+    assert m2.watermark() == t.current_version()
     merge_apply(t, _ev(spark, [(5, "delete", "b", 30, None, None)]))
-    s3 = m2.refresh()
+    s3 = m2.advance()
     assert _rows(s3) == _rows(rollup_full(t, ["cat"], MEASURES))
 
 
 def test_rollup_maintainer_rides_applier_epochs(spark, tmp_path):
     """End-to-end standing-consumer composition: the applier's
-    per-epoch report_sink hook drives RollupMaintainer.refresh, so
+    per-epoch report_sink hook drives RollupMaintainer.advance, so
     the aggregate tracks the table epoch-by-epoch with no new API."""
     from realdeal_spark.cdc.apply import CdcApplier
     from realdeal_spark.cdc.events import generate_change_events
@@ -391,16 +391,16 @@ def test_rollup_maintainer_rides_applier_epochs(spark, tmp_path):
     applier = CdcApplier(
         t,
         report_sink=lambda r: seen_versions.append(
-            (r.snapshot_version, m.refresh().count())
+            (r.snapshot_version, m.advance().count())
         ),
     )
     ev = generate_change_events(
         spark, n_events=400, n_urls=80, delete_percent=10, ooo_percent=10
     )
     applier.run(ev, epoch_size=150)
-    assert len(seen_versions) == 3  # one refresh per epoch
-    assert m.version == t.current_version()
-    assert _lang_rows(m.refresh()) == _lang_rows(
+    assert len(seen_versions) == 3  # one advance per epoch
+    assert m.watermark() == t.current_version()
+    assert _lang_rows(m.advance()) == _lang_rows(
         rollup_full(t, ["lang"], [Measure("n_pages", "count")])
     )
 
@@ -418,12 +418,12 @@ def test_rollup_maintainer_bootstraps_after_expired_base(spark, tmp_path):
     sd = str(tmp_path / "rollup_state")
     m = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
     merge_apply(t, _ev(spark, [(1, "insert", "a", 10, "x", 1.0)]))
-    m.refresh()
+    m.advance()
     merge_apply(t, _ev(spark, [(2, "insert", "b", 11, "y", 2.0)]))
     merge_apply(t, _ev(spark, [(3, "insert", "c", 12, "y", 4.0)]))
     t.expire_snapshots(keep_last=1)
     m2 = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
-    s = m2.refresh()
+    s = m2.advance()
     assert _rows(s) == _rows(rollup_full(t, ["cat"], MEASURES))
 
 
@@ -561,16 +561,16 @@ def test_rollup_ndv_maintainer_persists_sketches(spark, tmp_path):
         (2, "insert", "b", 11, "y", 2.0),
     ]))
     m = RollupMaintainer(t, ["cat"], MEASURES_NDV, state_dir=sd)
-    m.refresh()
+    m.advance()
     merge_apply(t, _ev(spark, [
         (3, "update", "a", 20, "x", 3.0),
         (4, "insert", "c", 21, "x", 1.0),
     ]))
-    m.refresh()
+    m.advance()
     # restart: resume from parquet (sketches must round-trip)
     m2 = RollupMaintainer(t, ["cat"], MEASURES_NDV, state_dir=sd)
     merge_apply(t, _ev(spark, [(5, "insert", "d", 30, "y", 2.0)]))
-    s = m2.refresh()
+    s = m2.advance()
     assert _rows_ndv(s) == _rows_ndv(rollup_full(t, ["cat"], MEASURES_NDV))
 
 

@@ -261,12 +261,15 @@ def test_history_collision_and_empty_guard(spark, tmp_path):
 
 
 def test_stream_maintain_history_tracks_base(spark, table3, tmp_path):
-    from realdeal_spark.streaming import stream_maintain_history
+    from realdeal_spark.lake.scd import history_surface
+    from realdeal_spark.streaming import stream_maintain
 
     t = table3
     h = create_history_table(t, str(tmp_path / "h"))
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain_history(t, h, ckpt, max_versions_per_trigger=1)
+    q = stream_maintain(
+        history_surface(t, h), ckpt, max_versions_per_trigger=1
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -275,7 +278,7 @@ def test_stream_maintain_history_tracks_base(spark, table3, tmp_path):
     assert _hist_set(h.read()) == _hist_set(history_rows(t))
     # more base commits; fresh query off the same checkpoint resumes
     merge_apply(t, _ev(spark, [(9, "update", "b", 77.0)]))
-    q2 = stream_maintain_history(t, h, ckpt)
+    q2 = stream_maintain(history_surface(t, h), ckpt)
     try:
         q2.processAllAvailable()
     finally:

@@ -17,10 +17,10 @@ from realdeal_spark.lake.valueindex import (
     advance_value_index,
     create_value_index,
     lookup_by_value,
-    stream_maintain_value_index,
-    value_index_lag,
+    value_index_surface,
     value_index_watermark,
 )
+from realdeal_spark.streaming.cdf_source import maintainer_lag, stream_maintain
 
 SCHEMA = "url string, ts timestamp_ntz, lsn bigint, lang string, v double"
 
@@ -111,8 +111,10 @@ def test_snapshot_bootstrap_matches_feed_bootstrap(spark, tmp_path):
     src = _seed(spark, tmp_path)
     snap_ix = create_value_index(src, str(tmp_path / "snap_ix"), "lang")
     feed_ix = create_value_index(src, str(tmp_path / "feed_ix"), "lang")
-    advance_value_index(src, snap_ix, "lang")  # default: snapshot
-    advance_value_index(src, feed_ix, "lang", bootstrap="feed")
+    advance_value_index(src, snap_ix, "lang")  # bootstraps: snapshot
+    advance_interval(  # the feed replay over the same interval
+        src, feed_ix, "lang", src.versions()[0], src.current_version()
+    )
     assert value_index_watermark(snap_ix) == value_index_watermark(feed_ix)
     for langs in (["de"], ["en"], ["fr"], ["de", "en", "fr"]):
         assert _served(src, snap_ix, langs) == _scanned(src, langs)
@@ -183,18 +185,19 @@ def test_interval_chops_converge_and_replay_is_noop(spark, tmp_path):
 def test_watermark_and_lag(spark, tmp_path):
     src = _seed(spark, tmp_path)
     idx = create_value_index(src, str(tmp_path / "idx"), "lang")
+    surface = value_index_surface(src, idx, "lang")
     assert value_index_watermark(idx) is None
-    assert value_index_lag(src, idx)["versions_behind"] is None
+    assert maintainer_lag(surface)["versions_behind"] is None
     vs = src.versions()
     advance_interval(src, idx, "lang", vs[0], vs[1])
     assert value_index_watermark(idx) == vs[1]
     assert (
-        value_index_lag(src, idx)["versions_behind"]
+        maintainer_lag(surface)["versions_behind"]
         == src.current_version() - vs[1]
         > 0
     )
     advance_value_index(src, idx, "lang")
-    assert value_index_lag(src, idx)["versions_behind"] == 0
+    assert maintainer_lag(surface)["versions_behind"] == 0
 
 
 def test_lookup_pins_to_watermark(spark, tmp_path):
@@ -291,8 +294,9 @@ def test_stream_maintenance_with_restart(spark, tmp_path):
     src = _seed(spark, tmp_path)
     idx = create_value_index(src, str(tmp_path / "idx"), "lang")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain_value_index(
-        src, idx, "lang", ckpt, max_versions_per_trigger=1
+    q = stream_maintain(
+        value_index_surface(src, idx, "lang"), ckpt,
+        max_versions_per_trigger=1,
     )
     try:
         q.processAllAvailable()
@@ -307,7 +311,7 @@ def test_stream_maintenance_with_restart(spark, tmp_path):
         (100, "update", "u2", "de", 99.0),
         (101, "delete", "u3", None, None),
     ]))
-    q2 = stream_maintain_value_index(src, idx, "lang", ckpt)
+    q2 = stream_maintain(value_index_surface(src, idx, "lang"), ckpt)
     try:
         q2.processAllAvailable()
     finally:
@@ -316,7 +320,9 @@ def test_stream_maintenance_with_restart(spark, tmp_path):
     assert _served(src, idx, ["de", "en", "fr"]) == _scanned(
         src, ["de", "en", "fr"]
     )
-    assert value_index_lag(src, idx)["versions_behind"] == 0
+    assert maintainer_lag(
+        value_index_surface(src, idx, "lang")
+    )["versions_behind"] == 0
 
 
 def test_index_compaction_preserves_lookups(spark, tmp_path):
