@@ -25,9 +25,11 @@ from realdeal_spark.cdc.quarantine import (
 )
 from realdeal_spark.cdc.rollup import (
     Measure,
-    RollupMaintainer,
+    advance_rollup,
+    create_rollup_table,
     rollup_advance,
     rollup_full,
+    rollup_surface,
 )
 from realdeal_spark.cdc.joinview import (
     JoinViewMaintainer,
@@ -49,13 +51,15 @@ __all__ = [
     "plan_evolution",
     "reconcile",
     "Measure",
-    "RollupMaintainer",
+    "advance_rollup",
+    "create_rollup_table",
     "advance_replica",
     "create_replica",
     "replica_surface",
     "replicate_interval",
     "rollup_advance",
     "rollup_full",
+    "rollup_surface",
     "JoinViewMaintainer",
     "advance_join_view",
     "create_join_view",

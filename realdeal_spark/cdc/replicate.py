@@ -39,7 +39,9 @@ from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.evolve import reconcile
 from realdeal_spark.lake.merge import MergeResult, merge_apply
-from realdeal_spark.lake.table import LakeTable, interval_watermark
+from realdeal_spark.lake.table import LakeTable, interval_step, interval_watermark
+
+_EPOCH_PREFIX = "cdf-replicate:"
 
 
 def create_replica(
@@ -64,6 +66,30 @@ def create_replica(
     )
 
 
+def _apply(dst, auto_evolve, mode, epoch_id, rows) -> MergeResult:
+    """MERGE change rows into the replica: ``delete`` stays a delete,
+    anything else upserts (the MERGE inserts unmatched keys)."""
+    if auto_evolve:
+        reconcile(dst, rows.drop("change_type").schema)
+    op = F.when(F.col("change_type") == "delete", "delete").otherwise("update")
+    ev = rows.withColumn("op", op).drop("change_type")
+    return merge_apply(dst, ev, epoch_id=epoch_id, mode=mode)
+
+
+def _step(src, dst, auto_evolve, mode, **span) -> MergeResult | None:
+    """A bootstrap upserts every live row of the source snapshot with
+    its own order tuple; an interval applies the feed's net rows."""
+    apply = partial(_apply, dst, auto_evolve, mode)
+    return interval_step(
+        src, dst, _EPOCH_PREFIX,
+        lambda eid, tv: apply(
+            eid, src.read(version=tv).withColumn("change_type", F.lit("upsert"))
+        ),
+        lambda eid, fv, tv: apply(eid, src.read_changes(fv, tv)),
+        **span,
+    )
+
+
 def replicate_interval(
     src: LakeTable,
     dst: LakeTable,
@@ -72,30 +98,14 @@ def replicate_interval(
     auto_evolve: bool = True,
     mode: str = "cow",
 ) -> MergeResult | None:
-    """Apply one source interval to the replica, exactly once.
-
-    The feed's net rows become a MERGE batch: ``upsert`` →
-    ``update`` (the MERGE inserts unmatched keys — upsert
-    semantics), ``delete`` → ``delete``.  Epoch id
-    ``cdf-replicate:<from>-<to>`` makes a replayed interval a
-    metadata-only no-op: checked against the replica's applied
-    epochs BEFORE any read (merge_apply records ids but the skip
-    decision is the applier's job — same split as CdcApplier)."""
-    if int(to_version) <= int(from_version):
-        return None  # empty or inverted interval — nothing to apply
-    epoch_id = f"cdf-replicate:{int(from_version)}-{int(to_version)}"
-    if epoch_id in dst.snapshot().applied_epochs:
-        return None
-    ch = src.read_changes(from_version, to_version)
-    if auto_evolve:
-        reconcile(dst, ch.drop("change_type").schema)
-    ev = ch.withColumn(
-        "op",
-        F.when(F.col("change_type") == "delete", F.lit("delete")).otherwise(
-            F.lit("update")
-        ),
-    ).drop("change_type")
-    return merge_apply(dst, ev, epoch_id=epoch_id, mode=mode)
+    """Apply one source interval to the replica, exactly once: epoch
+    id ``cdf-replicate:<from>-<to>``; an interval ending at or below
+    the replica's watermark (a replay) is a metadata-only no-op,
+    decided before any read."""
+    return _step(
+        src, dst, auto_evolve, mode,
+        from_version=from_version, to_version=to_version,
+    )
 
 
 def replica_watermark(dst: LakeTable) -> int | None:
@@ -104,7 +114,7 @@ def replica_watermark(dst: LakeTable) -> int | None:
     the replica carries its replication state in-band, the same
     checkpoint-in-the-data property the applier has.  None if this
     table never received a replicated interval."""
-    return interval_watermark(dst, "cdf-replicate:")
+    return interval_watermark(dst, _EPOCH_PREFIX)
 
 
 def advance_replica(
@@ -115,30 +125,11 @@ def advance_replica(
     mode: str = "cow",
 ) -> MergeResult | None:
     """Catch the replica up from its watermark to ``to_version``
-    (default: the source's current version) — one
-    :func:`replicate_interval`.
-
-    First advance (watermark None) **bootstraps from the source
-    snapshot**: every live row at ``to_version`` upserts with its own
-    order tuple.  A feed replay from the earliest retained snapshot
-    would miss every row that predates it and never changed since.
-    The bootstrap's epoch id has the interval shape, so the watermark
-    reads the same as for a feed-seeded replica."""
-    tv = src.current_version() if to_version is None else int(to_version)
-    wm = replica_watermark(dst)
-    if wm is not None:
-        return replicate_interval(
-            src, dst, wm, tv, auto_evolve=auto_evolve, mode=mode
-        )
-    rows = src.read(version=tv)
-    if auto_evolve:
-        reconcile(dst, rows.schema)
-    return merge_apply(
-        dst,
-        rows.withColumn("op", F.lit("update")),
-        epoch_id=f"cdf-replicate:{src.versions()[0]}-{tv}",
-        mode=mode,
-    )
+    (default: the source's current version) in one interval.  The
+    first advance **bootstraps from the source snapshot**: a feed
+    replay from the earliest retained snapshot would miss every row
+    that predates it and never changed since."""
+    return _step(src, dst, auto_evolve, mode, to_version=to_version)
 
 
 def replica_surface(src: LakeTable, dst: LakeTable, **advance_kw):

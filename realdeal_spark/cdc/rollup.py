@@ -43,22 +43,26 @@ anti-join), projected to the rollup's columns and materialized once
 (O(changes) rows, localCheckpoint) so the several subtrees that
 consume it don't each re-run the feed; then two narrow groupBys over
 O(changes) rows and one outer join against the previous state keyed
-by dims.  State is a DataFrame the caller persists wherever it likes
-(a LakeTable, parquet, memory).
+by dims.  The maintained surface keeps that state in a LakeTable
+(:func:`create_rollup_table`), one bucket replaced per
+:func:`advance_rollup`, its watermark in-band in the epoch ids.
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
 from dataclasses import dataclass
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from realdeal_spark.lake.table import LakeTable
+from realdeal_spark.lake.table import (
+    LakeTable, Snapshot, interval_step, interval_watermark,
+)
+
+_EPOCH_PREFIX = "rollup:"
+_G = "_group"  # rollup_advance's null-safe group key
 
 
 _ADDITIVE = ("count", "sum")
@@ -221,20 +225,20 @@ def rollup_advance(
     # ONCE — O(changes) rows, bounded by the epoch admission cap — so
     # the advance pays for the feed exactly one time instead of once
     # per subtree.
+    # groups join on a struct of the dims: a struct holding a null
+    # equals its twin, a bare null dim would never match
+    group = F.struct(*dims).alias(_G)
     feed_cols = list(
-        dict.fromkeys(
-            [*dims]
-            + [m.col for m in measures if m.col]
-            + ["change_type"]
-        )
+        dict.fromkeys([m.col for m in measures if m.col] + ["change_type"])
     )
-    ch = ch.select(*feed_cols).localCheckpoint(eager=True)
+    ch = ch.select(group, *feed_cols).localCheckpoint(eager=True)
+    state = state.select(group, *[c for c in state.columns if c not in dims])
     add = ch.where(F.col("change_type") == "upsert")
     sub = ch.where(F.col("change_type") == "update_preimage")
     delta = (
-        add.groupBy(*dims).agg(*_agg_exprs(additive, +1))
-        .unionByName(sub.groupBy(*dims).agg(*_agg_exprs(additive, -1)))
-        .groupBy(*dims)
+        add.groupBy(_G).agg(*_agg_exprs(additive, +1))
+        .unionByName(sub.groupBy(_G).agg(*_agg_exprs(additive, -1)))
+        .groupBy(_G)
         .agg(
             *[
                 F.sum(m.alias).alias(m.alias)
@@ -248,12 +252,12 @@ def rollup_advance(
     )
     count_aliases = [m.alias for m in measures if m.kind == "count"]
     merged = state.alias("s").join(
-        delta.alias("d"), on=list(dims), how="full_outer"
+        delta.alias("d"), on=[_G], how="full_outer"
     )
     if extrema or ndvs:
         # monotone side: per-dim extreme / added-value sketch of the
         # ADDED rows only
-        add_ext = add.groupBy(*dims).agg(
+        add_ext = add.groupBy(_G).agg(
             *_extrema_exprs(extrema, "_add_"),
             *_sketch_exprs(ndvs, "_add_sk_"),
         )
@@ -282,26 +286,25 @@ def rollup_advance(
         dirty = (
             sub.join(
                 state.select(
-                    *dims,
+                    _G,
                     *[
                         F.col(m.alias).alias(f"_st_{m.alias}")
                         for m in extrema
                     ],
                 ),
-                on=list(dims),
+                on=[_G],
                 how="inner",
             )
             .where(hit)
-            .select(*dims)
+            .select(_G)
             .distinct()
         )
+        merged = merged.join(add_ext.alias("a"), on=[_G], how="full_outer")
         if dirty.isEmpty():
             # purely-monotone advance: no table read at all — the
             # common dashboard epoch (the isEmpty action itself is
             # O(changes): one groupBy-distinct joined with the state)
-            merged = merged.join(
-                add_ext.alias("a"), on=list(dims), how="full_outer"
-            ).withColumn("_dirty", F.lit(False))
+            merged = merged.withColumn("_dirty", F.lit(False))
             for m in extrema:
                 merged = merged.withColumn(f"_rs_{m.alias}", F.lit(None))
             for m in ndvs:
@@ -309,31 +312,23 @@ def rollup_advance(
                     f"_rs_sk_{m.alias}", F.lit(None).cast("binary")
                 )
         else:
-            need_cols = list(
-                dict.fromkeys(
-                    list(dims) + [m.col for m in extrema + ndvs]
-                )
-            )
+            need_cols = list(dict.fromkeys(m.col for m in extrema + ndvs))
             rescan = (
                 table.read(version=to_version)
-                .select(*need_cols)
-                .join(F.broadcast(dirty), on=list(dims), how="left_semi")
-                .groupBy(*dims)
+                .select(group, *need_cols)
+                .join(F.broadcast(dirty), on=[_G], how="left_semi")
+                .groupBy(_G)
                 .agg(
                     *_extrema_exprs(extrema, "_rs_"),
                     *_sketch_exprs(ndvs, "_rs_sk_"),
                 )
             )
-            merged = (
-                merged.join(add_ext.alias("a"), on=list(dims), how="full_outer")
-                .join(
-                    dirty.withColumn("_dirty", F.lit(True)).alias("dd"),
-                    on=list(dims),
-                    how="full_outer",
-                )
-                .join(rescan.alias("r"), on=list(dims), how="left_outer")
-            )
-    cols = [F.col(d) for d in dims]
+            merged = merged.join(
+                dirty.withColumn("_dirty", F.lit(True)).alias("dd"),
+                on=[_G],
+                how="full_outer",
+            ).join(rescan.alias("r"), on=[_G], how="left_outer")
+    cols = [F.col(_G)[d].alias(d) for d in dims]
     sketch_cols: list = []
     for m in measures:
         if m.kind in _ADDITIVE:
@@ -380,111 +375,76 @@ def rollup_advance(
     return out
 
 
-class RollupMaintainer:
-    """Keeps a rollup continuously in sync with a LakeTable — a
-    maintained surface (``streaming.Surface``) over ``source``.
+def create_rollup_table(
+    src: LakeTable,
+    root: str,
+    dims: Sequence[str],
+    measures: Sequence[Measure],
+) -> LakeTable:
+    """An empty state table for the rollup: the columns of
+    :func:`rollup_full` plus ``_ord`` (the src version the state
+    reflects), in the ONE bucket every advance replaces."""
+    schema = rollup_full(src, dims, measures).schema.add("_ord", "long")
+    return LakeTable.create(
+        src.spark, root, schema,
+        key_columns=list(dims), order_columns=["_ord"], n_buckets=1,
+    )
 
-    ``advance()`` advances the maintained state to the table's current
-    snapshot: bootstrap via :func:`rollup_full` on first call, then
-    :func:`rollup_advance` over the CDF feed for every subsequent
-    epoch — the standing consumer a CdcApplier/StreamingCdcApplier
-    loop calls after each committed epoch.
 
-    With ``state_dir`` the state is persisted as parquet under
-    ``state_dir/v=<table_version>/`` (written to the exact version it
-    reflects, so persistence is idempotent): a restarted maintainer
-    resumes from the newest persisted version that still exists in
-    the table's history instead of rescanning the table — the same
-    checkpoint-in-the-data resumability contract as the applier
-    itself.  The previous version's directory is kept (one-level
-    undo), older ones are removed.
-    """
+def rollup_watermark(state: LakeTable) -> int | None:
+    """Highest src version the state reflects (``rollup:<from>-<to>``
+    epoch ids)."""
+    return interval_watermark(state, _EPOCH_PREFIX)
 
-    def __init__(
-        self,
-        table: LakeTable,
-        dims: Sequence[str],
-        measures: Sequence[Measure],
-        state_dir: str | None = None,
-    ):
-        self.source = table
-        self.dims = list(dims)
-        self.measures = list(measures)
-        self.state_dir = state_dir
-        self._state: DataFrame | None = None
-        self._watermark: int | None = None
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            v = self._latest_persisted()
-            if v is not None:
-                self._state = table.spark.read.parquet(
-                    os.path.join(state_dir, f"v={v}")
-                )
-                self._watermark = v
 
-    def _latest_persisted(self) -> int | None:
-        vs = [
-            int(m.group(1))
-            for d in os.listdir(self.state_dir)
-            if (m := re.fullmatch(r"v=(\d+)", d))
-        ]
-        return max(vs) if vs else None
+def advance_rollup(
+    src: LakeTable,
+    state: LakeTable,
+    dims: Sequence[str],
+    measures: Sequence[Measure],
+    to_version: int | None = None,
+) -> Snapshot | None:
+    """Catch the ``state`` table up to ``to_version`` (default: src's
+    current version), exactly once: :func:`rollup_full` to bootstrap
+    or when the watermark snapshot was expired, else
+    :func:`rollup_advance` over the interval.  The new state replaces
+    the bucket (O(groups), like the advance itself) rather than
+    MERGEing into it, whose key join would never match a null dim.
+    Returns the state snapshot committed, None for a no-op."""
 
-    def watermark(self) -> int | None:
-        """Table version the maintained state reflects."""
-        return self._watermark
-
-    def advance(self, to_version: int | None = None) -> DataFrame:
-        """Advance to the table's current version (or to an explicit
-        ``to_version`` — the streaming-consumer path, where each
-        micro-batch targets its descriptor's interval end) and return
-        the state.  No-op (cheap) if already at or past the target —
-        a replayed micro-batch after restart must not regress the
-        state, which makes this handler idempotent under exactly-once
-        replay."""
-        cur = (
-            self.source.current_version()
-            if to_version is None
-            else int(to_version)
+    def replace(epoch_id: str, tv: int, rows: DataFrame) -> Snapshot:
+        rows = rows.withColumns(
+            {"_ord": F.lit(tv).cast("long"), "_bucket": F.lit(0)}
         )
-        if (
-            self._watermark is not None
-            and cur <= self._watermark
-            and self._state is not None
-        ):
-            return self._state
-        resumable = self._state is not None
-        if resumable:
-            try:  # the base snapshot may have been expired since
-                self.source.snapshot(self._watermark)
-            except Exception:
-                resumable = False
-        if resumable:
-            state = rollup_advance(
-                self.source, self._state, self._watermark, cur,
-                self.dims, self.measures,
-            )
-        else:
-            state = rollup_full(
-                self.source, self.dims, self.measures, version=cur
-            )
-        # materialize: the next advance must not re-execute the whole
-        # chain of prior advances (unbounded lineage)
-        if self.state_dir:
-            out = os.path.join(self.state_dir, f"v={cur}")
-            tmp = out + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            state.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(out, ignore_errors=True)
-            os.rename(tmp, out)
-            state = self.source.spark.read.parquet(out)
-            for d in os.listdir(self.state_dir):
-                m = re.fullmatch(r"v=(\d+)", d)
-                if m and int(m.group(1)) not in (cur, self._watermark):
-                    shutil.rmtree(
-                        os.path.join(self.state_dir, d), ignore_errors=True
-                    )
-        else:
-            state = state.localCheckpoint(eager=True)
-        self._state, self._watermark = state, cur
-        return state
+        return state.replace_buckets(rows, [0], epoch_id=epoch_id)
+
+    def bootstrap(epoch_id: str, tv: int) -> Snapshot:
+        rows = rollup_full(src, dims, measures, version=tv)
+        return replace(epoch_id, tv, rows)
+
+    def interval(epoch_id: str, fv: int, tv: int) -> Snapshot:
+        if fv not in src.versions():  # expired since the last advance
+            return bootstrap(epoch_id, tv)
+        prev = state.read().drop("_ord")
+        rows = rollup_advance(src, prev, fv, tv, dims, measures)
+        return replace(epoch_id, tv, rows)
+
+    return interval_step(
+        src, state, _EPOCH_PREFIX, bootstrap, interval, to_version=to_version
+    )
+
+
+def rollup_surface(
+    src: LakeTable,
+    state: LakeTable,
+    dims: Sequence[str],
+    measures: Sequence[Measure],
+):
+    """The rollup as a maintained surface (``streaming.Surface``)."""
+    from realdeal_spark.streaming.cdf_source import Surface
+
+    return Surface(
+        src,
+        partial(rollup_watermark, state),
+        partial(advance_rollup, src, state, dims, measures),
+    )

@@ -44,7 +44,7 @@ from realdeal_spark.lake.merge import (
     _phase_timer,
     merge_apply,
 )
-from realdeal_spark.lake.table import LakeTable, interval_watermark
+from realdeal_spark.lake.table import LakeTable, interval_step, interval_watermark
 from realdeal_spark.operators.dedup import banded_minhash
 
 _EPOCH_PREFIX = "dedupidx:"
@@ -182,75 +182,69 @@ def advance_dedup_index(
     families would in any LSH store; keep them pinned at the call
     site (:func:`dedup_index_surface` does)."""
     mark = _phase_timer()
-    tv = int(to_version) if to_version is not None else src.current_version()
-    fv = dedup_index_watermark(idx)
     key, orders, _ = _base_columns(src)
-    mark("didx.watermark")
-    if fv is None:
-        if not src.snapshot(tv).files:
-            return None  # nothing past create
-        epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
-        if epoch_id in idx.snapshot().applied_epochs:
-            return None
+
+    def bootstrap(epoch_id: str, tv: int) -> MergeResult:
         live = src.read(version=tv).where(F.col(text_col).isNotNull())
         events = _banded_with_orders(
             live, text_col, key, orders, num_perm, bands, shingle_n
         ).withColumn(OP_COL, F.lit(OP_UPDATE))
         return merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
-    if tv <= fv:
-        return None
-    epoch_id = f"{_EPOCH_PREFIX}{fv}-{tv}"
-    if epoch_id in idx.snapshot().applied_epochs:
-        return None
-    ch = src.read_changes(fv, tv, include_preimage=True)
-    cur = ch.where(F.col("change_type") != "update_preimage")
-    pre = ch.where(F.col("change_type") == "update_preimage").select(
-        F.col(key).alias(key), F.col(text_col).alias("_old_text")
-    )
-    # Materialize the O(batch) feed projection ONCE: the banding pass
-    # and the order-tuple join each consume it on both the upsert and
-    # retirement sides — without this the changes-feed plan (delta
-    # read + carryover reconcile) re-executed four times per advance,
-    # and the feed, not the banding, dominated the advance wall clock.
-    j = (
-        cur.join(pre, on=key, how="left")
-        .select(key, text_col, "_old_text", "change_type", *orders)
-        .localCheckpoint(eager=True)
-    )
-    mark("didx.feed")
-    ups_rows = j.where(
-        (F.col("change_type") == "upsert") & F.col(text_col).isNotNull()
-    ).select(key, text_col, *orders)
-    ret_rows = j.where(
-        F.col("_old_text").isNotNull()
-        & (
-            (F.col("change_type") == "delete")
-            | ~F.col(text_col).eqNullSafe(F.col("_old_text"))
+
+    def interval(epoch_id: str, fv: int, tv: int) -> MergeResult:
+        ch = src.read_changes(fv, tv, include_preimage=True)
+        cur = ch.where(F.col("change_type") != "update_preimage")
+        pre = ch.where(F.col("change_type") == "update_preimage").select(
+            F.col(key).alias(key), F.col(text_col).alias("_old_text")
         )
-    ).select(key, F.col("_old_text").alias(text_col), *orders)
-    # ups feeds two plan subtrees (the events union AND the right
-    # side of the retirement anti-join below); Spark does not CSE
-    # across them, so without a checkpoint the Arrow banding pass over
-    # the new text — the most expensive per-row work here — runs twice
-    ups = _banded_with_orders(
-        ups_rows, text_col, key, orders, num_perm, bands, shingle_n
-    ).localCheckpoint(eager=True)
-    dels = _banded_with_orders(
-        ret_rows, text_col, key, orders, num_perm, bands, shingle_n
+        # Materialize the O(batch) feed projection ONCE: the banding pass
+        # and the order-tuple join each consume it on both the upsert and
+        # retirement sides — without this the changes-feed plan (delta
+        # read + carryover reconcile) re-executed four times per advance,
+        # and the feed, not the banding, dominated the advance wall clock.
+        j = (
+            cur.join(pre, on=key, how="left")
+            .select(key, text_col, "_old_text", "change_type", *orders)
+            .localCheckpoint(eager=True)
+        )
+        mark("didx.feed")
+        ups_rows = j.where(
+            (F.col("change_type") == "upsert") & F.col(text_col).isNotNull()
+        ).select(key, text_col, *orders)
+        ret_rows = j.where(
+            F.col("_old_text").isNotNull()
+            & (
+                (F.col("change_type") == "delete")
+                | ~F.col(text_col).eqNullSafe(F.col("_old_text"))
+            )
+        ).select(key, F.col("_old_text").alias(text_col), *orders)
+        # ups feeds two plan subtrees (the events union AND the right
+        # side of the retirement anti-join below); Spark does not CSE
+        # across them, so without a checkpoint the Arrow banding pass over
+        # the new text — the most expensive per-row work here — runs twice
+        ups = _banded_with_orders(
+            ups_rows, text_col, key, orders, num_perm, bands, shingle_n
+        ).localCheckpoint(eager=True)
+        dels = _banded_with_orders(
+            ret_rows, text_col, key, orders, num_perm, bands, shingle_n
+        )
+        # a band whose sub-signature survived the rewrite appears on both
+        # sides with the same key AND the same order tuple — keep the
+        # upsert, drop the retirement (same-batch op conflicts are
+        # rejected by the MoR merge, and rightly so)
+        dels = dels.join(ups, on=["band", "bh", key], how="left_anti")
+        events = (
+            ups.withColumn(OP_COL, F.lit(OP_UPDATE))
+            .unionByName(dels.withColumn(OP_COL, F.lit(OP_DELETE)))
+        )
+        mark("didx.banding_plan")
+        out = merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
+        mark("didx.merge")
+        return out
+
+    return interval_step(
+        src, idx, _EPOCH_PREFIX, bootstrap, interval, to_version=to_version
     )
-    # a band whose sub-signature survived the rewrite appears on both
-    # sides with the same key AND the same order tuple — keep the
-    # upsert, drop the retirement (same-batch op conflicts are
-    # rejected by the MoR merge, and rightly so)
-    dels = dels.join(ups, on=["band", "bh", key], how="left_anti")
-    events = (
-        ups.withColumn(OP_COL, F.lit(OP_UPDATE))
-        .unionByName(dels.withColumn(OP_COL, F.lit(OP_DELETE)))
-    )
-    mark("didx.banding_plan")
-    out = merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
-    mark("didx.merge")
-    return out
 
 
 def dedup_index_surface(src: LakeTable, idx: LakeTable, **advance_kw):

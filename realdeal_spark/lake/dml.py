@@ -64,7 +64,7 @@ def _as_column(expr: Any) -> Column:
 
 def _already_applied(table: LakeTable, epoch_id: str | None) -> bool:
     # same exactly-once composition as CdcApplier.apply_epoch and
-    # valueindex.advance_interval: the applied-epoch ids live in the
+    # lake.table.interval_step: the applied-epoch ids live in the
     # snapshot itself, so a retried statement needs no side state
     return (
         epoch_id is not None

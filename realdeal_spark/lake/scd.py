@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from realdeal_spark.lake.merge import OP_COL, OP_UPDATE, MergeResult, merge_apply
-from realdeal_spark.lake.table import LakeTable, interval_watermark
+from realdeal_spark.lake.table import LakeTable, interval_step, interval_watermark
 from realdeal_spark.operators.asof import asof_join
 
 _EPOCH_PREFIX = "scd2:"
@@ -54,6 +54,26 @@ def _stamp(table: LakeTable, v: int) -> float:
 
         at = os.path.getmtime(table._snap_path(v))
     return float(at)
+
+
+def _version_changes(
+    table: LakeTable, vs: list[int], base: DataFrame | None = None
+) -> DataFrame:
+    """``base`` unioned with each retained version's net per-key
+    changes over ``vs``, stamped as SCD2 row versions."""
+    parts = [] if base is None else [base]
+    for prev, cur in zip(vs, vs[1:]):
+        parts.append(
+            table.read_changes(prev, cur)
+            .withColumn("_live", F.col("change_type") != "delete")
+            .drop("change_type")
+            .withColumn("_valid_from", F.lit(_stamp(table, cur)))
+            .withColumn("_commit_version", F.lit(cur))
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
 
 
 def history_rows(
@@ -74,29 +94,14 @@ def history_rows(
     if not vs:
         raise ValueError("no retained versions in the requested range")
 
-    def stamp(v: int) -> float:
-        return _stamp(table, v)
-
     key_cols = table.snapshot(vs[0]).key_columns
-    parts = []
     base = (
         table.read(version=vs[0])
         .withColumn("_live", F.lit(True))
-        .withColumn("_valid_from", F.lit(stamp(vs[0])))
+        .withColumn("_valid_from", F.lit(_stamp(table, vs[0])))
         .withColumn("_commit_version", F.lit(vs[0]))
     )
-    parts.append(base)
-    for prev, cur in zip(vs, vs[1:]):
-        ch = table.read_changes(prev, cur)
-        parts.append(
-            ch.withColumn("_live", F.col("change_type") != "delete")
-            .drop("change_type")
-            .withColumn("_valid_from", F.lit(stamp(cur)))
-            .withColumn("_commit_version", F.lit(cur))
-        )
-    hist = parts[0]
-    for p in parts[1:]:
-        hist = hist.unionByName(p, allowMissingColumns=True)
+    hist = _version_changes(table, vs, base)
     # a maintenance-only commit nets zero change rows, so consecutive
     # intervals per key are always genuine row versions; close each
     # with the next one's start
@@ -247,21 +252,32 @@ def advance_history(
     snapshots coarsens history for both representations equally; the
     watermark version itself must still be retained (the standard
     incremental-read constraint)."""
-    tv = int(to_version) if to_version is not None else src.current_version()
-    fv = history_watermark(hist)
-    if fv is not None and tv <= fv:
-        return None
-    if to_version is not None:
-        # resolve it: a bogus/future version would otherwise commit a
-        # too-high watermark epoch id, silently no-op-ing every later
-        # advance until the "no longer retained" error — unrecoverable
-        src.snapshot(tv)
-    # src schema evolution since create/last advance: mirror added
-    # columns onto the history table (field-id evolution, no rewrite).
-    # Re-check the meta-name clash create_history_table enforces: a
-    # later-added src column named _live/_valid_from/… would otherwise
-    # be skipped here (hist already has the name) and then silently
-    # OVERWRITTEN by the maintainer's own stamp below.
+
+    def merge(epoch_id: str, rows: DataFrame) -> MergeResult:
+        events = rows.withColumn(OP_COL, F.lit(OP_UPDATE))
+        return merge_apply(hist, events, epoch_id=epoch_id, mode=mode)
+
+    def bootstrap(epoch_id: str, tv: int) -> MergeResult:
+        _mirror_columns(src, hist)
+        rows = history_rows(src, to_version=tv)
+        return merge(epoch_id, rows.withColumn("_ord", F.lit(int(tv))))
+
+    def interval(epoch_id: str, fv: int, tv: int) -> MergeResult:
+        _mirror_columns(src, hist)
+        return merge(epoch_id, _interval_rows(src, hist, fv, tv))
+
+    return interval_step(
+        src, hist, _EPOCH_PREFIX, bootstrap, interval, to_version=to_version
+    )
+
+
+def _mirror_columns(src: LakeTable, hist: LakeTable) -> None:
+    """src schema evolution since create/last advance: mirror added
+    columns onto the history table (field-id evolution, no rewrite).
+    Re-check the meta-name clash create_history_table enforces: a
+    later-added src column named _live/_valid_from/… would otherwise
+    be skipped here (hist already has the name) and then silently
+    OVERWRITTEN by the maintainer's own stamp."""
     hist_cols = set(hist.read().columns)
     for f in src.read().schema.fields:
         if f.name in _HIST_META:
@@ -271,21 +287,12 @@ def advance_history(
             )
         if f.name not in hist_cols:
             hist.add_column(f.name, f.dataType.simpleString())
-    if fv is None:
-        if not src.snapshot(tv).files:
-            return None  # nothing past create
-        epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
-        if epoch_id in hist.snapshot().applied_epochs:
-            return None
-        events = (
-            history_rows(src, to_version=tv)
-            .withColumn("_ord", F.lit(int(tv)))
-            .withColumn(OP_COL, F.lit(OP_UPDATE))
-        )
-        return merge_apply(hist, events, epoch_id=epoch_id, mode=mode)
-    epoch_id = f"{_EPOCH_PREFIX}{fv}-{tv}"
-    if epoch_id in hist.snapshot().applied_epochs:
-        return None
+
+
+def _interval_rows(src, hist, fv, tv) -> DataFrame:
+    """History rows of src's interval ``(fv, tv]``: a new open row per
+    retained version's net change, and each affected key's
+    previously-current row closed."""
     vs = [v for v in src.versions() if fv <= v <= tv]
     if not vs or vs[0] != fv:
         raise ValueError(
@@ -295,18 +302,7 @@ def advance_history(
             "than the maintainer advances)"
         )
     keys = src.snapshot().key_columns
-    parts = []
-    for prev, cur in zip(vs, vs[1:]):
-        ch = src.read_changes(prev, cur)
-        parts.append(
-            ch.withColumn("_live", F.col("change_type") != "delete")
-            .drop("change_type")
-            .withColumn("_valid_from", F.lit(_stamp(src, cur)))
-            .withColumn("_commit_version", F.lit(cur))
-        )
-    new = parts[0]
-    for p in parts[1:]:
-        new = new.unionByName(p, allowMissingColumns=True)
+    new = _version_changes(src, vs)
     # each affected key's current row gets re-opened into the closure
     # window; the MERGE's own bucket pruning bounds the rewrite and
     # this read to the buckets the changed keys hash into
@@ -331,13 +327,11 @@ def advance_history(
         .drop("_valid_to", "_ord")
     )
     w = Window.partitionBy(*keys).orderBy(F.col("_commit_version"))
-    events = (
+    return (
         prev_cur.unionByName(new, allowMissingColumns=True)
         .withColumn("_valid_to", F.lead("_valid_from").over(w))
         .withColumn("_ord", F.lit(int(tv)))
-        .withColumn(OP_COL, F.lit(OP_UPDATE))
     )
-    return merge_apply(hist, events, epoch_id=epoch_id, mode=mode)
 
 
 def history_surface(src: LakeTable, hist: LakeTable, **advance_kw):

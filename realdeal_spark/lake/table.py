@@ -37,7 +37,7 @@ import re
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2334,14 +2334,51 @@ class LakeTable:
 
 def interval_watermark(table: "LakeTable", prefix: str) -> int | None:
     """Highest ``<to>`` among the table's applied epoch ids of the
-    form ``f"{prefix}<from>-<to>"`` — the shared in-band watermark
-    recovery every interval-driven maintainer (replica, value index,
-    dedup index, SCD2 history) uses for checkpoint-free resume.  The
-    id format is load-bearing for exactly-once: change it here and in
-    the emitters together.  None if no such epoch was ever applied."""
+    form ``f"{prefix}<from>-<to>"`` — the in-band watermark every
+    interval-driven surface resumes from, no side checkpoint needed.
+    :func:`interval_step` is the only writer of these ids, so the
+    format lives in this module alone.  None if no such epoch was
+    ever applied."""
     hi: int | None = None
     for eid in table.snapshot().applied_epochs:
         if eid.startswith(prefix):
             to_v = int(eid.rsplit("-", 1)[1])
             hi = to_v if hi is None else max(hi, to_v)
     return hi
+
+
+def interval_step(
+    src: "LakeTable",
+    dst: "LakeTable",
+    prefix: str,
+    bootstrap: Callable[[str, int], Any],
+    interval: Callable[[str, int, int], Any],
+    to_version: int | None = None,
+    from_version: int | None = None,
+) -> Any:
+    """One exactly-once step of a surface ``dst`` kept current from
+    ``src``: pick the interval and its epoch id, then run the
+    surface's body, which commits ``dst`` under that id.
+
+    - no watermark yet: ``bootstrap(id, to)`` reads the src snapshot
+      at ``to`` — skipped, with no commit, if it holds no files;
+    - otherwise ``interval(id, from, to)`` applies ``(from, to]``
+      from the watermark, or from ``from_version`` when given (the
+      body's feed read then resolves both ends).
+
+    ``to_version`` defaults to src's current version; an explicit one
+    must resolve.  Ids read ``<prefix><from>-<to>`` (a bootstrap's
+    ``from`` is the earliest retained version), so a target at or
+    below the watermark — a replay — is a no-op that reaches no body."""
+    wm = interval_watermark(dst, prefix)
+    fv = wm if from_version is None else int(from_version)
+    tv = src.current_version() if to_version is None else int(to_version)
+    if any(v is not None and tv <= v for v in (wm, fv)):
+        return None
+    if fv is None:
+        if not src.snapshot(tv).files:
+            return None  # nothing past create
+        return bootstrap(f"{prefix}{src.versions()[0]}-{tv}", tv)
+    if from_version is None and to_version is not None:
+        src.snapshot(tv)  # a bogus target would commit a too-high watermark
+    return interval(f"{prefix}{fv}-{tv}", fv, tv)

@@ -45,7 +45,7 @@ from realdeal_spark.lake.merge import (
     MergeResult,
     merge_apply,
 )
-from realdeal_spark.lake.table import LakeTable, interval_watermark
+from realdeal_spark.lake.table import LakeTable, interval_step, interval_watermark
 
 _EPOCH_PREFIX = "valueindex:"
 
@@ -109,19 +109,11 @@ def value_index_watermark(idx: LakeTable) -> int | None:
     return interval_watermark(idx, _EPOCH_PREFIX)
 
 
-def advance_interval(
-    src: LakeTable,
-    idx: LakeTable,
-    value_column: str,
-    from_version: int,
-    to_version: int,
-    mode: str = "cow",
-) -> MergeResult | None:
-    """Apply one base interval to the index, exactly once.
-
-    The preimage side of the feed supplies each changed key's OLD
-    value; the index events are then a pure column shuffle of the
-    feed — no base-table read:
+def _step(src, idx, value_column, mode, **span) -> MergeResult | None:
+    """One exactly-once step.  Each change row, joined with its key's
+    OLD value (the feed's pre-image; none in a bootstrap, which reads
+    the base snapshot as all upserts), becomes index events — a pure
+    column shuffle, no base-table read:
 
     - net upsert with a non-null value  → index upsert of
       ``(new_value, key)``;
@@ -131,38 +123,64 @@ def advance_interval(
     Both ride the current row's order tuple, which is >= the old
     entry's by the base table's own out-of-order protection — so a
     replayed or re-chopped interval reconverges (tested)."""
-    if int(to_version) <= int(from_version):
-        return None
-    epoch_id = f"{_EPOCH_PREFIX}{int(from_version)}-{int(to_version)}"
-    if epoch_id in idx.snapshot().applied_epochs:
-        return None
-    keys, orders, _ = _base_columns(src)
-    ch = src.read_changes(from_version, to_version, include_preimage=True)
-    cur = ch.where(F.col("change_type") != "update_preimage")
-    pre = ch.where(F.col("change_type") == "update_preimage").select(
-        *keys, F.col(value_column).alias("_old_value")
-    )
-    j = cur.join(pre, on=keys, how="left")
-    ups = j.where(
-        (F.col("change_type") == "upsert")
-        & F.col(value_column).isNotNull()
-    ).select(
-        value_column, *keys, *orders, F.lit(OP_UPDATE).alias(OP_COL)
-    )
-    dels = j.where(
-        F.col("_old_value").isNotNull()
-        & (
-            (F.col("change_type") == "delete")
-            | ~F.col(value_column).eqNullSafe(F.col("_old_value"))
+    keys, orders, types = _base_columns(src)
+
+    def apply(epoch_id, j):
+        ups = j.where(
+            (F.col("change_type") == "upsert")
+            & F.col(value_column).isNotNull()
+        ).select(
+            value_column, *keys, *orders, F.lit(OP_UPDATE).alias(OP_COL)
         )
-    ).select(
-        F.col("_old_value").alias(value_column),
-        *keys,
-        *orders,
-        F.lit(OP_DELETE).alias(OP_COL),
-    )
-    return merge_apply(
-        idx, ups.unionByName(dels), epoch_id=epoch_id, mode=mode
+        dels = j.where(
+            F.col("_old_value").isNotNull()
+            & (
+                (F.col("change_type") == "delete")
+                | ~F.col(value_column).eqNullSafe(F.col("_old_value"))
+            )
+        ).select(
+            F.col("_old_value").alias(value_column),
+            *keys,
+            *orders,
+            F.lit(OP_DELETE).alias(OP_COL),
+        )
+        return merge_apply(
+            idx, ups.unionByName(dels), epoch_id=epoch_id, mode=mode
+        )
+
+    def bootstrap(epoch_id, tv):
+        rows = src.read(version=tv).select(
+            "*",
+            F.lit("upsert").alias("change_type"),
+            F.lit(None).cast(types[value_column]).alias("_old_value"),
+        )
+        return apply(epoch_id, rows)
+
+    def interval(epoch_id, fv, tv):
+        ch = src.read_changes(fv, tv, include_preimage=True)
+        cur = ch.where(F.col("change_type") != "update_preimage")
+        pre = ch.where(F.col("change_type") == "update_preimage").select(
+            *keys, F.col(value_column).alias("_old_value")
+        )
+        return apply(epoch_id, cur.join(pre, on=keys, how="left"))
+
+    return interval_step(src, idx, _EPOCH_PREFIX, bootstrap, interval, **span)
+
+
+def advance_interval(
+    src: LakeTable,
+    idx: LakeTable,
+    value_column: str,
+    from_version: int,
+    to_version: int,
+    mode: str = "cow",
+) -> MergeResult | None:
+    """Apply one base interval ``(from_version, to_version]`` to the
+    index through the changes feed, exactly once (epoch id
+    ``valueindex:<from>-<to>``; a replay is a metadata no-op)."""
+    return _step(
+        src, idx, value_column, mode,
+        from_version=from_version, to_version=to_version,
     )
 
 
@@ -177,38 +195,18 @@ def advance_value_index(
     (default: the base's current version) in one interval.
 
     First advance (watermark None) **bootstraps from the base
-    snapshot**: an empty index needs no pre-images and no per-version
-    diffing — every live row at ``to_version`` is simply an upsert of
-    ``(value, key)`` riding its own order tuple, so the bootstrap is
-    ONE pruned scan of the base instead of a changes-feed replay of
-    the whole history (the 2 M-key table's 13-version feed replay
-    cost 428 s, BENCH_LOOKUP.md round 4; the snapshot path replaces
-    it).  It is also *complete* under snapshot expiry: the feed over
-    (earliest-retained, v] misses rows that predate the earliest
-    retained snapshot and never changed; the snapshot read cannot.
-    The bootstrap skips the feed's no-op deletes (against an empty
-    index they only mint tombstones) and its epoch id spans
-    (earliest-retained, v] like a feed interval, so the watermark and
-    every later advance are the same as for a feed-seeded index.
-    Steady state: O(changes) intervals via the feed."""
-    fv = value_index_watermark(idx)
-    tv = int(to_version) if to_version is not None else src.current_version()
-    if fv is not None:
-        return advance_interval(src, idx, value_column, fv, tv, mode=mode)
-    if not src.snapshot(tv).files:
-        return None  # nothing past create
-    epoch_id = f"{_EPOCH_PREFIX}{src.versions()[0]}-{tv}"
-    if epoch_id in idx.snapshot().applied_epochs:
-        return None
-    keys, orders, _ = _base_columns(src)
-    rows = (
-        src.read(version=tv)
-        .where(F.col(value_column).isNotNull())
-        .select(
-            value_column, *keys, *orders, F.lit(OP_UPDATE).alias(OP_COL)
-        )
-    )
-    return merge_apply(idx, rows, epoch_id=epoch_id, mode=mode)
+    snapshot**: ONE pruned scan of the base instead of a changes-feed
+    replay of the whole history (the 2 M-key table's 13-version feed
+    replay cost 428 s, BENCH_LOOKUP.md round 4; the snapshot path
+    replaces it).  It is also *complete* under snapshot expiry: the
+    feed over (earliest-retained, v] misses rows that predate the
+    earliest retained snapshot and never changed; the snapshot read
+    cannot.  Its epoch id spans (earliest-retained, v] like a feed
+    interval, so the watermark and every later advance are the same
+    as for a feed-seeded index; it skips the feed's no-op deletes
+    (against an empty index they only mint tombstones).  Steady
+    state: O(changes) intervals via the feed."""
+    return _step(src, idx, value_column, mode, to_version=to_version)
 
 
 def value_index_surface(

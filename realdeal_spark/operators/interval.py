@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _CELL = "__rj_cell"
 
@@ -113,12 +114,18 @@ def range_join(
     p_ = lambda c: F.col(f"__rj_p.{c}")  # noqa: E731
     i_ = lambda c: F.col(f"__rj_i.{c}")  # noqa: E731
     cond = [p_(_CELL) == i_(_CELL)] + [p_(c) == i_(c) for c in on]
-    # refine on the SAME double domain the grid cells use — comparing
-    # the raw columns would order string-typed numerics
-    # lexicographically and disagree with the cell assignment
-    refine = (
-        i_(lo_col).cast("double") <= p_(point_col).cast("double")
-    ) & (p_(point_col).cast("double") <= i_(hi_col).cast("double"))
+    # refine numeric sides in their own type: the double cast rounds
+    # bigint/decimal values past 2^53, which the cells tolerate (the
+    # rounding is monotone, so a match never leaves its cell range) but
+    # an exact bound must not.  A string-typed side refines on the
+    # grid's double domain instead — raw strings order lexicographically.
+    sides = [points.schema[point_col], *(intervals.schema[c] for c in (lo_col, hi_col))]
+    stringy = any(isinstance(f.dataType, T.StringType) for f in sides)
+    lo_, pt_, hi_ = (
+        c.cast("double") if stringy else c
+        for c in (i_(lo_col), p_(point_col), i_(hi_col))
+    )
+    refine = (lo_ <= pt_) & (pt_ <= hi_)
     joined = pt.join(iv, on=[*cond, refine], how=how)
     return joined.select(
         *[p_(c) for c in points.columns],

@@ -51,6 +51,7 @@ since my last run" subscription is the Spark-first recast.
 
 from __future__ import annotations
 
+import logging
 from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +59,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 _FORMAT_NAME = "lake_changes"
+_log = logging.getLogger(__name__)
 
 # descriptor schema: one row per micro-batch, metadata-sized
 _SCHEMA_DDL = "from_version bigint, to_version bigint"
@@ -144,6 +146,12 @@ class LakeChangesStreamReader(SimpleDataSourceStreamReader):
             to_v = max(inside) if inside else min(
                 v for v in vs if v > from_v
             )
+            if to_v > cap:
+                _log.warning(
+                    "lake_changes %s: batch v%d -> v%d exceeds "
+                    "maxVersionsPerTrigger=%d (the versions inside it "
+                    "were expired)", self.path, from_v, to_v, self.max_versions,
+                )
         return iter([(from_v, to_v)]), {"version": to_v}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
@@ -258,9 +266,8 @@ class Surface(NamedTuple):
     """A maintained surface: a derived store kept current from one
     LakeTable's changes feed.  Any object with these three members
     works with :func:`stream_maintain` / :func:`maintainer_lag`;
-    ``RollupMaintainer`` and ``JoinViewMaintainer`` implement them
-    directly, the function-backed surfaces get one from their
-    module's ``*_surface`` factory.
+    ``JoinViewMaintainer`` implements them directly, every other
+    surface gets one from its module's ``*_surface`` factory.
 
     - ``source`` — the LakeTable the surface tails;
     - ``watermark()`` — the highest source version the surface

@@ -302,3 +302,10 @@ def test_range_join_string_typed_numerics_match_grid(spark):
     ivs = spark.createDataFrame([("9", "100")], "lo string, hi string")
     got = range_join(pts, ivs, point_col="p", lo_col="lo", hi_col="hi", cell=8.0)
     assert got.count() == 1
+    # bigint sides past 2^53 refine exactly: 2^53 + 1 rounds to the
+    # double 2^53 == hi, yet lies outside [2^53 - 10, 2^53]
+    big = 2**53
+    pts = spark.createDataFrame([(1, big + 1), (2, big - 1)], "pid int, p bigint")
+    ivs = spark.createDataFrame([(big - 10, big)], "lo bigint, hi bigint")
+    got = range_join(pts, ivs, point_col="p", lo_col="lo", hi_col="hi", cell=8.0)
+    assert [r["pid"] for r in got.collect()] == [2]

@@ -11,7 +11,12 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from realdeal_spark.cdc.rollup import Measure, RollupMaintainer, rollup_full
+from realdeal_spark.cdc.rollup import (
+    Measure,
+    create_rollup_table,
+    rollup_full,
+    rollup_surface,
+)
 from realdeal_spark.lake.merge import merge_apply
 from realdeal_spark.lake.table import LakeTable
 from realdeal_spark.streaming.cdf_source import (
@@ -159,46 +164,44 @@ def _norm(df):
 
 def test_stream_maintained_rollup_matches_full(spark, tmp_path):
     t, _ = _seed(spark, tmp_path)
-    m = RollupMaintainer(
-        t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
-    )
-    m.advance()  # bootstrap at v3
+    st = create_rollup_table(t, str(tmp_path / "state"), ["cat"], MEASURES)
+    s = rollup_surface(t, st, ["cat"], MEASURES)
+    s.advance()  # bootstrap at v3
     # two more epochs while the consumer is running
-    q = stream_maintain(m, str(tmp_path / "ckpt"))
+    q = stream_maintain(s, str(tmp_path / "ckpt"))
     merge_apply(t, _ev(spark, [
         (8, "insert", "f", 40, "x", 11.0),
         (9, "update", "c", 41, "x", 13.0),   # cat y -> x
     ]))
     merge_apply(t, _ev(spark, [(10, "delete", "a", 42, None, None)]))
     _drain(q)
-    assert m.watermark() == t.current_version()
-    assert _norm(m.advance()) == _norm(
+    assert s.watermark() == t.current_version()
+    assert _norm(st.read()) == _norm(
         rollup_full(t, ["cat"], MEASURES)
     )
 
 
 def test_stream_maintained_rollup_restart_is_idempotent(spark, tmp_path):
     t, _ = _seed(spark, tmp_path)
-    m = RollupMaintainer(
-        t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
-    )
-    m.advance()
+    sd = str(tmp_path / "state")
+    st = create_rollup_table(t, sd, ["cat"], MEASURES)
+    s = rollup_surface(t, st, ["cat"], MEASURES)
+    s.advance()
     ckpt = str(tmp_path / "ckpt")
-    q = stream_maintain(m, ckpt)
+    q = stream_maintain(s, ckpt)
     merge_apply(t, _ev(spark, [(11, "insert", "g", 50, "y", 17.0)]))
     _drain(q)
     v_after = t.current_version()
-    assert m.watermark() == v_after
-    # restart with a FRESH maintainer over the same state dir and the
+    assert s.watermark() == v_after
+    # restart with a FRESH surface over the same state table and the
     # same checkpoint: nothing new to do, state must not regress
-    m2 = RollupMaintainer(
-        t, ["cat"], MEASURES, state_dir=str(tmp_path / "state")
-    )
-    q2 = stream_maintain(m2, ckpt)
+    st2 = LakeTable(spark, sd)
+    s2 = rollup_surface(t, st2, ["cat"], MEASURES)
+    q2 = stream_maintain(s2, ckpt)
     merge_apply(t, _ev(spark, [(12, "insert", "h", 60, "x", 19.0)]))
     _drain(q2)
-    assert m2.watermark() == t.current_version()
-    assert _norm(m2.advance()) == _norm(
+    assert s2.watermark() == t.current_version()
+    assert _norm(st2.read()) == _norm(
         rollup_full(t, ["cat"], MEASURES)
     )
 
@@ -233,3 +236,24 @@ def test_max_versions_pacing_jumps_expiry_gaps(spark, tmp_path):
     _drain(q)
     # one hop across the gap, landing on the retained head
     assert seen == [(v1, v3)]
+
+
+def test_gap_jump_past_budget_logs_warning(spark, tmp_path, caplog):
+    """A gap-jump past maxVersionsPerTrigger still lands on a retained
+    version, but the oversize batch is logged with both versions."""
+    import logging
+
+    from realdeal_spark.streaming.cdf_source import LakeChangesStreamReader
+
+    t, (v1, v2, v3) = _seed(spark, tmp_path)
+    t.set_tag("base", version=v1)
+    t.expire_snapshots(keep_last=1)
+    reader = LakeChangesStreamReader(
+        {"path": t.root, "maxversionspertrigger": "1"}
+    )
+    with caplog.at_level(logging.WARNING):
+        rows, end = reader.read({"version": v1})
+    assert list(rows) == [(v1, v3)] and end == {"version": v3}
+    msg = " ".join(r.getMessage() for r in caplog.records)
+    assert f"v{v1}" in msg and f"v{v3}" in msg
+    assert "maxVersionsPerTrigger=1" in msg

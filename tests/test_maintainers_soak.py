@@ -9,6 +9,8 @@ join view:
   replica empty and a value index without a watermark);
 - an advance at or below the watermark is a no-op on every surface,
   which restarting a stream off an older checkpoint relies on;
+- a commit that fails mid-advance on any LakeTable-backed surface
+  leaves only orphan files, and the retry reconverges;
 - a processingTime soak: all seven maintainers run while the base
   keeps taking commits; lag returns to zero and every surface equals
   its from-scratch twin."""
@@ -18,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import shutil
 import time as _time
 
 import pytest
@@ -25,9 +28,15 @@ from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.joinview import JoinViewMaintainer, create_join_view
 from realdeal_spark.cdc.replicate import create_replica, replica_surface
-from realdeal_spark.cdc.rollup import Measure, RollupMaintainer, rollup_full
+from realdeal_spark.cdc.rollup import (
+    Measure,
+    create_rollup_table,
+    rollup_full,
+    rollup_surface,
+)
 from realdeal_spark.lake import LakeTable, merge_apply
 from realdeal_spark.lake.dedupidx import create_dedup_index, dedup_index_surface
+from realdeal_spark.lake.inspect import remove_orphan_files
 from realdeal_spark.lake.scd import (
     create_history_table,
     history_rows,
@@ -130,32 +139,48 @@ def _dim(spark, root: str) -> LakeTable:
     return dim
 
 
-def _build(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
-    """(surface, handle): the handle is what the surface persists — its
-    LakeTable, the IVF index dir, or None for the rollup (whose state
-    lives on the maintainer)."""
+def _create(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
+    """What a surface of ``kind`` persists: its LakeTable, or the IVF
+    index dir."""
     if kind == "replica":
-        h = create_replica(src, f"{root}/replica", n_buckets=2)
-        return replica_surface(src, h), h
+        return create_replica(src, f"{root}/replica", n_buckets=2)
     if kind == "rollup":
-        return RollupMaintainer(src, ["lang"], MEASURES), None
+        return create_rollup_table(src, f"{root}/rollup", ["lang"], MEASURES)
     if kind == "ivf":
-        h = f"{root}/ivf"
         build_ivf_index(
-            src.read(), h, n_lists=4, table_version=src.current_version()
+            src.read(), f"{root}/ivf", n_lists=4,
+            table_version=src.current_version(),
         )
-        return ivf_surface(src, h), h
+        return f"{root}/ivf"
     if kind == "value_index":
-        h = create_value_index(src, f"{root}/vidx", "lang", n_buckets=4)
-        return value_index_surface(src, h, "lang"), h
+        return create_value_index(src, f"{root}/vidx", "lang", n_buckets=4)
     if kind == "dedup_index":
-        h = create_dedup_index(src, f"{root}/didx", n_buckets=4)
-        return dedup_index_surface(src, h, **LSH), h
+        return create_dedup_index(src, f"{root}/didx", n_buckets=4)
     if kind == "history":
-        h = create_history_table(src, f"{root}/hist")
-        return history_surface(src, h), h
-    h = create_join_view(src, dim, {"lang": "lang"}, f"{root}/jv")
-    return JoinViewMaintainer(src, dim, h, {"lang": "lang"}), h
+        return create_history_table(src, f"{root}/hist")
+    return create_join_view(src, dim, {"lang": "lang"}, f"{root}/jv")
+
+
+def _surface(kind: str, src: LakeTable, dim: LakeTable | None, h):
+    if kind == "replica":
+        return replica_surface(src, h)
+    if kind == "rollup":
+        return rollup_surface(src, h, ["lang"], MEASURES)
+    if kind == "ivf":
+        return ivf_surface(src, h)
+    if kind == "value_index":
+        return value_index_surface(src, h, "lang")
+    if kind == "dedup_index":
+        return dedup_index_surface(src, h, **LSH)
+    if kind == "history":
+        return history_surface(src, h)
+    return JoinViewMaintainer(src, dim, h, {"lang": "lang"})
+
+
+def _build(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
+    """(surface, handle): a new surface of ``kind`` and its store."""
+    h = _create(kind, src, dim, root)
+    return _surface(kind, src, dim, h), h
 
 
 def _state(t: LakeTable):
@@ -193,7 +218,8 @@ def _scanned(src, langs):
 
 def _rollup_rows(df):
     return sorted(
-        (r["lang"], r["n"], r["sum_v"], r["max_lsn"]) for r in df.collect()
+        ((r["lang"], r["n"], r["sum_v"], r["max_lsn"]) for r in df.collect()),
+        key=repr,  # the null-dim group sorts with the others
     )
 
 
@@ -264,8 +290,6 @@ def base_and_dim(spark, tmp_path_factory):
 
 
 def _content(spark, kind, s, h):
-    if kind == "rollup":
-        return _rollup_rows(s.advance())
     if kind == "ivf":
         return _cells(spark, h)
     return h.current_version()
@@ -278,8 +302,7 @@ def test_advance_at_or_below_watermark_is_noop(
     """After a bootstrap, advancing to any retained version at or
     below the watermark — a replayed interval from an older checkpoint
     — commits nothing on a LakeTable-backed surface and changes
-    neither the state nor the watermark of the rollup or the IVF
-    stamp."""
+    neither the cells nor the watermark of the IVF index."""
     src, dim = base_and_dim
     s, h = _build(kind, src, dim, str(tmp_path))
     s.advance()
@@ -290,6 +313,89 @@ def test_advance_at_or_below_watermark_is_noop(
         s.advance(to_version=t)
     assert s.watermark() == wm
     assert _content(spark, kind, s, h) == before
+
+
+@pytest.fixture(scope="module")
+def null_lang_base(spark, tmp_path_factory):
+    """A base whose lang has a null group at v3 that v3 -> v4 changes:
+    rows leave it, one is deleted from it, one joins it."""
+
+    def ev(rows, null_ids):
+        return _ev(spark, rows).withColumn(
+            "lang",
+            F.when(F.col("vec_id").isin(null_ids), None).otherwise(
+                F.col("lang")
+            ),
+        )
+
+    src = _base(spark, str(tmp_path_factory.mktemp("null_lang")), 9)
+    merge_apply(src, ev([(2, "update", i, 1) for i in range(9)], [0, 1, 2, 3]))
+    merge_apply(
+        src,
+        ev([(3, "update", i, 2) for i in (0, 1, 6)] + [(3, "delete", 2, None)],
+           [6]),
+    )
+    return src
+
+
+def _parquet(t: LakeTable) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), t.root)
+        for d, _, fs in os.walk(os.path.join(t.root, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize(
+    "kind", ["replica", "rollup", "value_index", "dedup_index", "history"]
+)
+def test_crash_mid_advance_retries_to_no_crash_result(
+    spark, tmp_path, null_lang_base, monkeypatch, kind
+):
+    """The surface's commit fails once mid-advance (its files are
+    written, its snapshot is not); the retry converges to the
+    no-crash twin, every retained snapshot reads, and the orphan sweep
+    removes exactly the failed attempt's files.  The interval moves
+    rows in and out of a null lang, which the rollup keeps as a group
+    like any other."""
+    src = null_lang_base
+    twin, twin_h = _build(kind, src, None, str(tmp_path / "twin"))
+    twin.advance(to_version=src.versions()[-2])
+    # the crashing surface starts from a copy of the bootstrapped twin
+    shutil.copytree(twin_h.root, str(tmp_path / "crash"))
+    h = LakeTable(spark, str(tmp_path / "crash"))
+    s = _surface(kind, src, None, h)
+    twin.advance()
+
+    real_commit = LakeTable._commit
+    armed = [True]
+
+    def crash_once(self, snap):
+        if armed[0] and self.root == h.root:
+            armed[0] = False
+            raise RuntimeError("injected crash before the commit")
+        return real_commit(self, snap)
+
+    monkeypatch.setattr(LakeTable, "_commit", crash_once)
+    before = _parquet(h)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        s.advance()
+    debris = _parquet(h) - before
+    assert debris and s.watermark() == src.versions()[-2]
+    s.advance()
+    assert s.watermark() == twin.watermark() == src.current_version()
+    assert sorted(map(repr, h.read().collect())) == sorted(
+        map(repr, twin_h.read().collect())
+    )
+    if kind == "rollup":
+        assert _rollup_rows(h.read()) == _rollup_rows(
+            rollup_full(src, ["lang"], MEASURES)
+        )
+    for v in h.versions():
+        h.read(version=v).collect()
+    swept = remove_orphan_files(h, older_than_s=0)
+    assert set(swept["orphans"]) == debris
 
 
 def test_seven_maintainers_soak_processing_time(spark, tmp_path):
@@ -343,7 +449,7 @@ def test_seven_maintainers_soak_processing_time(spark, tmp_path):
 
     # every maintained surface == its from-scratch twin
     assert _state(built["replica"][1]) == _state(src)
-    assert _rollup_rows(built["rollup"][0].advance()) == _rollup_rows(
+    assert _rollup_rows(built["rollup"][1].read()) == _rollup_rows(
         rollup_full(src, ["lang"], MEASURES)
     )
     ivf = built["ivf"][1]

@@ -336,44 +336,60 @@ def test_rollup_minmax_extreme_hit_triggers_rescan_only_for_hit_group(
 
 
 def test_rollup_maintainer_persists_and_resumes(spark, tmp_path):
-    """The standing-consumer shape: advance() after each epoch, state
-    persisted per table version; a RESTARTED maintainer resumes from
-    the persisted state and only advances over the new epochs."""
-    from realdeal_spark.cdc.rollup import RollupMaintainer
+    """The standing-consumer shape: advance_rollup after each epoch,
+    state committed to its own LakeTable; a RESTARTED consumer (a
+    fresh handle on the same root) resumes from the committed state
+    and only advances over the new epochs."""
+    from realdeal_spark.cdc.rollup import (
+        advance_rollup,
+        create_rollup_table,
+        rollup_watermark,
+    )
 
     t = _mk(spark, tmp_path)
     sd = str(tmp_path / "rollup_state")
-    m = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
+    st = create_rollup_table(t, sd, ["cat"], MEASURES)
 
     merge_apply(t, _ev(spark, [
         (1, "insert", "a", 10, "x", 1.0), (2, "insert", "b", 11, "y", 2.0),
     ]))
-    s1 = m.advance()
-    assert m.watermark() == t.current_version()
-    assert _rows(s1) == _rows(rollup_full(t, ["cat"], MEASURES))
-    # idempotent advance: same version → same frame, no work
-    assert m.advance() is s1
+    assert advance_rollup(t, st, ["cat"], MEASURES) is not None
+    assert rollup_watermark(st) == t.current_version()
+    assert _rows(st.read()) == _rows(rollup_full(t, ["cat"], MEASURES))
+    # idempotent advance: same version → no new state snapshot committed
+    v_state = st.current_version()
+    assert advance_rollup(t, st, ["cat"], MEASURES) is None
+    assert st.current_version() == v_state
 
     merge_apply(t, _ev(spark, [
         (3, "update", "a", 20, "y", 9.0), (4, "insert", "c", 21, "x", 3.0),
     ]))
-    m.advance()
+    advance_rollup(t, st, ["cat"], MEASURES)
 
-    # ---- restart: a fresh maintainer resumes from disk
-    m2 = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
-    assert m2.watermark() == t.current_version()
+    # ---- restart: a fresh handle resumes from the committed state
+    st2 = LakeTable(spark, sd)
+    v_prev = rollup_watermark(st2)
+    assert v_prev == t.current_version()
     merge_apply(t, _ev(spark, [(5, "delete", "b", 30, None, None)]))
-    s3 = m2.advance()
-    assert _rows(s3) == _rows(rollup_full(t, ["cat"], MEASURES))
+    advance_rollup(t, st2, ["cat"], MEASURES)
+    # one interval over the new epoch only, not a re-bootstrap
+    assert st2.snapshot().applied_epochs[-1] == (
+        f"rollup:{v_prev}-{t.current_version()}"
+    )
+    assert _rows(st2.read()) == _rows(rollup_full(t, ["cat"], MEASURES))
 
 
 def test_rollup_maintainer_rides_applier_epochs(spark, tmp_path):
     """End-to-end standing-consumer composition: the applier's
-    per-epoch report_sink hook drives RollupMaintainer.advance, so
-    the aggregate tracks the table epoch-by-epoch with no new API."""
+    per-epoch report_sink hook drives advance_rollup, so the aggregate
+    tracks the table epoch-by-epoch with no new API."""
     from realdeal_spark.cdc.apply import CdcApplier
     from realdeal_spark.cdc.events import generate_change_events
-    from realdeal_spark.cdc.rollup import RollupMaintainer
+    from realdeal_spark.cdc.rollup import (
+        advance_rollup,
+        create_rollup_table,
+        rollup_watermark,
+    )
     from realdeal_spark.lake.table import LakeTable
 
     t = LakeTable.create(
@@ -382,26 +398,23 @@ def test_rollup_maintainer_rides_applier_epochs(spark, tmp_path):
         "lang string",
         ["url"], ["warc_ts", "lsn"], n_buckets=4, soft_delete=True,
     )
-    m = RollupMaintainer(
-        t, ["lang"],
-        [Measure("n_pages", "count")],
-        state_dir=str(tmp_path / "roll"),
-    )
+    measures = [Measure("n_pages", "count")]
+    st = create_rollup_table(t, str(tmp_path / "roll"), ["lang"], measures)
     seen_versions = []
-    applier = CdcApplier(
-        t,
-        report_sink=lambda r: seen_versions.append(
-            (r.snapshot_version, m.advance().count())
-        ),
-    )
+
+    def sink(r):
+        advance_rollup(t, st, ["lang"], measures)
+        seen_versions.append((r.snapshot_version, st.read().count()))
+
+    applier = CdcApplier(t, report_sink=sink)
     ev = generate_change_events(
         spark, n_events=400, n_urls=80, delete_percent=10, ooo_percent=10
     )
     applier.run(ev, epoch_size=150)
     assert len(seen_versions) == 3  # one advance per epoch
-    assert m.watermark() == t.current_version()
-    assert _lang_rows(m.advance()) == _lang_rows(
-        rollup_full(t, ["lang"], [Measure("n_pages", "count")])
+    assert rollup_watermark(st) == t.current_version()
+    assert _lang_rows(st.read()) == _lang_rows(
+        rollup_full(t, ["lang"], measures)
     )
 
 
@@ -410,21 +423,21 @@ def _lang_rows(df):
 
 
 def test_rollup_maintainer_bootstraps_after_expired_base(spark, tmp_path):
-    """If the persisted base snapshot was expired, the maintainer
+    """If the committed state's base snapshot was expired, the advance
     falls back to a full bootstrap instead of failing."""
-    from realdeal_spark.cdc.rollup import RollupMaintainer
+    from realdeal_spark.cdc.rollup import advance_rollup, create_rollup_table
 
     t = _mk(spark, tmp_path)
     sd = str(tmp_path / "rollup_state")
-    m = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
+    st = create_rollup_table(t, sd, ["cat"], MEASURES)
     merge_apply(t, _ev(spark, [(1, "insert", "a", 10, "x", 1.0)]))
-    m.advance()
+    advance_rollup(t, st, ["cat"], MEASURES)
     merge_apply(t, _ev(spark, [(2, "insert", "b", 11, "y", 2.0)]))
     merge_apply(t, _ev(spark, [(3, "insert", "c", 12, "y", 4.0)]))
     t.expire_snapshots(keep_last=1)
-    m2 = RollupMaintainer(t, ["cat"], MEASURES, state_dir=sd)
-    s = m2.advance()
-    assert _rows(s) == _rows(rollup_full(t, ["cat"], MEASURES))
+    st2 = LakeTable(spark, sd)
+    advance_rollup(t, st2, ["cat"], MEASURES)
+    assert _rows(st2.read()) == _rows(rollup_full(t, ["cat"], MEASURES))
 
 
 # ------------------------------------------------------------------ ndv (HLL)
@@ -550,9 +563,10 @@ def test_rollup_ndv_multi_epoch_chain(spark, tmp_path):
 
 
 def test_rollup_ndv_maintainer_persists_sketches(spark, tmp_path):
-    """RollupMaintainer carries the hidden sketch columns through its
-    parquet state dir: a restarted maintainer resumes and stays exact."""
-    from realdeal_spark.cdc.rollup import RollupMaintainer
+    """The rollup state table carries the hidden sketch columns: a
+    restarted consumer resumes from the committed state and stays
+    exact."""
+    from realdeal_spark.cdc.rollup import advance_rollup, create_rollup_table
 
     t = _mk(spark, tmp_path)
     sd = str(tmp_path / "ndv_state")
@@ -560,18 +574,20 @@ def test_rollup_ndv_maintainer_persists_sketches(spark, tmp_path):
         (1, "insert", "a", 10, "x", 1.0),
         (2, "insert", "b", 11, "y", 2.0),
     ]))
-    m = RollupMaintainer(t, ["cat"], MEASURES_NDV, state_dir=sd)
-    m.advance()
+    st = create_rollup_table(t, sd, ["cat"], MEASURES_NDV)
+    advance_rollup(t, st, ["cat"], MEASURES_NDV)
     merge_apply(t, _ev(spark, [
         (3, "update", "a", 20, "x", 3.0),
         (4, "insert", "c", 21, "x", 1.0),
     ]))
-    m.advance()
-    # restart: resume from parquet (sketches must round-trip)
-    m2 = RollupMaintainer(t, ["cat"], MEASURES_NDV, state_dir=sd)
+    advance_rollup(t, st, ["cat"], MEASURES_NDV)
+    # restart: resume from the state table (sketches must round-trip)
+    st2 = LakeTable(spark, sd)
     merge_apply(t, _ev(spark, [(5, "insert", "d", 30, "y", 2.0)]))
-    s = m2.advance()
-    assert _rows_ndv(s) == _rows_ndv(rollup_full(t, ["cat"], MEASURES_NDV))
+    advance_rollup(t, st2, ["cat"], MEASURES_NDV)
+    assert _rows_ndv(st2.read()) == _rows_ndv(
+        rollup_full(t, ["cat"], MEASURES_NDV)
+    )
 
 
 def test_rollup_ndv_validation(spark, tmp_path):
