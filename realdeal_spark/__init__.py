@@ -31,7 +31,8 @@ Layout
 - ``functions`` — scalar column functions (derived metrics, numeric
                   cleanup, key building; reference: realdeal/mortgage.py
                   and spider coercions).
-- ``streaming`` — Structured Streaming wrapper (foreachBatch driver,
+- ``streaming`` — Structured Streaming (``stream_apply``, a
+                  foreachBatch adapter over ``CdcApplier.apply_batch``;
                   per-trigger budget).
 """
 

@@ -1,16 +1,8 @@
 """Epoch admission: strategy resolution + winner-broadcast gating.
 
-Shared by the batch (`cdc.apply.CdcApplier`) and streaming
-(`streaming.stream_apply.StreamingCdcApplier`) appliers so the two
-paths cannot diverge — round-2's batch-side fix (gate the winner
-broadcast on an HLL distinct-key estimate, commit "Gate winner
-broadcast on distinct-key estimate") must hold for a streaming
-micro-batch exactly as for a batch epoch: a large backfill delivered
-as one micro-batch through auto→light conflation would otherwise
-rebuild the unbounded winner broadcast (profiled as a driver stall at
-1.9M winner rows).
-
-Two decisions live here:
+Two decisions, made once per epoch inside
+``cdc.apply.CdcApplier.apply_batch`` whichever caller delivered the
+batch (a grid epoch, a redrive, or a streaming micro-batch):
 
 - :func:`resolve_strategy` — ``"auto"`` conflation picks the
   payload-light strategy for payload-heavy tables.  Payload-heavy
@@ -30,12 +22,20 @@ Two decisions live here:
   broadcast on a big epoch with few keys would reintroduce the
   payload shuffle (profiled: 80M events / 500k urls, >50 min at one
   core without the broadcast) — hence: gate on keys, not events.
+
+The broadcast gate matters most for the largest batches: a backfill
+delivered as one epoch (or one micro-batch) through auto→light
+conflation would otherwise rebuild the unbounded winner broadcast
+(profiled as a driver stall at 1.9M winner rows; commit "Gate winner
+broadcast on distinct-key estimate").
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from realdeal_spark.lake.merge import OP_COL
 
 # Spark schema simpleString prefixes whose width is unbounded (or
 # unbounded-by-schema): a row carrying any of these as payload is
@@ -60,23 +60,21 @@ def resolve_strategy(table, snap, configured: str, batch=None) -> str:
     batch's schema — the epoch that auto-evolves a wide column in
     would otherwise resolve against the still-narrow pre-epoch table
     and shuffle the new payload through max_by's SortAggregate, and
-    the evolving epoch (a backfill) is typically the largest.  The
-    batch schema is driver-side metadata — no job runs.
+    the evolving epoch (a backfill) is typically the largest.  Only
+    the columns the batch would evolve in count: the ``op`` envelope
+    is not payload, and a column the table already has is judged by
+    the table's type.  The batch schema is driver-side metadata — no
+    job runs.
     """
     if configured != "auto":
         return configured
     keyed = set(snap.key_columns) | set(snap.order_columns)
-    heavy = any(
-        _is_wide(f.dataType.simpleString())
-        for f in table.schema(snap).fields
-        if f.name not in keyed
-    )
-    if not heavy and batch is not None:
-        heavy = any(
-            _is_wide(f.dataType.simpleString())
-            for f in batch.schema.fields
-            if f.name not in keyed
-        )
+    schema = table.schema(snap)
+    payload = [f for f in schema.fields if f.name not in keyed]
+    if batch is not None:
+        known = keyed | set(schema.fieldNames()) | {OP_COL}
+        payload += [f for f in batch.schema.fields if f.name not in known]
+    heavy = any(_is_wide(f.dataType.simpleString()) for f in payload)
     return "light" if heavy else "max_by"
 
 

@@ -39,8 +39,8 @@ from realdeal_spark.lake.table import LakeTable
 @dataclass
 class EpochReport:
     epoch_id: str
-    lsn_start: int
-    lsn_end: int  # inclusive
+    lsn_start: int | None  # None for a batch without lsn bounds (a stream batch)
+    lsn_end: int | None  # inclusive
     events_in: int
     conflated: int
     inserted: int
@@ -67,6 +67,13 @@ class EpochReport:
 
 class CdcApplier:
     """Drives epochs of a change log into a LakeTable.
+
+    ``apply_batch`` is the one epoch body, and every option below
+    applies to all three of its callers: ``run``/``apply_epoch``
+    (lsn-grid epochs of a batch log), ``cdc.quarantine.
+    redrive_quarantine`` (repaired dead letters) and
+    ``streaming.stream_apply`` (the micro-batches of a streaming
+    query).
 
     ``transform`` is the enrichment hook run on the conflated batch
     before the MERGE (e.g. extract.html_to_text adds the ``text``
@@ -180,18 +187,6 @@ class CdcApplier:
     def epoch_id_for(lsn_start: int, lsn_end: int) -> str:
         return f"lsn:{lsn_start}-{lsn_end}"
 
-    def _resolve_strategy(self, snap, batch=None) -> str:
-        """'auto' → 'light' iff the table OR the incoming batch
-        carries an unbounded-width payload column (binary OR
-        string/array/map — an extracted ``text`` column shuffles like
-        an html blob); the batch check catches the epoch that
-        auto-evolves the wide column IN, which would otherwise still
-        conflate via max_by.  Shared with the streaming applier via
-        cdc.admission."""
-        return resolve_strategy(
-            self.table, snap, self.conflate_strategy, batch=batch
-        )
-
     # ------------------------------------------------------------ epochs
 
     def apply_epoch(self, events: DataFrame, lsn_start: int, lsn_end: int) -> EpochReport:
@@ -203,18 +198,27 @@ class CdcApplier:
         batch = events.where(
             (F.col(self.lsn_col) >= lsn_start) & (F.col(self.lsn_col) <= lsn_end)
         )
-        return self._apply_batch(
+        return self.apply_batch(
             batch, self.epoch_id_for(lsn_start, lsn_end), lsn_start, lsn_end
         )
 
-    def _apply_batch(
-        self, batch: DataFrame, epoch_id: str, lsn_start: int, lsn_end: int
+    def apply_batch(
+        self,
+        batch: DataFrame,
+        epoch_id: str,
+        lsn_start: int | None = None,
+        lsn_end: int | None = None,
     ) -> EpochReport:
-        """Apply an already-sliced batch under an explicit epoch id —
-        the shared core of ``apply_epoch`` (grid epochs) and
-        ``cdc.quarantine.redrive_quarantine`` (repaired dead letters
-        under a ``redrive:`` id).  The lsn bounds are informational
-        (lineage/audit); the batch is applied as-is."""
+        """The engine's one epoch body: apply an already-sliced batch
+        under an explicit epoch id — ``lsn:<a>-<b>`` from
+        ``apply_epoch``, ``redrive:<digest>:<n>`` from
+        ``redrive_quarantine``, ``stream:<name>:<batchId>`` from
+        ``stream_apply``.  The lsn bounds are informational: when
+        given they go into the commit summary, so
+        ``lake.inspect.lineage_df`` serves the commit; the batch is
+        applied as-is.  Idempotent: an epoch id already in the
+        snapshot's applied set returns a skipped report carrying that
+        snapshot's version."""
         t0 = time.monotonic()
         from realdeal_spark.lake.merge import _phase_timer
 
@@ -262,7 +266,9 @@ class CdcApplier:
         # twice in one DAG (winner-find + semi join), which would
         # double-count an Observation — there, count on a key-column
         # projection instead (columnar scan of one column).
-        strategy = self._resolve_strategy(snap, batch)
+        strategy = resolve_strategy(
+            self.table, snap, self.conflate_strategy, batch=batch
+        )
         obs = None
         conflate_kwargs = {}
         if strategy == "light":
@@ -307,8 +313,11 @@ class CdcApplier:
             column_merge=self.column_merge,
             epoch_id=epoch_id,
             extra_summary={
-                "lsn_start": lsn_start,
-                "lsn_end": lsn_end,
+                **(
+                    {"lsn_start": lsn_start, "lsn_end": lsn_end}
+                    if lsn_start is not None
+                    else {}
+                ),
                 # in-band audit completeness: the dead-letter count is
                 # known pre-merge, so lineage_df can report it without
                 # a side store
@@ -317,7 +326,7 @@ class CdcApplier:
                 # (the admission pass counts it); the max_by/window
                 # paths learn it from an Observation AFTER the commit,
                 # so their snapshots omit it rather than record a
-                # placeholder — lineage() reports None there, the
+                # placeholder — lineage_df reports None there, the
                 # in-run EpochReport always has the true value
                 **(
                     {"events_in": n_in}
@@ -464,34 +473,3 @@ class CdcApplier:
         if self.report_sink is not None:
             self.report_sink(r)
         return r
-
-    def lineage(self) -> list[dict]:
-        """Offset-range → snapshot-id lineage across this applier's run
-        plus everything recorded in the table's snapshot history.
-
-        ``epoch_id`` distinguishes grid epochs (``lsn:<a>-<b>``) from
-        redrive commits (``redrive:<digest>:<n>``), whose lsn bounds
-        are informational and OVERLAP already-landed grid ranges — an
-        "every offset range landed exactly once" audit must filter on
-        it (``lake.inspect.lineage_df`` applies the same rule)."""
-        out = []
-        prev_applied: set[str] = set()
-        for snap in self.table.history():
-            s = snap.summary
-            applied = set(snap.applied_epochs)
-            new_ids = applied - prev_applied
-            prev_applied = applied
-            if "lsn_start" in s:
-                out.append(
-                    {
-                        "snapshot_version": snap.version,
-                        "epoch_id": next(iter(new_ids)) if len(new_ids) == 1 else None,
-                        "lsn_start": s["lsn_start"],
-                        "lsn_end": s["lsn_end"],
-                        "events_in": s.get("events_in"),
-                        "inserted": s.get("inserted"),
-                        "updated": s.get("updated"),
-                        "deleted": s.get("deleted"),
-                    }
-                )
-        return out

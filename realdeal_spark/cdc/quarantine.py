@@ -251,13 +251,13 @@ def redrive_quarantine(
     if epoch_id in applier.table.snapshot().applied_epochs:
         # crash-retry fast path: the epoch already committed (markers
         # may not have landed) — converge on the markers alone without
-        # re-reading the queue or re-running the repair; _apply_batch
+        # re-reading the queue or re-running the repair; apply_batch
         # would skip anyway, but only after two full DLQ scans
-        report = applier._apply_batch(
+        report = applier.apply_batch(
             applier.table.spark.createDataFrame(
                 [], applier.table.schema().add("op", "string")
             ),
-            epoch_id, 0, 0,
+            epoch_id,
         )
         for d in dirs:
             with open(os.path.join(d, DRAINED_MARKER), "w") as f:
@@ -288,7 +288,7 @@ def redrive_quarantine(
     ).first()
     lo = int(bounds["lo"]) if bounds["lo"] is not None else 0
     hi = int(bounds["hi"]) if bounds["hi"] is not None else lo
-    report = applier._apply_batch(batch, epoch_id, lo, hi)
+    report = applier.apply_batch(batch, epoch_id, lo, hi)
     for d in dirs:
         with open(os.path.join(d, DRAINED_MARKER), "w") as f:
             f.write(epoch_id + "\n")

@@ -137,8 +137,8 @@ def snapshots_df(table) -> DataFrame:
 
 _LINEAGE_SCHEMA = (
     "snapshot_version int, epoch_id string, lsn_start bigint, "
-    "lsn_end bigint, inserted bigint, updated bigint, deleted bigint, "
-    "unchanged bigint, stale bigint, quarantined bigint, "
+    "lsn_end bigint, events_in bigint, inserted bigint, updated bigint, "
+    "deleted bigint, unchanged bigint, stale bigint, quarantined bigint, "
     "operation string"
 )
 
@@ -156,10 +156,13 @@ def lineage_df(table) -> DataFrame:
     prove every offset range landed exactly once, window it for
     throughput-over-time, or reconcile inserted+updated+deleted+
     unchanged+stale+quarantined against the source's per-range counts.
+    ``events_in`` is null where the summary omits it (an epoch whose
+    conflation learned its admission count only after the commit).
+    Only commits with lsn bounds appear: a streaming micro-batch's
+    batchId is not an offset, so stream commits are excluded.
     Expired snapshots drop out (same visibility rule as
-    ``history()``); the applier's in-memory ``lineage()`` /
-    ``reports`` are the superset for the current run (wall times,
-    events/sec)."""
+    ``history()``); the applier's in-memory ``reports`` are the
+    superset for the current run (wall times, events/sec)."""
     rows = []
     for snap in table.history():
         s = snap.summary
@@ -172,6 +175,7 @@ def lineage_df(table) -> DataFrame:
                 epoch if epoch in snap.applied_epochs else None,
                 int(s["lsn_start"]),
                 int(s["lsn_end"]),
+                _opt_int(s.get("events_in")),
                 _opt_int(s.get("inserted")),
                 _opt_int(s.get("updated")),
                 _opt_int(s.get("deleted")),

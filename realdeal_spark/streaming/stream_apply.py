@@ -1,16 +1,19 @@
-"""Structured Streaming driver over the same epoch body as cdc.apply.
+"""Structured Streaming driver: a ``foreachBatch`` adapter over
+``cdc.apply.CdcApplier.apply_batch``.
 
-``readStream`` source → ``foreachBatch(body)`` → MERGE into the lake
-table.  The body is identical to the batch applier's epoch: conflate
-→ transform → merge_apply; only the epoch-id scheme differs (the
-streaming ``batchId`` from the checkpoint instead of an lsn range).
+``readStream`` source → ``foreachBatch`` → the applier's one epoch
+body, so a micro-batch gets everything a batch epoch gets (quarantine,
+strategy resolution + admission gate, conflate, transform, evolve,
+MERGE, MoR compaction, change capture, reports).  Only the epoch id
+differs: ``stream:<name>:<batchId>`` instead of an lsn range, and no
+lsn bounds land in the commit summary (a batchId is not an offset).
 
 Exactly-once composition (SURVEY §2.9 ST2):
 
 - Spark's streaming checkpoint guarantees each source offset range is
   presented as the same ``batchId`` on replay after a crash;
-- merge_apply commits the epoch id ``stream:<name>:<batchId>`` inside
-  the same snapshot as the data;
+- the epoch id ``stream:<name>:<batchId>`` is committed inside the
+  same snapshot as the data;
 - so a replayed batch finds its id already in
   ``Snapshot.applied_epochs`` and becomes a no-op → end-to-end
   exactly-once without a transactional sink API.
@@ -28,206 +31,48 @@ micro-batch engine and the token is the snapshot property.
 
 from __future__ import annotations
 
-import time
-from typing import Callable
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
-
-from realdeal_spark.cdc.admission import admission_stats, resolve_strategy
-from realdeal_spark.cdc.apply import EpochReport
-from realdeal_spark.cdc.conflate import conflate
-from realdeal_spark.lake.merge import MergeResult, merge_apply
-from realdeal_spark.lake.table import LakeTable
+from realdeal_spark.cdc.apply import CdcApplier
 
 
-class StreamingCdcApplier:
-    """Attach the CDC epoch body to any streaming DataFrame.
+def stream_apply(
+    applier: CdcApplier,
+    stream: DataFrame,
+    name: str,
+    checkpoint_dir: str,
+    trigger: dict | None = None,
+):
+    """Apply every micro-batch of ``stream`` through ``applier``;
+    returns the StreamingQuery.
 
     ``name`` must be stable across restarts — it namespaces the epoch
     ids recorded in the table (one logical stream per name; two
-    differently-named streams into one table are allowed and commit
-    independently).
+    differently-named streams into one table commit independently).
+    ``trigger`` kwargs pass through to ``.trigger``:
+    ``{"availableNow": True}`` drains the source then stops (the
+    batch-replay mode of tests and backfills),
+    ``{"processingTime": "1 seconds"}`` tails it.
     """
+    writer = stream.writeStream.foreachBatch(
+        lambda df, batch_id: applier.apply_batch(df, f"stream:{name}:{batch_id}")
+    ).option("checkpointLocation", checkpoint_dir)
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
 
-    def __init__(
-        self,
-        table: LakeTable,
-        name: str,
-        transform: Callable[[DataFrame], DataFrame] | None = None,
-        column_merge: str = "replace",
-        conflate_strategy: str = "auto",
-        auto_evolve: bool = False,
-        renames: dict[str, str] | None = None,
-        merge_mode: str = "cow",
-        report_sink: Callable[[EpochReport], None] | None = None,
-        quarantine_dir: str | None = None,
-    ):
-        self.table = table
-        self.name = name
-        self.quarantine_dir = quarantine_dir
-        self.transform = transform
-        self.column_merge = column_merge
-        self.conflate_strategy = conflate_strategy
-        self.auto_evolve = auto_evolve
-        self.renames = renames
-        self.merge_mode = merge_mode
-        self.report_sink = report_sink
-        self.batch_results: list[tuple[int, MergeResult | None]] = []
-        self.reports: list[EpochReport] = []
-        # (events_in, est_distinct_keys, broadcast_winners) of the most
-        # recent light-path batch — observable by tests and operators.
-        self.last_admission: tuple[int, int, bool] | None = None
 
-    # the foreachBatch body — public so tests can drive it directly
-    # (e.g. to simulate a post-crash replay of the same batchId).
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> MergeResult | None:
-        epoch_id = f"stream:{self.name}:{batch_id}"
-        t0 = time.monotonic()
-        snap = self.table.snapshot()
-        if epoch_id in snap.applied_epochs:
-            self.batch_results.append((batch_id, None))  # replay → skip
-            self._report(batch_id, epoch_id, None, 0, t0, skipped=True)
-            return None
-        n_quarantined = 0
-        if self.quarantine_dir:
-            # dead-letter route, same as the batch applier: bad rows to
-            # parquet under <dir>/<epoch_id> (overwrite → idempotent on
-            # batchId replay), good rows flow on.
-            from realdeal_spark.cdc.quarantine import (
-                split_quarantine,
-                write_quarantine,
-            )
-
-            batch_df, bad = split_quarantine(
-                batch_df, snap.key_columns, snap.order_columns,
-                checks=snap.checks,
-            )
-            n_quarantined = write_quarantine(bad, self.quarantine_dir, epoch_id)
-        # strategy + winner-broadcast admission shared with CdcApplier
-        # (cdc.admission): a huge first/backfill micro-batch through
-        # auto→light must NOT broadcast an over-cap winner set — the
-        # same driver-stall cliff the batch path gates against.
-        strategy = resolve_strategy(
-            self.table, snap, self.conflate_strategy, batch=batch_df
-        )
-        obs = None
-        conflate_kwargs = {}
-        if strategy == "light":
-            n_in, est_keys, bcast = admission_stats(batch_df, snap.key_columns)
-            conflate_kwargs["broadcast_winners"] = bcast
-            if not bcast:
-                # same Bloom pushdown as CdcApplier: shuffle only
-                # probable winners, not the whole micro-batch payload
-                conflate_kwargs["bloom_expected_keys"] = est_keys
-            self.last_admission = (n_in, est_keys, bcast)
-        else:
-            obs = Observation(f"stream-{epoch_id}")
-            batch_df = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
-        src = conflate(
-            batch_df,
-            snap.key_columns,
-            snap.order_columns,
-            strategy=strategy,
-            **conflate_kwargs,
-        )
-        if self.transform is not None:
-            src = self.transform(src)
-        if self.auto_evolve:
-            from realdeal_spark.cdc.evolve import reconcile
-
-            reconcile(self.table, src.schema, self.renames)
-        res = merge_apply(
-            self.table,
-            src,
-            column_merge=self.column_merge,
-            epoch_id=epoch_id,
-            mode=self.merge_mode,
-            extra_summary={"quarantined": n_quarantined},
-        )
-        if obs is not None:
-            try:
-                n_in = int(obs.get["n"])
-            except Exception:
-                n_in = 0  # empty batch: observed node emitted nothing
-        self.batch_results.append((batch_id, res))
-        self._report(batch_id, epoch_id, res, n_in, t0, quarantined=n_quarantined)
-        return res
-
-    def _report(
-        self,
-        batch_id: int,
-        epoch_id: str,
-        res: MergeResult | None,
-        n_in: int,
-        t0: float,
-        skipped: bool = False,
-        quarantined: int = 0,
-    ) -> None:
-        """Per-micro-batch lineage/metrics record (S12 on the streaming
-        path): same EpochReport shape as the batch applier, with the
-        streaming batchId standing in for the lsn range."""
-        r = EpochReport(
-            epoch_id=epoch_id,
-            lsn_start=batch_id,
-            lsn_end=batch_id,
-            events_in=n_in,
-            conflated=(
-                res.inserted + res.updated + res.deleted + res.unchanged + res.stale
-                if res
-                else 0
-            ),
-            inserted=res.inserted if res else 0,
-            updated=res.updated if res else 0,
-            deleted=res.deleted if res else 0,
-            unchanged=res.unchanged if res else 0,
-            stale=res.stale if res else 0,
-            snapshot_version=res.snapshot.version if res and res.snapshot else None,
-            touched_buckets=res.touched_buckets if res else [],
-            rewritten_buckets=res.rewritten_buckets if res else [],
-            wall_ms=(time.monotonic() - t0) * 1000,
-            skipped=skipped,
-            quarantined=quarantined,
-        )
-        self.reports.append(r)
-        if self.report_sink is not None:
-            self.report_sink(r)
-
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-        **trigger_kwargs,
-    ):
-        """Start the streaming query; returns the StreamingQuery.
-
-        ``trigger_available_now`` drains everything currently in the
-        source then stops — the batch-replay mode used by tests and
-        backfills.  For a continuous tail pass
-        ``trigger_available_now=False, processingTime='...'``.
-        """
-        writer = stream.writeStream.foreachBatch(self.apply_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_kwargs:
-            writer = writer.trigger(**trigger_kwargs)
-        return writer.start()
-
-    @staticmethod
-    def file_source(
-        spark: SparkSession,
-        path: str,
-        schema: str,
-        max_files_per_trigger: int = 1,
-    ) -> DataFrame:
-        """Tail a directory of event files (the sandbox's stand-in for
-        a Kafka/binlog source; maxFilesPerTrigger is the per-trigger
-        admission budget, SURVEY ST4/P6)."""
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
+def file_source(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    max_files_per_trigger: int = 1,
+) -> DataFrame:
+    """Tail a directory of event files (the sandbox's stand-in for
+    a Kafka/binlog source; maxFilesPerTrigger is the per-trigger
+    admission budget, SURVEY ST4/P6)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )

@@ -225,15 +225,18 @@ def test_hot_url_skew_salted_window_applier(spark, tmp_path):
 
 
 def test_lineage_records_offsets_to_snapshots(spark, tmp_path):
+    from realdeal_spark.lake.inspect import lineage_df
+
     ev = generate_change_events(spark, n_events=200, n_urls=50)
     t = _mk_table(spark, tmp_path)
     a = CdcApplier(t)
     a.run(ev, epoch_size=70)
-    lin = a.lineage()
+    lin = [r.asDict() for r in lineage_df(t).collect()]
     assert lin, "lineage must not be empty"
     assert all(
         {"snapshot_version", "lsn_start", "lsn_end", "events_in"} <= set(e) for e in lin
     )
+    assert sum(e["events_in"] for e in lin) == 200
     # contiguous, non-overlapping offset ranges
     spans = sorted((e["lsn_start"], e["lsn_end"]) for e in lin)
     for (s1, e1), (s2, _) in zip(spans, spans[1:]):
@@ -241,23 +244,31 @@ def test_lineage_records_offsets_to_snapshots(spark, tmp_path):
 
 
 def test_auto_conflate_strategy_resolution(spark, tmp_path):
-    """auto → light iff a binary payload column exists; flips when
-    schema evolution adds one."""
+    """auto → light iff a wide payload column exists in the table or
+    arrives with the batch; flips when schema evolution adds one."""
+    from realdeal_spark.cdc.admission import resolve_strategy
+
     narrow = LakeTable.create(
         spark, str(tmp_path / "narrow"),
         "url string, warc_ts timestamp_ntz, lsn bigint, score double",
         ["url"], ["warc_ts", "lsn"], 4, soft_delete=True,
     )
-    a = CdcApplier(narrow)
-    assert a._resolve_strategy(narrow.snapshot()) == "max_by"
+    assert resolve_strategy(narrow, narrow.snapshot(), "auto") == "max_by"
+    # the op envelope column is not payload: a narrow batch into a
+    # narrow table stays on max_by; a batch evolving a blob in does not
+    batch = spark.createDataFrame(
+        [(0, "insert", "u1", _ts(0), 1.0)],
+        "lsn bigint, op string, url string, warc_ts timestamp_ntz, score double",
+    )
+    assert resolve_strategy(narrow, narrow.snapshot(), "auto", batch=batch) == "max_by"
+    evolving = batch.withColumn("html", F.lit(b"x"))
+    assert resolve_strategy(narrow, narrow.snapshot(), "auto", batch=evolving) == "light"
     wide = _mk_table(spark, tmp_path)  # has html binary
-    b = CdcApplier(wide)
-    assert b._resolve_strategy(wide.snapshot()) == "light"
+    assert resolve_strategy(wide, wide.snapshot(), "auto") == "light"
     narrow.add_column("html", "binary")
-    assert a._resolve_strategy(narrow.snapshot()) == "light"
+    assert resolve_strategy(narrow, narrow.snapshot(), "auto") == "light"
     # explicit pin wins
-    c = CdcApplier(wide, conflate_strategy="window")
-    assert c._resolve_strategy(wide.snapshot()) == "window"
+    assert resolve_strategy(wide, wide.snapshot(), "window") == "window"
 
 
 def test_epoch_gc_gated_on_rows(spark, tmp_path):

@@ -186,7 +186,7 @@ def test_mor_time_travel_and_expire(spark, tmp_path):
     assert bytes(t.read(version=v1).collect()[0]["html"]).decode() == "A1"
     assert bytes(_state(t)["a"]["html"]).decode() == "A2"
     t.expire_snapshots(keep_last=1)
-    # ADVICE fix: history()/lineage() survive expiration
+    # ADVICE fix: history()/lineage_df survive expiration
     hist = t.history()
     assert [s.version for s in hist] == [t.current_version()]
     assert bytes(_state(t)["a"]["html"]).decode() == "A2"

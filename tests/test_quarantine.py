@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.apply import CdcApplier
 from realdeal_spark.cdc.quarantine import invalidity_expr, split_quarantine
-from realdeal_spark.streaming import StreamingCdcApplier
+from realdeal_spark.streaming import file_source, stream_apply
 
 from tests.test_merge_cdc import _events_df, _mk_table, _ts
 
@@ -103,9 +103,11 @@ def test_streaming_applier_quarantines_per_microbatch(spark, tmp_path):
         )
     table = _mk_table(spark, tmp_path)
     qdir = str(tmp_path / "dlq_stream")
-    applier = StreamingCdcApplier(table, name="dlq", quarantine_dir=qdir)
-    stream = StreamingCdcApplier.file_source(spark, f"{src}/p*", EVENT_SCHEMA_Q)
-    q = applier.start(stream, str(tmp_path / "dlq_ckpt"))
+    applier = CdcApplier(table, quarantine_dir=qdir)
+    stream = file_source(spark, f"{src}/p*", EVENT_SCHEMA_Q)
+    q = stream_apply(
+        applier, stream, "dlq", str(tmp_path / "dlq_ckpt"), {"availableNow": True}
+    )
     assert q.awaitTermination(300), "availableNow drain did not finish"
     assert sum(r.quarantined for r in applier.reports) == 2
     state = {r["url"]: bytes(r["html"]) for r in table.read().collect()}
@@ -284,9 +286,11 @@ def test_redrive_drains_streaming_dlq(spark, tmp_path):
     )
     table = _mk_table(spark, tmp_path)
     qdir = str(tmp_path / "dlq_stream2")
-    applier = StreamingCdcApplier(table, name="dlq2", quarantine_dir=qdir)
-    stream = StreamingCdcApplier.file_source(spark, f"{src}/p*", EVENT_SCHEMA_Q)
-    q = applier.start(stream, str(tmp_path / "dlq_ckpt2"))
+    applier = CdcApplier(table, quarantine_dir=qdir)
+    stream = file_source(spark, f"{src}/p*", EVENT_SCHEMA_Q)
+    q = stream_apply(
+        applier, stream, "dlq2", str(tmp_path / "dlq_ckpt2"), {"availableNow": True}
+    )
     assert q.awaitTermination(300)
     assert {bytes(r["html"]) for r in table.read().collect()} == {b"A"}
     # drain with a batch applier over the same table + queue

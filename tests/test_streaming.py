@@ -5,9 +5,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from realdeal_spark.cdc.apply import CdcApplier
 from realdeal_spark.cdc.events import EVENT_SCHEMA, generate_change_events, naive_replay
+from realdeal_spark.lake.inspect import lineage_df
 from realdeal_spark.lake.table import LakeTable
-from realdeal_spark.streaming import StreamingCdcApplier
+from realdeal_spark.streaming import file_source, stream_apply
+
+DRAIN = {"availableNow": True}
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp_ntz, lsn bigint, html binary, lang string"
@@ -51,14 +55,14 @@ def test_streaming_drain_matches_naive_replay(spark, tmp_path):
     ).parquet(str(src_dir))
 
     table = _mk_table(spark, tmp_path)
-    applier = StreamingCdcApplier(table, name="t1")
-    stream = StreamingCdcApplier.file_source(
+    applier = CdcApplier(table)
+    stream = file_source(
         spark, f"{src_dir}/part=*", EVENT_SCHEMA, max_files_per_trigger=1
     )
-    q = applier.start(stream, str(tmp_path / "ckpt"))
+    q = stream_apply(applier, stream, "t1", str(tmp_path / "ckpt"), DRAIN)
     q.awaitTermination(120)
 
-    assert len([r for _, r in applier.batch_results if r is not None]) >= 2
+    assert len([r for r in applier.reports if not r.skipped]) >= 2
     assert _visible(table) == _expected(events)
 
 
@@ -67,15 +71,17 @@ def test_streaming_restart_processes_nothing_new(spark, tmp_path):
     src_dir = tmp_path / "log"
     events.write.parquet(str(src_dir))
     table = _mk_table(spark, tmp_path)
-    applier = StreamingCdcApplier(table, name="t2")
-    stream = StreamingCdcApplier.file_source(spark, str(src_dir), EVENT_SCHEMA, 10)
-    applier.start(stream, str(tmp_path / "ckpt")).awaitTermination(120)
+    applier = CdcApplier(table)
+    stream = file_source(spark, str(src_dir), EVENT_SCHEMA, 10)
+    q = stream_apply(applier, stream, "t2", str(tmp_path / "ckpt"), DRAIN)
+    q.awaitTermination(120)
     v1 = table.current_version()
 
     # restart with the same checkpoint: no new files → no new batches
-    applier2 = StreamingCdcApplier(table, name="t2")
-    stream2 = StreamingCdcApplier.file_source(spark, str(src_dir), EVENT_SCHEMA, 10)
-    applier2.start(stream2, str(tmp_path / "ckpt")).awaitTermination(120)
+    applier2 = CdcApplier(table)
+    stream2 = file_source(spark, str(src_dir), EVENT_SCHEMA, 10)
+    q = stream_apply(applier2, stream2, "t2", str(tmp_path / "ckpt"), DRAIN)
+    q.awaitTermination(120)
     assert table.current_version() == v1
     assert _visible(table) == _expected(events)
 
@@ -85,12 +91,12 @@ def test_replayed_batch_id_is_noop(spark, tmp_path):
     must commit exactly once."""
     events = generate_change_events(spark, n_events=150, n_urls=25, seed=11)
     table = _mk_table(spark, tmp_path)
-    applier = StreamingCdcApplier(table, name="t3")
-    res1 = applier.apply_batch(events, batch_id=0)
-    assert res1 is not None and res1.snapshot is not None
+    applier = CdcApplier(table)
+    res1 = applier.apply_batch(events, "stream:t3:0")
+    assert not res1.skipped and res1.snapshot_version is not None
     v1 = table.current_version()
-    res2 = applier.apply_batch(events, batch_id=0)  # replay
-    assert res2 is None
+    res2 = applier.apply_batch(events, "stream:t3:0")  # replay
+    assert res2.skipped
     assert table.current_version() == v1
     assert _visible(table) == _expected(events)
 
@@ -100,15 +106,15 @@ def test_streaming_auto_evolve(spark, tmp_path):
     from pyspark.sql import functions as F
 
     table = _mk_table(spark, tmp_path)
-    applier = StreamingCdcApplier(table, name="t4", auto_evolve=True)
+    applier = CdcApplier(table, auto_evolve=True)
     e1 = generate_change_events(spark, n_events=100, n_urls=20, seed=3)
-    applier.apply_batch(e1, batch_id=0)
+    applier.apply_batch(e1, "stream:t4:0")
     e2 = (
         generate_change_events(spark, n_events=100, n_urls=20, seed=4)
         .withColumn("lsn", F.col("lsn") + 100)
         .withColumn("fetch_status", F.lit(200))
     )
-    applier.apply_batch(e2, batch_id=1)
+    applier.apply_batch(e2, "stream:t4:1")
     sch = table.schema()
     assert "fetch_status" in [f.name for f in sch.fields]
     rows = table.read().collect()
@@ -119,33 +125,32 @@ def test_streaming_auto_evolve(spark, tmp_path):
 def test_streaming_winner_broadcast_gated(spark, tmp_path, monkeypatch):
     """A micro-batch whose distinct-key estimate exceeds the broadcast
     cap must run light conflation WITHOUT broadcasting winners (the
-    batch applier's round-2 fix, shared via cdc.admission) — and still
+    round-2 fix, in the one epoch body every caller shares) — and still
     converge to the same state."""
+    import realdeal_spark.cdc.apply as apply_mod
     import realdeal_spark.lake.merge as merge_mod
-    import realdeal_spark.streaming.stream_apply as sa_mod
 
     events = generate_change_events(spark, n_events=300, n_urls=60, seed=5)
     table = _mk_table(spark, tmp_path)
 
     seen_kwargs = []
-    real_conflate = sa_mod.conflate
+    real_conflate = apply_mod.conflate
 
     def spy(df, keys, orders, **kw):
         seen_kwargs.append(dict(kw))
         return real_conflate(df, keys, orders, **kw)
 
-    monkeypatch.setattr(sa_mod, "conflate", spy)
+    monkeypatch.setattr(apply_mod, "conflate", spy)
 
     # cap far below the 60 distinct urls → gate must disable broadcast
     monkeypatch.setattr(merge_mod, "BROADCAST_KEYS_MAX", 10)
-    applier = StreamingCdcApplier(table, name="gate1")
-    res = applier.apply_batch(events, batch_id=0)
-    assert res is not None and res.snapshot is not None
-    assert applier.last_admission is not None
-    n_in, est_keys, bcast = applier.last_admission
-    assert n_in == 300 and est_keys > 10 and bcast is False
+    applier = CdcApplier(table)
+    report = applier.apply_batch(events, "stream:gate1:0")
+    assert not report.skipped and report.snapshot_version is not None
+    assert report.events_in == 300
     assert seen_kwargs[-1]["strategy"] == "light"
     assert seen_kwargs[-1]["broadcast_winners"] is False
+    assert seen_kwargs[-1]["bloom_expected_keys"] > 10
     assert _visible(table) == _expected(events)
 
     # cap back above → broadcast re-enabled on the next batch
@@ -153,8 +158,7 @@ def test_streaming_winner_broadcast_gated(spark, tmp_path, monkeypatch):
     more = generate_change_events(spark, n_events=100, n_urls=20, seed=6).withColumn(
         "lsn", F.col("lsn") + 1000
     )
-    applier.apply_batch(more, batch_id=1)
-    assert applier.last_admission[2] is True
+    applier.apply_batch(more, "stream:gate1:1")
     assert seen_kwargs[-1]["broadcast_winners"] is True
 
 
@@ -195,9 +199,9 @@ def test_streaming_report_sink(spark, tmp_path):
     events = generate_change_events(spark, n_events=200, n_urls=40, seed=12)
     table = _mk_table(spark, tmp_path)
     sunk = []
-    applier = StreamingCdcApplier(table, name="rs1", report_sink=sunk.append)
-    applier.apply_batch(events, batch_id=0)
-    applier.apply_batch(events, batch_id=0)  # replay → skipped report
+    applier = CdcApplier(table, report_sink=sunk.append)
+    applier.apply_batch(events, "stream:rs1:0")
+    applier.apply_batch(events, "stream:rs1:0")  # replay → skipped report
     assert len(sunk) == 2
     first, replay = sunk
     assert first.epoch_id == "stream:rs1:0" and not first.skipped
@@ -206,7 +210,10 @@ def test_streaming_report_sink(spark, tmp_path):
         first.unchanged + first.stale
     )
     assert first.snapshot_version == table.current_version()
-    assert replay.skipped and replay.snapshot_version is None
+    assert replay.skipped and replay.snapshot_version == first.snapshot_version
+    # a batchId is not an lsn offset: stream commits stay out of lineage
+    assert first.lsn_start is None
+    assert lineage_df(table).count() == 0
 
 
 def test_streaming_mor_drain_matches_replay(spark, tmp_path):
@@ -222,11 +229,11 @@ def test_streaming_mor_drain_matches_replay(spark, tmp_path):
     ).parquet(str(src_dir))
 
     table = _mk_table(spark, tmp_path, name="pages_mor")
-    applier = StreamingCdcApplier(table, name="m1", merge_mode="mor")
-    stream = StreamingCdcApplier.file_source(
+    applier = CdcApplier(table, merge_mode="mor")
+    stream = file_source(
         spark, f"{src_dir}/part=*", EVENT_SCHEMA, max_files_per_trigger=1
     )
-    q = applier.start(stream, str(tmp_path / "ckpt_mor"))
+    q = stream_apply(applier, stream, "m1", str(tmp_path / "ckpt_mor"), DRAIN)
     q.awaitTermination(120)
     assert _visible(table) == _expected(events)
     snap = table.snapshot()
@@ -234,7 +241,7 @@ def test_streaming_mor_drain_matches_replay(spark, tmp_path):
     # replay the first batch id → exactly-once no-op
     v = table.current_version()
     batch0 = spark.read.schema(EVENT_SCHEMA).parquet(f"{src_dir}/part=0")
-    assert applier.apply_batch(batch0, 0) is None
+    assert applier.apply_batch(batch0, "stream:m1:0").skipped
     assert table.current_version() == v
 
 
@@ -258,17 +265,14 @@ def test_streaming_soak_processing_time_catches_up(spark, tmp_path):
 
     table = _mk_table(spark, tmp_path, name="pages_soak")
     report_dir = str(tmp_path / "reports")
-    applier = StreamingCdcApplier(
-        table, name="soak1", report_sink=EpochReportSink(report_dir)
-    )
-    stream = StreamingCdcApplier.file_source(
-        spark, src_dir, EVENT_SCHEMA, max_files_per_trigger=4
-    )
-    q = applier.start(
+    applier = CdcApplier(table, report_sink=EpochReportSink(report_dir))
+    stream = file_source(spark, src_dir, EVENT_SCHEMA, max_files_per_trigger=4)
+    q = stream_apply(
+        applier,
         stream,
+        "soak1",
         str(tmp_path / "ckpt_soak"),
-        trigger_available_now=False,
-        processingTime="1 seconds",
+        trigger={"processingTime": "1 seconds"},
     )
     try:
         want = _expected(events)
@@ -564,7 +568,7 @@ def test_suppress_unchanged_stream_matches_batch(spark, tmp_path):
 
 
 def test_suppress_chained_into_streaming_applier(spark, tmp_path):
-    """suppress_unchanged composes in front of StreamingCdcApplier on
+    """suppress_unchanged composes in front of stream_apply on
     the same checkpoint: recrawl no-ops never reach MERGE (events_in
     drops), final payload state is the content-version history, and
     the stored order tuple is the FIRST sighting of each content
@@ -596,12 +600,10 @@ def test_suppress_chained_into_streaming_applier(spark, tmp_path):
         )
 
     table = _mk_table(spark, tmp_path, name="chained")
-    applier = StreamingCdcApplier(
-        table, name="chain", transform=lambda df: df.drop("fp")
-    )
-    stream = StreamingCdcApplier.file_source(spark, f"{src}/p*", SCHEMA)
+    applier = CdcApplier(table, transform=lambda df: df.drop("fp"))
+    stream = file_source(spark, f"{src}/p*", SCHEMA)
     sup = suppress_unchanged(stream, ["url"], ["warc_ts", "lsn"], "fp")
-    q = applier.start(sup, str(tmp_path / "chain_ckpt"))
+    q = stream_apply(applier, sup, "chain", str(tmp_path / "chain_ckpt"), DRAIN)
     assert q.awaitTermination(300), "availableNow drain did not finish"
 
     state = {
