@@ -84,7 +84,10 @@ def create_dedup_index(
     default 64 read 33/64 buckets; at 2048 it reads ≤ 80).  The
     advance's bloom pruning has the same lever: its batch probes
     ``n_keys / n_buckets`` keys per bucket and prunes only while that
-    density stays under ``bloomidx.BLOOM_PROBE_MAX_KEYS_PER_BUCKET``.
+    density stays under ``bloomidx.BLOOM_PROBE_MAX_KEYS_PER_BUCKET``,
+    and only once the touched buckets hold at least
+    ``bloomidx.BLOOM_PROBE_MIN_ROWS`` entries (a smaller index is
+    cheaper to scan than to probe).
     The default 64 is test-scale; a 10^10-document corpus wants
     thousands (buckets are metadata — the cost of more is small
     files, fixed by compaction).

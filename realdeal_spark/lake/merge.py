@@ -533,7 +533,11 @@ def _merge_apply_mor(
 
     src, check_obs = _observe_checks(src, snap.checks)
     src = src.persist(StorageLevel.MEMORY_AND_DISK)
-    touched = sorted(r[0] for r in src.select(_BUCKET_COL).distinct().collect())
+    # one action sizes the batch: the touched buckets and the key
+    # count the bloom-probe gate needs
+    per_bucket = src.groupBy(_BUCKET_COL).count().collect()
+    touched = sorted(r[0] for r in per_bucket)
+    n_src = sum(r[1] for r in per_bucket)
     mark("mor.prep")
     if not touched:
         src.unpersist()
@@ -552,30 +556,30 @@ def _merge_apply_mor(
         # every existing generation of every batch key survives, so
         # the left join below sees the complete target state FOR THE
         # BATCH KEYS (non-batch keys never exit a left join on src).
-        # Between compactions this skips the delta files an epoch's
-        # keys never touched; the probe itself costs one sidecar read
-        # over the touched buckets (metadata-sized next to the scan it
-        # prunes).
+        # The probe pays about six jobs whatever it prunes, so
+        # bloomidx.probe_skip lets it run only where it can win, from
+        # numbers already on the driver: past ~1k keys per touched
+        # bucket every file is bloom-positive (a bulk epoch), and under
+        # BLOOM_PROBE_MIN_ROWS manifest rows in the touched buckets
+        # the plain narrow scan is cheaper than the probe.  Wide
+        # fan-out batches over large buckets (the dedup index: 20 k
+        # band hashes over 64 bh-buckets ≈ 312/bucket of a 64 M-entry
+        # table) pass both and keep their measured pruning win
+        # (BENCH_DEDUPIDX.md).  A skip records its reason.
         bloom_allow = None
         bloom_stats = None
         if snap.key_blooms:
-            # gate on per-bucket key density: past ~1k probed keys per
-            # touched bucket essentially every file is bloom-positive,
-            # so the sidecar scan (O(touched-bucket keys) words —
-            # measured 37 s on a 64 M-entry table) prunes nothing;
-            # bulk epochs take the plain narrow scan instead.  Wide
-            # fan-out batches (e.g. the dedup index: 20 k band hashes
-            # over 64 bh-buckets ≈ 312/bucket) stay under the gate and
-            # keep their measured pruning win (BENCH_DEDUPIDX.md).
             from realdeal_spark.lake import bloomidx
 
-            n_src = src.count()
-            if bloomidx.probe_worthwhile(n_src, snap.n_buckets):
+            bloom_stats = bloomidx.probe_skip(
+                n_src,
+                snap.n_buckets,
+                bloomidx.rows_in_buckets(snap.files, touched),
+            )
+            if bloom_stats is None:
                 _, bloom_allow, bloom_stats, _ = table._lookup_candidates(
                     snap, src.select(*key_cols)
                 )
-            else:
-                bloom_stats = {"skipped_bulk_keys": n_src}
             mark("mor.bloom_probe")
         # narrow current state of the touched buckets (reconciled
         # across any earlier MoR deltas; parquet reads only these

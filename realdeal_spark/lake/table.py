@@ -1309,29 +1309,35 @@ class LakeTable:
         interval."""
         keys, orders = to_snap.key_columns, to_snap.order_columns
         bcols = from_snap.bucket_columns or keys
-        bkts = {
-            r["b"]
-            for r in changed_keys.select(
+        # one action: the touched bucket ids and, per bucket, the key
+        # count the bloom-probe gate reads
+        per_bucket = (
+            changed_keys.groupBy(
                 F.pmod(
                     F.xxhash64(*bcols), F.lit(from_snap.n_buckets)
                 ).cast("int").alias("b")
-            ).distinct().collect()
-        }
+            )
+            .count()
+            .collect()
+        )
+        bkts = {r["b"] for r in per_bucket}
         # key-bloomed old snapshot: tighten the bucket pruning to the
         # per-file sidecar level — an insert-heavy epoch's changed keys
         # mostly did not exist at from_version, so the bloom-positive
         # file set (no false negatives: every file holding a changed
-        # key survives) is far smaller than the touched buckets
+        # key survives) is far smaller than the touched buckets.  The
+        # probe runs only where it can pay (bloomidx.probe_skip): not
+        # for bulk intervals, where every file is bloom-positive, and
+        # not for touched buckets too small to repay its fixed jobs;
+        # the bucket pruning above stands either way
         allow: set[str] | None = None
         if from_snap.key_blooms:
             from realdeal_spark.lake import bloomidx
 
-            # bulk intervals make every file bloom-positive — the
-            # sidecar scan would be pure overhead (bloomidx.
-            # BLOOM_PROBE_MAX_KEYS_PER_BUCKET, a per-touched-bucket
-            # density gate); the bucket pruning above stands
             if bloomidx.probe_worthwhile(
-                changed_keys.count(), from_snap.n_buckets
+                sum(r["count"] for r in per_bucket),
+                from_snap.n_buckets,
+                bloomidx.rows_in_buckets(from_snap.files, bkts),
             ):
                 _, allow, _, _ = self._lookup_candidates(
                     from_snap, changed_keys

@@ -282,10 +282,16 @@ def test_interval_additive_detection_and_skip_equivalence(spark, tmp_path):
     assert _feed(t, v1) == feed_skip  # join path still nets correctly
 
 
-def test_preimage_bloom_pruning_equivalence(spark, tmp_path):
+def test_preimage_bloom_pruning_equivalence(spark, tmp_path, monkeypatch):
     """With key_blooms on the base, the pre-image read prunes to the
     bloom-positive files of the changed keys; the emitted pre-images
-    must be byte-identical to the unbloomed table's."""
+    must be byte-identical to the unbloomed table's.  The floor that
+    skips the probe on small reads is lifted to keep it on the probe
+    path."""
+    from realdeal_spark.lake import bloomidx
+
+    monkeypatch.setattr(bloomidx, "BLOOM_PROBE_MIN_ROWS", 0)
+
     def _pre(table, v_from):
         return {
             r["url"]: (r["lsn"], bytes(r["html"]).decode())

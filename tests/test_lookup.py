@@ -209,10 +209,17 @@ def test_bloom_m_bits_word_aligned():
     assert bloom_m_bits(1_000) >= 1_000 * 16
 
 
-def test_mor_classification_bloom_pruning_converges(spark, tmp_path):
+def test_mor_classification_bloom_pruning_converges(
+    spark, tmp_path, monkeypatch
+):
     """On a key_blooms table the MoR classification read is pruned to
     bloom-positive files; final state must equal the unbloomed
-    table's, and the commit summary must record the pruning."""
+    table's, and the commit summary must record the pruning.  The
+    table is far below the probe's size floor, so the floor is lifted
+    to keep this on the probe path."""
+    from realdeal_spark.lake import bloomidx
+
+    monkeypatch.setattr(bloomidx, "BLOOM_PROBE_MIN_ROWS", 0)
     tb = _mk(spark, tmp_path, "t9", key_blooms=True)
     tp = _mk(spark, tmp_path, "t9p", key_blooms=False)
     epochs = [
@@ -236,9 +243,12 @@ def test_mor_classification_bloom_pruning_converges(spark, tmp_path):
 def test_probe_worthwhile_density_gate():
     """The gate is per-touched-bucket density, not batch total: a wide
     fan-out batch (many buckets) keeps probing, a bulk batch into few
-    buckets skips."""
+    buckets skips.  It also skips when the touched buckets hold fewer
+    rows than the probe's size floor."""
     from realdeal_spark.lake.bloomidx import (
         BLOOM_PROBE_MAX_KEYS_PER_BUCKET as CAP,
+        BLOOM_PROBE_MIN_ROWS as FLOOR,
+        probe_skip,
         probe_worthwhile,
     )
 
@@ -251,6 +261,15 @@ def test_probe_worthwhile_density_gate():
     assert not probe_worthwhile(20_000, 4)
     # batch smaller than the bucket count touches ≤ n_keys buckets
     assert probe_worthwhile(3, 1024)
+    # size floor: too few rows in the touched buckets to repay the probe
+    assert not probe_worthwhile(1, 4, rows=FLOOR - 1)
+    assert probe_skip(1, 4, rows=FLOOR - 1) == {"skipped_small_read": FLOOR - 1}
+    assert probe_worthwhile(1, 4, rows=FLOOR)  # exactly at the floor
+    # unknown row counts (legacy files) leave only the density gate
+    assert probe_worthwhile(CAP * 4, 4, rows=None)
+    # density is checked first: a bulk batch into a small table records
+    # the bulk skip, not the size skip
+    assert probe_skip(20_000, 4, rows=10) == {"skipped_bulk_keys": 20_000}
 
 
 def test_mor_bulk_batch_skips_bloom_probe(spark, tmp_path):
@@ -267,6 +286,55 @@ def test_mor_bulk_batch_skips_bloom_probe(spark, tmp_path):
     assert _rows(tb.read()) == _rows(tp.read())
     stats = tb.snapshot().summary.get("classify_bloom")
     assert stats == {"skipped_bulk_keys": 4700}
+
+
+def test_mor_small_read_skips_bloom_probe(spark, tmp_path):
+    """A MoR epoch into touched buckets below the probe's size floor
+    takes the plain narrow scan: the summary records the skip with the
+    touched buckets' manifest rows, and the state equals the unbloomed
+    twin's."""
+    from realdeal_spark.lake.bloomidx import rows_in_buckets
+
+    tb = _mk(spark, tmp_path, "t11", key_blooms=True)
+    tp = _mk(spark, tmp_path, "t11p", key_blooms=False)
+    epochs = [
+        _batch(spark, 0, 300),
+        _batch(spark, 250, 320, ts_shift=10_000, v=3),
+    ]
+    for i, e in enumerate(epochs):
+        before = tb.snapshot()
+        res = merge_apply(tb, e, mode="mor", epoch_id=f"e{i}")
+        merge_apply(tp, e, mode="mor", epoch_id=f"e{i}")
+    assert _rows(tb.read()) == _rows(tp.read())
+    rows = rows_in_buckets(before.files, res.touched_buckets)
+    assert rows == 300
+    stats = tb.snapshot().summary.get("classify_bloom")
+    assert stats == {"skipped_small_read": rows}
+
+
+def test_sidecar_build_guard_covers_unknown_row_counts(
+    spark, tmp_path, monkeypatch
+):
+    """Entries without a manifest row count take theirs from the
+    parquet footer, so a sidecar build whose path join matches nothing
+    still raises instead of shipping an empty, false-negative
+    sidecar."""
+    from realdeal_spark.lake import bloomidx
+
+    t = _mk(spark, tmp_path, "t12", key_blooms=False)
+    merge_apply(t, _batch(spark, 0, 40), epoch_id="e1")
+    entries = [
+        {"path": fe["path"], "rows": None}
+        for fl in t.snapshot().files.values()
+        for fe in fl
+    ]
+    assert entries
+    monkeypatch.setattr(bloomidx, "_norm_uri", lambda c: F.lit("/nowhere"))
+    with pytest.raises(RuntimeError, match="matched no keys"):
+        bloomidx.build_bloom_sidecar(
+            spark, t.root, entries, ["url"], "_data/x/_bloom"
+        )
+    assert not os.path.exists(os.path.join(t.root, "_data/x/_bloom"))
 
 
 def test_bloom_sidecar_builds_under_relative_root(spark, tmp_path):
