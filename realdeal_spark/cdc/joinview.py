@@ -350,12 +350,10 @@ def advance_join_view(
         # marker so the epoch id (and with it the watermark) still
         # advances; otherwise every later advance re-reads this
         # interval and the feed read stops being O(new changes)
-        snap = view.snapshot()
         res = MergeResult(
-            snapshot=view.commit_file_additions(
-                snap,
-                snap.version + 1,
-                {},
+            snapshot=view.commit(
+                view.snapshot(),
+                "merge-mor",
                 summary={
                     "inserted": 0,
                     "updated": 0,

@@ -34,7 +34,6 @@ zillow_client.py:119-129, lifted to file level).
 from __future__ import annotations
 
 import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -195,9 +194,7 @@ def _empty_batch_result(
         "stale": 0,
         **(extra_summary or {}),
     }
-    snapshot = table.commit_file_additions(
-        snap, snap.version + 1, {}, summary=summary, epoch_id=epoch_id
-    )
+    snapshot = table.commit(snap, "merge-mor", summary=summary, epoch_id=epoch_id)
     return MergeResult(snapshot=snapshot)
 
 
@@ -429,7 +426,6 @@ def merge_apply(
     new_rows = observed.drop("_action").repartition(
         min(max(len(touched), 1), 256), _BUCKET_COL
     )
-    new_version = snap.version + 1
     try:
         # CoW rewrites whole buckets anyway, so keep them in the
         # table's write sort order (order columns, i.e. event time /
@@ -442,16 +438,14 @@ def merge_apply(
         if capture_changes:
             new_files, cdf = table._write_delta(
                 new_rows,
-                new_version,
-                snap.current_schema,
+                snap,
                 sort_by=list(snap.order_columns or []),
                 cdf_col="_cdf",
             )
         else:
             new_files = table._write_delta(
                 new_rows,
-                new_version,
-                snap.current_schema,
+                snap,
                 sort_by=list(snap.order_columns or []),
             )
             cdf = None
@@ -468,16 +462,7 @@ def merge_apply(
         )
         if result.effective_changes + int(m["tomb"]) == 0 and epoch_id is None:
             # pure no-op batch: drop the just-written delta, commit nothing
-            for fl in new_files.values():
-                if fl:
-                    # path = _data/delta-N-x/pb=B[/_cdf=d]/part.parquet —
-                    # remove the whole delta dir (second component)
-                    parts = fl[0]["path"].split(os.sep)
-                    shutil.rmtree(
-                        os.path.join(table.root, parts[0], parts[1]),
-                        ignore_errors=True,
-                    )
-                    break
+            table._discard_delta(new_files)
             return result
         result.rewritten_buckets = sorted(int(b) for b in new_files)
         summary = {
@@ -491,7 +476,8 @@ def merge_apply(
         if cdf is not None:
             summary["cdf"] = cdf
         result.snapshot = table.commit_bucket_replacement(
-            snap, new_version, new_files, touched, summary=summary, epoch_id=epoch_id
+            snap, new_files=new_files, touched_buckets=touched,
+            summary=summary, epoch_id=epoch_id,
         )
         mark("merge.commit")
         return result
@@ -705,7 +691,6 @@ def _merge_apply_mor(
                 "mode='cow' if ties must win"
             )
 
-        new_version = snap.version + 1
         result = MergeResult(
             snapshot=None,
             inserted=m["ins"],
@@ -745,9 +730,7 @@ def _merge_apply_mor(
                 )
                 .repartition(min(max(len(touched), 1), 256), _BUCKET_COL)
             )
-            new_files = table._write_delta(
-                winners, new_version, snap.current_schema, mor=True
-            )
+            new_files = table._write_delta(winners, snap, mor=True)
             mark("mor.write_delta")
         result.rewritten_buckets = sorted(int(b) for b in new_files)
         summary = {
@@ -764,7 +747,7 @@ def _merge_apply_mor(
             **(extra_summary or {}),
         }
         result.snapshot = table.commit_file_additions(
-            snap, new_version, new_files, summary=summary, epoch_id=epoch_id
+            snap, new_files=new_files, summary=summary, epoch_id=epoch_id
         )
         mark("mor.commit")
         return result

@@ -37,7 +37,7 @@ import re
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +54,9 @@ _MANIFESTS = "manifests"
 # in the snapshot JSON (debuggable, zero extra files).  See
 # LakeTable._snap_to_json for why this is the 100-TB metadata lever.
 MANIFEST_SPILL_MIN = 4096
+# how many times LakeTable.commit rebases a files-only commit that
+# keeps losing the version race before it gives up (CommitConflict)
+COMMIT_RETRIES = 5
 _BUCKET_COL = "_bucket"
 _DELETED_COL = "_deleted"
 _PART_DIR_COL = "pb"
@@ -327,11 +330,13 @@ class CommitConflict(Exception):
     """Another writer committed this version first and the commits do
     not commute — the caller must recompute from the latest snapshot.
 
-    Commits that DO commute (MoR file additions vs a concurrent
-    compaction; bucket writes on disjoint bucket sets) are rebased and
-    retried automatically by ``commit_file_additions`` /
-    ``commit_bucket_replacement`` — one ingest applier plus a
-    background ``compact()`` maintenance job must not abort epochs."""
+    :meth:`LakeTable.commit` rebases and retries a files-only commit
+    to the version chain (a MERGE, an append, a publish, a compaction)
+    over commits that DO commute with it — additions vs a concurrent
+    compaction, bucket writes on disjoint bucket sets — so one ingest
+    applier plus a background ``compact()`` maintenance job never
+    aborts epochs.  Metadata commits (schema, checks, ``key_blooms``,
+    ``n_buckets``) and staged commits never rebase: they raise."""
 
 
 class CheckViolation(ValueError):
@@ -456,8 +461,11 @@ class LakeTable:
         snap.bucket_manifests = manifests
         return snap
 
-    def _commit(self, snap: Snapshot) -> None:
-        """Atomic create-only commit of ``v{N}.json`` via hard link."""
+    def _commit(self, snap: Snapshot, stage: str | None = None) -> None:
+        """Atomic create-only write of ``v{N}.json`` — or, with
+        ``stage``, of ``staged-<stage>.json`` — via hard link, so two
+        writers can never land one version or stage one name."""
+        path = self._staged_path(stage) if stage else self._snap_path(snap.version)
         os.makedirs(self._meta_dir(), exist_ok=True)
         # wall-clock commit stamp for TIMESTAMP-AS-OF time travel
         # (version_asof); stamped at write time, so a rebase retry
@@ -471,11 +479,10 @@ class LakeTable:
             f.flush()
             os.fsync(f.fileno())
         try:
-            os.link(tmp, self._snap_path(snap.version))
+            os.link(tmp, path)
         except FileExistsError:
-            raise CommitConflict(
-                f"version {snap.version} already committed at {self.root}"
-            ) from None
+            what = f"staged snapshot {stage!r}" if stage else f"version {snap.version}"
+            raise CommitConflict(f"{what} already exists at {self.root}") from None
         finally:
             os.unlink(tmp)
 
@@ -757,25 +764,20 @@ class LakeTable:
         flag.  Takes effect for every file written from the next
         commit on; existing files stay legacy (always lookup
         candidates) until compaction rewrites them under the flag."""
-        snap = self.snapshot()
-        out = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            files=snap.files,
-            summary={"operation": "set-key-blooms", "enabled": enabled},
-            **snap.child_kwargs(key_blooms=enabled),
+        return self.commit(
+            self.snapshot(),
+            "set-key-blooms",
+            summary={"enabled": enabled},
+            key_blooms=enabled,
         )
-        self._commit(out)
-        return out
 
     # ------------------------------------------------ CHECK constraints
 
-    def _resolve_check(self, snap: Snapshot, name: str, expr_sql: str):
+    def _resolve_check(self, fields: list[dict], name: str, expr_sql: str):
         """Fail fast if the expression doesn't resolve as a boolean
-        over the current schema — a driver-side analysis on an empty
+        over the schema ``fields`` — analysis of an empty
         frame, no job runs."""
-        cur = self._schema_version(snap, snap.current_schema)
-        ddl = ", ".join(f"{f['name']} {f['type']}" for f in cur.fields)
+        ddl = ", ".join(f"{f['name']} {f['type']}" for f in fields)
         probe = self.spark.createDataFrame([], ddl)
         try:
             # analyze the exact violation-counter shape enforcement
@@ -792,12 +794,14 @@ class LakeTable:
                 f"schema as a row-level boolean: {e}"
             ) from e
 
-    def _check_exprs_still_resolve(self, snap: Snapshot) -> None:
+    def _check_exprs_still_resolve(
+        self, checks: dict[str, str], fields: list[dict]
+    ) -> None:
         """Schema evolution guard: refuse a rename/drop that orphans a
         CHECK expression (drop the check first, then evolve)."""
-        for name, expr_sql in snap.checks.items():
+        for name, expr_sql in checks.items():
             try:
-                self._resolve_check(snap, name, expr_sql)
+                self._resolve_check(fields, name, expr_sql)
             except ValueError as e:
                 raise ValueError(
                     f"schema change orphans CHECK constraint {name!r} "
@@ -826,18 +830,14 @@ class LakeTable:
         snap = self.snapshot()
         if name in snap.checks:
             raise ValueError(f"check {name!r} already exists")
-        self._resolve_check(snap, name, expr_sql)
-        out = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            files=snap.files,
-            summary={"operation": "add-check", "check": name},
-            **snap.child_kwargs(
-                checks={**snap.checks, name: expr_sql}
-            ),
+        cur = self._schema_version(snap, snap.current_schema)
+        self._resolve_check(cur.fields, name, expr_sql)
+        return self.commit(
+            snap,
+            "add-check",
+            summary={"check": name},
+            checks={**snap.checks, name: expr_sql},
         )
-        self._commit(out)
-        return out
 
     def drop_check(self, name: str) -> Snapshot:
         """Metadata-only commit removing a CHECK constraint."""
@@ -845,15 +845,9 @@ class LakeTable:
         if name not in snap.checks:
             raise KeyError(f"no check {name!r} at {self.root}")
         checks = {k: v for k, v in snap.checks.items() if k != name}
-        out = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            files=snap.files,
-            summary={"operation": "drop-check", "check": name},
-            **snap.child_kwargs(checks=checks),
+        return self.commit(
+            snap, "drop-check", summary={"check": name}, checks=checks
         )
-        self._commit(out)
-        return out
 
     def _keys_frame(self, snap: Snapshot, keys: Any) -> DataFrame:
         """Normalize lookup input to a DataFrame of the key columns:
@@ -1378,13 +1372,15 @@ class LakeTable:
     def _write_delta(
         self,
         df: DataFrame,
-        version: int,
-        schema_version: int,
+        snap: Snapshot,
         mor: bool = False,
         sort_by: list | None = None,  # str names or Column sort expressions
         cdf_col: str | None = None,
     ) -> Any:
-        """Write a dataframe (with ``_bucket`` col) as one delta dir.
+        """Write a dataframe (with ``_bucket`` col) as one delta dir of
+        the child of ``snap``, the snapshot the caller will commit on
+        (entries carry its current schema version; its ``key_blooms``
+        flag decides the sidecar).
 
         ``cdf_col`` — write-time change capture: partition the write
         additionally by this column (values ``d`` = table data,
@@ -1409,11 +1405,13 @@ class LakeTable:
 
         The directory name carries a random suffix so two writers
         racing toward the same target version (ingest epoch vs
-        background compaction — see :meth:`_rebase_base`) never
-        collide on disk; losers either rebase their commit or leave an
-        unreferenced dir for ``expire_snapshots`` to sweep.
+        background compaction) never collide on disk; :meth:`commit`
+        rebases the loser where the commits commute, and otherwise the
+        dir stays unreferenced until ``remove_orphan_files`` sweeps it
+        (or the caller drops it at once with :meth:`_discard_delta`).
         """
-        delta = f"delta-{version:09d}-{uuid.uuid4().hex[:8]}"
+        delta = f"delta-{snap.version + 1:09d}-{uuid.uuid4().hex[:8]}"
+        schema_version = snap.current_schema
         out_dir = os.path.join(self.root, _DATA, delta)
         out = df.withColumn(_PART_DIR_COL, F.col(_BUCKET_COL))
         part_cols = [_PART_DIR_COL] + ([cdf_col] if cdf_col else [])
@@ -1425,7 +1423,20 @@ class LakeTable:
             # secondary order.  With pb first, the plan's output
             # ordering already satisfies the writer's requirement and
             # the (pb, *sort_by) order survives into the files.
-            out = out.sortWithinPartitions(*part_cols, *sort_by)
+            # A Column key (the z-order Morton code) is computed once
+            # per row into a temporary column: left as a sort
+            # expression, the comparator re-evaluates it on every
+            # comparison, and the leading pb ties every one of them
+            # (a 40k-row z-order compaction took 68 s at local[4], 5 s
+            # this way).
+            keys, tmp = [], []
+            for i, k in enumerate(sort_by):
+                if not isinstance(k, str):
+                    tmp.append(f"_sort{i}")
+                    out = out.withColumn(tmp[-1], k)
+                    k = tmp[-1]
+                keys.append(k)
+            out = out.sortWithinPartitions(*part_cols, *keys).drop(*tmp)
         out.write.partitionBy(*part_cols).mode("error").parquet(out_dir)
         stat_cols = {
             f.name: f.dataType.simpleString()
@@ -1475,22 +1486,37 @@ class LakeTable:
                     if n_rows is not None:
                         entry["rows"] = n_rows
                     files.setdefault(b, []).append(entry)
-        self._maybe_build_blooms(df, delta, files)
+        self._maybe_build_blooms(df, snap, delta, files)
         return (files, cdf) if cdf_col else files
 
+    def _discard_delta(self, files: dict[str, list[dict[str, Any]]]) -> None:
+        """Remove the delta dir of files written but never to be
+        committed (a no-op batch, a write refused after the fact)."""
+        import shutil
+
+        for fl in files.values():
+            if fl:
+                # path = data/delta-N-x/pb=B[/_cdf=d]/part.parquet
+                delta_dir = fl[0]["path"].split(os.sep)[:2]
+                shutil.rmtree(os.path.join(self.root, *delta_dir), ignore_errors=True)
+                return
+
     def _maybe_build_blooms(
-        self, df: DataFrame, delta: str, files: dict[str, list[dict[str, Any]]]
+        self,
+        df: DataFrame,
+        snap: Snapshot,
+        delta: str,
+        files: dict[str, list[dict[str, Any]]],
     ) -> None:
         """Per-file key Bloom sidecar for one commit's data files (see
-        lake/bloomidx.py).  Runs only when the table's ``key_blooms``
+        lake/bloomidx.py).  Runs only when ``snap``'s ``key_blooms``
         flag is set; one keys-only distributed job per commit, its
         output a single ``_data/<delta>/_bloom`` parquet dir that
         every new entry's ``bloom`` field points at.  Capture
-        partitions (``_cdf=p/c``) are not lookup-read and get none."""
-        if not files:
-            return
-        snap = self.snapshot()
-        if not snap.key_blooms:
+        partitions (``_cdf=p/c``) are not lookup-read and get none.
+        A commit that rebases over a concurrent ``set_key_blooms``
+        keeps its sidecar-less files: they stay lookup candidates."""
+        if not files or not snap.key_blooms:
             return
         key_cols = snap.key_columns
         if not set(key_cols) <= set(df.columns):
@@ -1526,12 +1552,14 @@ class LakeTable:
         the snapshot under ``_meta/staged-<name>.json`` instead of the
         version chain.  Readers of the table never see it; audit with
         :meth:`read_staged`, then :meth:`publish_staged` (rebase-aware)
-        or :meth:`abort_staged`."""
+        or :meth:`abort_staged`.  An unstaged append that loses a commit
+        race rebases like any files-only commit (see :meth:`commit`):
+        it carries no key reconciliation, so it commutes with a
+        compaction or a write to other buckets."""
         from pyspark.sql import Observation
 
         snap = self.snapshot()
         cur = self._schema_version(snap, snap.current_schema)
-        new_version = snap.version + 1
         extra = (
             [F.lit(False).alias(_DELETED_COL)] if snap.soft_delete else []
         )
@@ -1559,7 +1587,7 @@ class LakeTable:
         if aggs:
             obs = Observation()
             with_bucket = with_bucket.observe(obs, *aggs)
-        new_files = self._write_delta(with_bucket, new_version, snap.current_schema)
+        new_files = self._write_delta(with_bucket, snap)
         if obs is not None:
             try:
                 vals = obs.get
@@ -1572,24 +1600,7 @@ class LakeTable:
                 if int(vals.get(cname) or 0)
             }
             if n_null or check_counts:
-
-                def _discard_written() -> None:
-                    import shutil
-
-                    for fl in new_files.values():
-                        if fl:
-                            shutil.rmtree(
-                                os.path.join(
-                                    self.root,
-                                    os.path.dirname(
-                                        os.path.dirname(fl[0]["path"])
-                                    ),
-                                ),
-                                ignore_errors=True,
-                            )
-                            return
-
-                _discard_written()
+                self._discard_delta(new_files)
                 if n_null:
                     raise ValueError(
                         f"append: {n_null} row(s) have null order column(s) "
@@ -1598,23 +1609,13 @@ class LakeTable:
                         "them before appending"
                     )
                 raise CheckViolation(check_counts, snap.checks)
-        files = {b: list(fl) for b, fl in snap.files.items()}
-        for b, fl in new_files.items():
-            files.setdefault(b, []).extend(fl)
-        op = "stage-append" if stage else "append"
-        extra_summary = {"staged": stage} if stage else {}
-        out = Snapshot(
-            version=new_version,
-            parent=snap.version,
-            files=files,
-            summary={"operation": op, **extra_summary, **(summary or {})},
-            **snap.child_kwargs(),
+        return self.commit(
+            snap,
+            "stage-append" if stage else "append",
+            add=new_files,
+            summary={**({"staged": stage} if stage else {}), **(summary or {})},
+            stage=stage,
         )
-        if stage:
-            self._commit_staged(out, stage)
-        else:
-            self._commit(out)
-        return out
 
     # ------------------------------------------------- write-audit-publish
 
@@ -1622,24 +1623,6 @@ class LakeTable:
         if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name):
             raise ValueError(f"invalid staged name: {name!r}")
         return os.path.join(self._meta_dir(), f"staged-{name}.json")
-
-    def _commit_staged(self, snap: Snapshot, name: str) -> None:
-        """Create-only commit of a staged snapshot (same hard-link CAS
-        as the version chain, so two writers cannot stage one name)."""
-        path = self._staged_path(name)
-        tmp = os.path.join(self._meta_dir(), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            f.write(self._snap_to_json(snap))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise CommitConflict(
-                f"staged snapshot {name!r} already exists at {self.root}"
-            ) from None
-        finally:
-            os.unlink(tmp)
 
     def staged_names(self) -> list[str]:
         return sorted(
@@ -1659,17 +1642,18 @@ class LakeTable:
         """Audit view of a staged snapshot (table-as-if-published)."""
         return self.read(snapshot=self.staged_snapshot(name), **read_kwargs)
 
-    def publish_staged(self, name: str, max_retries: int = 5) -> Snapshot:
+    def publish_staged(self, name: str) -> Snapshot:
         """Promote a staged append into the version chain.
 
         The staged snapshot's *additions* (files present in it but not
-        in its parent) are committed via
-        :meth:`commit_file_additions`, which rebases over any
-        commuting commits that landed since staging (compactions, or
-        writes to disjoint buckets) and raises :class:`CommitConflict`
-        otherwise.  Semantics after a rebase are exactly those of
-        running the same ``append`` now — ``append`` carries no key
-        reconciliation, so additions commute wherever appends do."""
+        in its parent) are committed on that parent through
+        :meth:`commit`, which rebases over any commuting commits that
+        landed since staging (compactions, or writes to disjoint
+        buckets) and raises :class:`CommitConflict` otherwise — the
+        same rule an unstaged ``append`` commits under, so publishing
+        means exactly what running the ``append`` now would.  The
+        staged snapshot survives a refused or crashed publish, so the
+        publish can be retried or aborted."""
         st = self.staged_snapshot(name)
         if st.parent is None:
             raise CommitConflict(f"staged {name!r} has no parent snapshot")
@@ -1686,12 +1670,8 @@ class LakeTable:
             new = [fe for fe in fl if fe["path"] not in old]
             if new:
                 additions[b] = new
-        out = self.commit_file_additions(
-            base,
-            st.version,
-            additions,
-            summary={"operation": "publish-staged", "staged": name},
-            max_retries=max_retries,
+        out = self.commit(
+            base, "publish-staged", add=additions, summary={"staged": name}
         )
         os.unlink(self._staged_path(name))
         return out
@@ -1726,13 +1706,15 @@ class LakeTable:
         groups inside the file (the Iceberg write-sort-order lever).
         """
         snap = base_snapshot or self.snapshot()
-        new_version = snap.version + 1
         out = df.repartition(min(max(len(touched_buckets), 1), 256), _BUCKET_COL)
-        new_files = self._write_delta(
-            out, new_version, snap.current_schema, sort_by=sort_by
-        )
-        return self.commit_bucket_replacement(
-            snap, new_version, new_files, touched_buckets, summary, epoch_id
+        new_files = self._write_delta(out, snap, sort_by=sort_by)
+        return self.commit(
+            snap,
+            "merge",
+            add=new_files,
+            replace=touched_buckets,
+            summary=summary,
+            epoch_id=epoch_id,
         )
 
     # ------------------------------------------- optimistic concurrency
@@ -1759,6 +1741,8 @@ class LakeTable:
         Refuses (raises :class:`CommitConflict`):
         - layout/schema drift (rebucket, add/rename/widen column) —
           the pending files were written under the old layout;
+        - a CHECK constraint added since ``base`` — the pending rows
+          were validated without it;
         - a concurrent commit to an overlapping bucket — our
           classification may be stale;
         - the same ``epoch_id`` concurrently applied (exactly-once);
@@ -1789,9 +1773,10 @@ class LakeTable:
                 or s.current_schema != base.current_schema
                 or s.key_columns != base.key_columns
                 or s.order_columns != base.order_columns
+                or not s.checks.items() <= base.checks.items()
             ):
                 raise CommitConflict(
-                    f"cannot rebase over layout/schema change in v{s.version} "
+                    f"cannot rebase over layout/schema/check change in v{s.version} "
                     f"({s.summary.get('operation')}) at {self.root}"
                 )
             if (
@@ -1818,93 +1803,99 @@ class LakeTable:
             parent = s
         return latest
 
+    def commit(
+        self,
+        base: Snapshot,
+        op: str,
+        *,
+        add: dict[str, list[dict[str, Any]]] | None = None,
+        replace: Iterable[int | str] = (),
+        summary: dict[str, Any] | None = None,
+        epoch_id: str | None = None,
+        stage: str | None = None,
+        **meta: Any,
+    ) -> Snapshot:
+        """The one commit point: write the child of ``base`` whose
+        files are ``base``'s minus the ``replace`` buckets plus the
+        ``add`` entries (already written, e.g. by :meth:`_write_delta`),
+        and whose metadata is ``base``'s with ``meta`` overrides
+        (``checks=``, ``key_blooms=``, ``n_buckets=``, schema versions).
+        The summary is ``{"operation": op, **summary}``; ``epoch_id``
+        joins ``applied_epochs`` (the exactly-once token).  ``stage``
+        writes the child as a staged WAP snapshot instead of the next
+        version.
+
+        Lost commit races: a files-only commit to the version chain is
+        rebased onto the latest snapshot and retried when the
+        intervening commits commute with it (see :meth:`_rebase_base`)
+        — an epoch or append landing while a background ``compact()``
+        runs never aborts.  A metadata commit (any ``meta``) or a
+        staged commit never rebases: it was decided against ``base``,
+        so it raises :class:`CommitConflict` and the caller recomputes.
+        """
+        add = add or {}
+        replace = {str(b) for b in replace}
+        touched = replace | set(add)
+        snap = base
+        for _ in range(COMMIT_RETRIES + 1):
+            files = {b: list(fl) for b, fl in snap.files.items() if b not in replace}
+            for b, fl in add.items():
+                files.setdefault(b, []).extend(fl)
+            applied = list(snap.applied_epochs)
+            if epoch_id is not None:
+                applied.append(epoch_id)
+            out = Snapshot(
+                version=snap.version + 1,
+                parent=snap.version,
+                files=files,
+                summary={"operation": op, **(summary or {})},
+                **snap.child_kwargs(applied_epochs=applied, **meta),
+            )
+            try:
+                # version-chain commits call the one-argument form, so
+                # a wrapper of _commit(self, snap) still sees them all
+                if stage:
+                    self._commit(out, stage)
+                else:
+                    self._commit(out)
+                return out
+            except CommitConflict:
+                if stage or meta:
+                    raise
+                snap = self._rebase_base(base, touched, epoch_id)
+        raise CommitConflict(
+            f"gave up after {COMMIT_RETRIES} rebase retries at {self.root}"
+        )
+
     def commit_bucket_replacement(
         self,
         snap: Snapshot,
-        new_version: int,
         new_files: dict[str, list[dict[str, Any]]],
         touched_buckets: list[int],
         summary: dict[str, Any] | None = None,
         epoch_id: str | None = None,
-        max_retries: int = 5,
     ) -> Snapshot:
-        """Commit already-written delta files as a bucket replacement —
-        the write/commit split lets MERGE compute its statistics on the
-        same job that writes the files (Observation) and still record
-        them in the snapshot summary.
-
-        On a lost commit race the write is rebased onto the latest
-        snapshot and retried when the intervening commits commute
-        (see :meth:`_rebase_base`); otherwise :class:`CommitConflict`
-        propagates and the caller must recompute."""
-        touched = {str(b) for b in touched_buckets}
-        base, version = snap, new_version
-        for _ in range(max_retries + 1):
-            files = {b: list(fl) for b, fl in base.files.items() if b not in touched}
-            for b, fl in new_files.items():
-                files[b] = fl
-            applied = list(base.applied_epochs)
-            if epoch_id is not None:
-                applied.append(epoch_id)
-            out = Snapshot(
-                version=version,
-                parent=base.version,
-                files=files,
-                summary={"operation": "merge", **(summary or {})},
-                **base.child_kwargs(applied_epochs=applied),
-            )
-            try:
-                self._commit(out)
-                return out
-            except CommitConflict:
-                base = self._rebase_base(snap, touched, epoch_id)
-                version = base.version + 1
-        raise CommitConflict(
-            f"gave up after {max_retries} rebase retries at {self.root}"
+        """The CoW MERGE's :meth:`commit`: ``new_files`` replace the
+        ``touched_buckets``' files.  This and :meth:`commit_file_additions`
+        stay as named methods because the benchmark's tracer
+        (``perfbench/spans.py``) times MERGE commits by wrapping them
+        and reads ``new_files`` from their keyword arguments."""
+        return self.commit(
+            snap, "merge", add=new_files, replace=touched_buckets,
+            summary=summary, epoch_id=epoch_id,
         )
 
     def commit_file_additions(
         self,
         snap: Snapshot,
-        new_version: int,
         new_files: dict[str, list[dict[str, Any]]],
         summary: dict[str, Any] | None = None,
         epoch_id: str | None = None,
-        max_retries: int = 5,
     ) -> Snapshot:
-        """Commit already-written delta files as *additions* to their
-        buckets (no existing file is dropped) — the commit half of the
-        merge-on-read MERGE.  ``new_files`` may be empty: that commits
-        a pure epoch-id marker (a fully no-op epoch still records its
-        exactly-once token).
-
-        Lost commit races are rebased and retried when the intervening
-        commits commute (see :meth:`_rebase_base`) — in particular an
-        ingest epoch landing while a background ``compact()`` runs
-        never aborts."""
-        base, version = snap, new_version
-        for _ in range(max_retries + 1):
-            files = {b: list(fl) for b, fl in base.files.items()}
-            for b, fl in new_files.items():
-                files.setdefault(b, []).extend(fl)
-            applied = list(base.applied_epochs)
-            if epoch_id is not None:
-                applied.append(epoch_id)
-            out = Snapshot(
-                version=version,
-                parent=base.version,
-                files=files,
-                summary={"operation": "merge-mor", **(summary or {})},
-                **base.child_kwargs(applied_epochs=applied),
-            )
-            try:
-                self._commit(out)
-                return out
-            except CommitConflict:
-                base = self._rebase_base(snap, set(new_files), epoch_id)
-                version = base.version + 1
-        raise CommitConflict(
-            f"gave up after {max_retries} rebase retries at {self.root}"
+        """The MoR MERGE's :meth:`commit`: ``new_files`` are added to
+        their buckets (empty = a pure epoch-id marker)."""
+        return self.commit(
+            snap, "merge-mor", add=new_files, summary=summary, epoch_id=epoch_id
         )
 
     # --------------------------------------------------- schema evolution
@@ -1914,19 +1905,13 @@ class LakeTable:
         cur = self._schema_version(snap, snap.current_schema)
         new_fields = mutate([dict(f) for f in cur.fields])
         new_sv = _SchemaVersion(snap.current_schema + 1, new_fields)
-        out = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            files=snap.files,
-            summary={"operation": op},
-            **snap.child_kwargs(
-                schema_versions=snap.schema_versions + [new_sv],
-                current_schema=new_sv.version,
-            ),
+        self._check_exprs_still_resolve(snap.checks, new_fields)
+        return self.commit(
+            snap,
+            op,
+            schema_versions=snap.schema_versions + [new_sv],
+            current_schema=new_sv.version,
         )
-        self._check_exprs_still_resolve(out)
-        self._commit(out)
-        return out
 
     def add_column(self, name: str, dtype: str) -> Snapshot:
         def mutate(fields):
@@ -2059,24 +2044,18 @@ class LakeTable:
         out = df.withColumn(_BUCKET_COL, bucket).repartition(
             min(new_n, 256), _BUCKET_COL
         )
-        new_version = snap.version + 1
         # full rewrite anyway — keep the write sort order (see
         # compact()) so the new base files stay row-group-prunable
         new_files = self._write_delta(
-            out,
-            new_version,
-            snap.current_schema,
-            sort_by=list(snap.order_columns or []),
+            out, snap, sort_by=list(snap.order_columns or [])
         )
-        committed = Snapshot(
-            version=new_version,
-            parent=snap.version,
-            files=new_files,
-            summary={"operation": f"rebucket {snap.n_buckets} -> {new_n}"},
-            **snap.child_kwargs(n_buckets=new_n),
+        return self.commit(
+            snap,
+            f"rebucket {snap.n_buckets} -> {new_n}",
+            add=new_files,
+            replace=snap.files,
+            n_buckets=new_n,
         )
-        self._commit(committed)
-        return committed
 
     # ------------------------------------------------------------ tags
 

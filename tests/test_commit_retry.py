@@ -1,7 +1,8 @@
-"""Multi-writer commit handling: commits that commute (MoR additions
-vs background compaction; bucket writes on disjoint buckets) are
-rebased onto the winner and retried; non-commuting races still raise
-CommitConflict.  The scenario that motivates this: one streaming
+"""Multi-writer commit handling: files-only commits that commute (MoR
+additions or appends vs background compaction; bucket writes on
+disjoint buckets) are rebased onto the winner and retried;
+non-commuting races, and metadata commits that lose any race, still
+raise CommitConflict.  The scenario that motivates this: one streaming
 ingest applier plus a compact()/maintenance job on the same table —
 the docs tell users to run exactly that, so an epoch must not abort
 because compaction won a commit race.
@@ -119,7 +120,7 @@ def test_concurrent_same_epoch_refused(spark, tmp_path):
     )
     # loser (stale base) tries to commit the same epoch id as a marker
     with pytest.raises(CommitConflict, match="concurrently applied"):
-        t.commit_file_additions(base, base.version + 1, {}, epoch_id="lsn:100-199")
+        t.commit_file_additions(base, new_files={}, epoch_id="lsn:100-199")
 
 
 def test_rebase_refuses_layout_change(spark, tmp_path):
@@ -130,4 +131,86 @@ def test_rebase_refuses_layout_change(spark, tmp_path):
     base = t.snapshot()
     t.rebucket(4)
     with pytest.raises(CommitConflict, match="layout/schema"):
-        t.commit_file_additions(base, base.version + 1, {}, epoch_id="lsn:9000-9000")
+        t.commit_file_additions(base, new_files={}, epoch_id="lsn:9000-9000")
+
+
+def _race(monkeypatch, op, winner):
+    """Run ``winner`` once, right before the first ``op`` commit's CAS,
+    so that commit loses the version race."""
+    orig = LakeTable._commit
+    state = {"injected": False}
+
+    def race(self, snap_):
+        if not state["injected"] and snap_.summary.get("operation") == op:
+            state["injected"] = True
+            winner()
+        return orig(self, snap_)
+
+    monkeypatch.setattr(LakeTable, "_commit", race)
+    return state
+
+
+def test_append_rebases_over_interleaved_compact(spark, tmp_path, monkeypatch):
+    """An append carries no key reconciliation, so a compact() that
+    wins its commit race commutes with it: the append rebases onto the
+    compacted snapshot and both effects are visible."""
+    t = _mk_table(spark, tmp_path, n_buckets=2)
+    rows = lambda lo: [
+        (lo + i, "insert", f"u{lo + i}", lo + i, "X") for i in range(10)
+    ]
+    t.append(_events_df(spark, rows(0)).drop("op"))
+    t.append(_events_df(spark, rows(10)).drop("op"))  # 2 files per bucket
+    state = _race(monkeypatch, "append", lambda: t.compact(max_files_per_bucket=1))
+    out = t.append(_events_df(spark, rows(20)).drop("op"))
+    assert state["injected"]
+    compacted = t.snapshot(out.parent)
+    assert compacted.summary["operation"] == "compact"
+    assert t.current_version() == out.version
+    assert {r["url"] for r in t.read().collect()} == {f"u{i}" for i in range(30)}
+    # the compaction's effect survives: its base files are still listed
+    for b, fl in compacted.files.items():
+        assert fl[0] in out.files[b]
+
+
+def test_metadata_commit_never_rebases(spark, tmp_path, monkeypatch):
+    """An add_check that loses its race to a MoR epoch was validated
+    against the old snapshot: it must raise, and the winning epoch
+    must stay the current snapshot (no lost update)."""
+    t = _mk_table(spark, tmp_path, n_buckets=2)
+    merge_apply(t, _events_df(spark, [(1, "insert", "a", 10, "A")]))
+    won = {}
+
+    def epoch():
+        won["snap"] = merge_apply(
+            t,
+            _events_df(spark, [(2, "insert", "b", 20, "B")]),
+            epoch_id="lsn:2-2",
+            mode="mor",
+        ).snapshot
+
+    _race(monkeypatch, "add-check", epoch)
+    with pytest.raises(CommitConflict):
+        t.add_check("lsn_pos", "lsn > 0")
+    cur = t.snapshot()
+    assert cur.version == won["snap"].version
+    assert cur.summary["operation"] == "merge-mor"
+    assert cur.checks == {} and cur.applied_epochs == ["lsn:2-2"]
+    assert set(_state(t)) == {"a", "b"}
+
+
+def test_epoch_refuses_rebase_over_new_check(spark, tmp_path, monkeypatch):
+    """A MoR epoch whose commit loses to an add_check was validated
+    without the new constraint: it must raise rather than land rows
+    the check forbids."""
+    t = _mk_table(spark, tmp_path, n_buckets=2)
+    merge_apply(t, _events_df(spark, [(1, "insert", "a", 10, "A")]))
+    _race(monkeypatch, "merge-mor", lambda: t.add_check("lsn_small", "lsn < 100"))
+    with pytest.raises(CommitConflict, match="check change"):
+        merge_apply(
+            t,
+            _events_df(spark, [(500, "insert", "b", 20, "B")]),
+            epoch_id="lsn:500-500",
+            mode="mor",
+        )
+    assert t.snapshot().summary["operation"] == "add-check"
+    assert set(_state(t)) == {"a"}
