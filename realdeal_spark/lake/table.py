@@ -30,6 +30,7 @@ here evolution is explicit and versioned.)
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -190,7 +191,9 @@ class _SchemaVersion:
         return {f["id"]: f for f in self.fields}
 
 
+@functools.lru_cache(maxsize=None)
 def _parse_type(s: str) -> T.DataType:
+    # a JVM round trip per call, and every read re-derives its schema
     return T.StructType.fromDDL(f"x {s}")[0].dataType
 
 

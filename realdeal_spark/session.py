@@ -60,6 +60,13 @@ def get_spark(
         .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame-debugging hook wraps every Column/DataFrame
+        # API call with ~6 extra py4j round trips (active-session and
+        # conf lookups, a Python stack walk, origin set/clear) only to
+        # put the caller's file:line into error messages.  The engine
+        # builds plans from many such calls per epoch, so the hook cost
+        # ~7% of a merge-heavy test run's wall (cProfile, local[4]).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Long-running epoch loops (the CDC applier's whole life) leak
         # shuffle files / broadcast blocks until the ContextCleaner
