@@ -32,9 +32,9 @@ from realdeal_spark.cdc.rollup import (
     rollup_surface,
 )
 from realdeal_spark.cdc.joinview import (
-    JoinViewMaintainer,
     advance_join_view,
     create_join_view,
+    join_view_surface,
     join_view_watermark,
 )
 
@@ -60,8 +60,8 @@ __all__ = [
     "rollup_advance",
     "rollup_full",
     "rollup_surface",
-    "JoinViewMaintainer",
     "advance_join_view",
     "create_join_view",
+    "join_view_surface",
     "join_view_watermark",
 ]

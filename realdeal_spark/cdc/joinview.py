@@ -369,54 +369,49 @@ def advance_join_view(
     return res
 
 
-class JoinViewMaintainer:
-    """Standing consumer and maintained surface (``streaming.Surface``)
-    whose source is the FACT table, the hot input: ``advance()`` after
-    each committed epoch on either input advances the view (bootstrap
-    on first call); dim edits ride the next advance.  State lives in the view
-    table itself — watermarks in-band via epoch ids — so a restarted
-    maintainer resumes with no side checkpoint.
+def join_view_surface(
+    fact: LakeTable,
+    dim: LakeTable,
+    view: LakeTable,
+    on,
+    compact_every: int | None = None,
+    **advance_kw,
+):
+    """The view as a maintained surface (``streaming.Surface``) whose
+    source is the FACT table, the hot input: each advance catches the
+    view up on both inputs (bootstrap on the first), so dim edits ride
+    the next advance.  The watermark is the fact version the view
+    reflects; state lives in the view's own epoch ids, so a restarted
+    maintainer resumes with no side checkpoint.  ``advance_kw`` pass
+    through to every :func:`advance_join_view` call.
 
-    ``compact_every``: compact the view after every N effective
-    advances — the MoR delta-stack amortizer (the same lever as
-    ``CdcApplier(compact_every=…)``; BENCH_JOINVIEW.md's 64M
-    trickle outlier is what an uncompacted stack costs).  Compaction
-    is a maintenance commit: the changes feed skips it and the
-    in-band watermarks are untouched, so it composes with
-    exactly-once replay for free (tested).  Other keyword arguments
-    pass through to every :func:`advance_join_view` call."""
+    ``compact_every``: compact the view — and the ``fk_index``, if one
+    is passed — after every N effective advances of this surface: the
+    MoR delta-stack amortizer (the same lever as
+    ``CdcApplier(compact_every=…)``; BENCH_JOINVIEW.md's 64M trickle
+    outlier is what an uncompacted stack costs).  Compaction is a
+    maintenance commit: the changes feed skips it and the in-band
+    watermarks are untouched, so it composes with exactly-once replay
+    (tested)."""
+    from realdeal_spark.streaming.cdf_source import Surface
 
-    def __init__(
-        self,
-        fact: LakeTable,
-        dim: LakeTable,
-        view: LakeTable,
-        on,
-        compact_every: int | None = None,
-        **advance_kw,
-    ):
-        self.source, self.dim, self.view, self.on = fact, dim, view, on
-        self.compact_every = compact_every
-        self.advance_kw = advance_kw
-        self._since_compact = 0
+    since = [0]  # effective advances since the last compaction
 
-    def watermark(self) -> int | None:
-        """The fact version the view reflects."""
-        wm = join_view_watermark(self.view)
+    def watermark() -> int | None:
+        wm = join_view_watermark(view)
         return None if wm is None else wm[0]
 
-    def advance(self, to_version: int | None = None) -> MergeResult | None:
+    def advance(to_version: int | None = None) -> MergeResult | None:
         res = advance_join_view(
-            self.source, self.dim, self.view, self.on,
-            to_version=to_version, **self.advance_kw,
+            fact, dim, view, on, to_version=to_version, **advance_kw
         )
-        if res is not None and self.compact_every:
-            self._since_compact += 1
-            if self._since_compact >= self.compact_every:
-                self.view.compact()
-                fk_index = self.advance_kw.get("fk_index")
-                if fk_index is not None:
-                    fk_index.compact()
-                self._since_compact = 0
+        if res is not None and compact_every:
+            since[0] += 1
+            if since[0] >= compact_every:
+                since[0] = 0
+                for t in (view, advance_kw.get("fk_index")):
+                    if t is not None:
+                        t.compact()
         return res
 
+    return Surface(fact, watermark, advance)

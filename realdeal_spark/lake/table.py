@@ -243,6 +243,11 @@ class Snapshot:
     bucket_manifests: dict[str, str] | None = field(
         default=None, compare=False, repr=False
     )
+    # centroids: the pinned cell geometry of an IVF index table
+    # ([[cell id, vector], ...]; operators/similarity.py), None on every
+    # other table — and then left out of the JSON, so their snapshots
+    # serialize exactly as before the field existed.
+    centroids: list | None = None
 
     def child_kwargs(self, **overrides: Any) -> dict[str, Any]:
         """Carried-forward table metadata for a child snapshot.  Every
@@ -261,6 +266,7 @@ class Snapshot:
             key_blooms=self.key_blooms,
             bucket_columns=self.bucket_columns,
             checks=dict(self.checks),
+            centroids=self.centroids,
         )
         kw.update(overrides)
         return kw
@@ -268,7 +274,7 @@ class Snapshot:
     def _meta_dict(self) -> dict[str, Any]:
         """Everything but the file inventory (shared by the inline and
         manifest-spilled serializations)."""
-        return {
+        d = {
             "version": self.version,
             "parent": self.parent,
             "schema_versions": [
@@ -286,6 +292,9 @@ class Snapshot:
             "bucket_columns": self.bucket_columns,
             "checks": self.checks,
         }
+        if self.centroids is not None:
+            d["centroids"] = self.centroids
+        return d
 
     def to_json(self) -> str:
         return json.dumps(
@@ -314,6 +323,7 @@ class Snapshot:
             key_blooms=d.get("key_blooms", False),
             bucket_columns=d.get("bucket_columns"),
             checks=d.get("checks", {}),
+            centroids=d.get("centroids"),
         )
 
     @staticmethod
@@ -2320,13 +2330,20 @@ class LakeTable:
         }
 
 
+def interval_epoch_id(prefix: str, from_v: int, to_v: int) -> str:
+    """The epoch id of source interval ``(from_v, to_v]`` — the one
+    format :func:`interval_watermark` parses."""
+    return f"{prefix}{from_v}-{to_v}"
+
+
 def interval_watermark(table: "LakeTable", prefix: str) -> int | None:
     """Highest ``<to>`` among the table's applied epoch ids of the
     form ``f"{prefix}<from>-<to>"`` — the in-band watermark every
     interval-driven surface resumes from, no side checkpoint needed.
-    :func:`interval_step` is the only writer of these ids, so the
-    format lives in this module alone.  None if no such epoch was
-    ever applied."""
+    Ids come from :func:`interval_epoch_id` alone (minted by
+    :func:`interval_step`, or by a build that seeds a surface from
+    a known source version), so the format lives in this module
+    alone.  None if no such epoch was ever applied."""
     hi: int | None = None
     for eid in table.snapshot().applied_epochs:
         if eid.startswith(prefix):
@@ -2366,7 +2383,7 @@ def interval_step(
     if fv is None:
         if not src.snapshot(tv).files:
             return None  # nothing past create
-        return bootstrap(f"{prefix}{src.versions()[0]}-{tv}", tv)
+        return bootstrap(interval_epoch_id(prefix, src.versions()[0], tv), tv)
     if from_version is None and to_version is not None:
         src.snapshot(tv)  # a bogus target would commit a too-high watermark
-    return interval(f"{prefix}{fv}-{tv}", fv, tv)
+    return interval(interval_epoch_id(prefix, fv, tv), fv, tv)

@@ -36,6 +36,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from realdeal_spark.lake.merge import (
+    OP_COL,
+    OP_DELETE,
+    OP_UPDATE,
+    MergeResult,
+    merge_apply,
+)
+from realdeal_spark.lake.table import (
+    _BUCKET_COL,
+    _DELETED_COL,
+    LakeTable,
+    interval_epoch_id,
+    interval_step,
+    interval_watermark,
+)
+
 
 def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(
@@ -477,6 +493,65 @@ def kmeans_refine(
     return cur
 
 
+def _with_cells(
+    df: DataFrame,
+    vec: str,
+    centroids: list[tuple[int, list[float]]],
+    assign: str,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """``df`` plus a long ``list_id``: the nearest cell of ``vec`` —
+    or, with ``nprobe``, one row for each of its ``nprobe`` nearest
+    cells (the probe set).  Map-only either way (see
+    :func:`_attach_ranking`)."""
+    ranked = _attach_ranking(
+        df.withColumn("_nv", F.sqrt(_dot(F.col(vec), F.col(vec)))),
+        vec,
+        "_nv",
+        centroids,
+        assign,
+    )
+    rk = F.col("_rk")
+    cell = (
+        F.element_at(rk, 1)["cid"]
+        if nprobe is None
+        else F.explode(F.transform(F.slice(rk, 1, nprobe), lambda s: s["cid"]))
+    )
+    return ranked.withColumn("list_id", cell).drop("_nv", "_rk")
+
+
+def _probes(queries, vec_col, id_col, centroids, nprobe, assign) -> DataFrame:
+    """(query_id, _qv, list_id): each query once per probed cell."""
+    if nprobe < 1 or nprobe > len(centroids):
+        raise ValueError(f"nprobe={nprobe} out of range 1..{len(centroids)}")
+    return _with_cells(
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).cast("array<double>").alias("_qv"),
+        ),
+        "_qv",
+        centroids,
+        assign,
+        nprobe,
+    )
+
+
+def _top_k(cells: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact cosine re-rank of the (list_id, vec_id, _cv) candidates
+    sharing a probed cell with each query (broadcast)."""
+    scored = (
+        cells.join(F.broadcast(q), on="list_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -511,57 +586,31 @@ def ivf_knn(
     """
     if centroids is None:
         centroids = ivf_seed_centroids(corpus, n_lists, vec_col, id_col)
-    if nprobe < 1 or nprobe > len(centroids):
-        raise ValueError(f"nprobe={nprobe} out of range 1..{len(centroids)}")
-    c = (
-        _attach_ranking(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            ).withColumn("_nv", F.sqrt(_dot(F.col("_cv"), F.col("_cv")))),
-            "_cv",
-            "_nv",
-            centroids,
-            assign,
-        )
-        .withColumn("list_id", F.element_at(F.col("_rk"), 1)["cid"])
-        .drop("_nv", "_rk")
+    q = _probes(queries, vec_col, id_col, centroids, nprobe, assign)
+    c = _with_cells(
+        corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("_cv"),
+        ),
+        "_cv",
+        centroids,
+        assign,
     )
-    q = (
-        _attach_ranking(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("_qv"),
-            ).withColumn("_nq", F.sqrt(_dot(F.col("_qv"), F.col("_qv")))),
-            "_qv",
-            "_nq",
-            centroids,
-            assign,
-        )
-        .withColumn(
-            "list_id",
-            F.explode(
-                F.transform(F.slice(F.col("_rk"), 1, nprobe), lambda s: s["cid"])
-            ),
-        )
-        .drop("_nq", "_rk")
-    )
-    scored = (
-        c.join(F.broadcast(q), on="list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(c, q, k)
 
 
 # ---------------------------------------------------------------------------
-# persisted IVF index (build once, query many)
+# persisted IVF index (build once, query many, CDC-maintained)
 # ---------------------------------------------------------------------------
+
+_IVF_PREFIX = "ivf:"
+_IVF_ORD = "_ord"
+
+
+def _index_centroids(snap) -> list[tuple[int, list[float]]]:
+    if snap.centroids is None:
+        raise ValueError("not an IVF index: its table carries no centroids")
+    return [(int(cid), [float(x) for x in cv]) for cid, cv in snap.centroids]
 
 
 def build_ivf_index(
@@ -575,30 +624,33 @@ def build_ivf_index(
     centroids: list[tuple[int, list[float]]] | None = None,
     table_version: int | None = None,
 ) -> dict:
-    """Materialize an IVF index: cell assignments as parquet bucketed
-    by ``list_id`` plus a centroid sidecar (JSON).
+    """Materialize an IVF index as a LakeTable at ``index_dir`` (which
+    must not hold a table yet).
 
     :func:`ivf_knn` re-assigns the whole corpus on every call — fine
-    for one-shot jobs, wasteful for a query service.  This writes
-    ``(vec_id, embedding, list_id)`` partitioned by ``list_id`` once;
-    :func:`ivf_knn_indexed` then scans ONLY the probed cells' files
-    (partition pruning on the ``list_id=N`` dirs — the inverted-file
-    property made physical), so per-query cost is
-    O(corpus × nprobe / n_lists) instead of O(corpus).
+    for one-shot jobs, wasteful for a query service.  This stores
+    ``(list_id, vec_id, embedding)`` once, keyed by ``(list_id,
+    vec_id)`` and bucket-hashed on ``list_id`` alone
+    (``n_buckets = n_lists``), so :func:`ivf_knn_indexed` reads ONLY
+    the probed cells' buckets — the inverted-file property made
+    physical, per-query cost O(corpus × nprobe / n_lists).  Rows
+    whose vector is null are left out (a vector-less key cannot be a
+    neighbor).
 
-    ``kmeans_iters > 0`` refines the deterministic seeds with
-    distributed Lloyd before assigning.  Returns the centroid list
-    (also persisted to ``<index_dir>/centroids.json``).
+    The centroids are pinned here, in the index table's metadata
+    (``Snapshot.centroids``), and never move: the advance and every
+    query read them from the snapshot they read.  ``kmeans_iters >
+    0`` refines the deterministic seeds with distributed Lloyd first;
+    ``centroids`` pins the geometry instead of seeding — the
+    rebuild-for-comparison path of :func:`ivf_index_advance` (an
+    advanced index must equal a rebuild over the SAME centroids).
 
-    ``centroids`` pins the cell geometry instead of seeding/refining
-    from the corpus — the rebuild-for-comparison path of
-    :func:`ivf_index_advance` (an advanced index must equal a rebuild
-    over the SAME centroids; reseeding would move the goalposts).
-    ``table_version`` stamps the snapshot of the source LakeTable the
-    index reflects, which is what makes the index advanceable."""
-    import json
-    import os
-
+    ``table_version`` names the snapshot of the source LakeTable the
+    corpus was read at; the one data commit then carries the interval
+    epoch id ``ivf:0-<table_version>``, which is the watermark that
+    makes the index advanceable.  Every row's ``_ord`` (the order
+    column) is that version, 0 without one.  Returns ``{"n_lists",
+    "centroids"[, "table_version"]}``."""
     if centroids is None:
         centroids = ivf_seed_centroids(corpus, n_lists, vec_col, id_col)
         if kmeans_iters:
@@ -610,34 +662,58 @@ def build_ivf_index(
                 id_col=id_col,
                 assign=assign,
             )
-    assigned = (
-        _attach_ranking(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("embedding"),
-            ).withColumn(
-                "_nv", F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-            ),
-            "embedding",
-            "_nv",
-            centroids,
-            assign,
-        )
-        .withColumn("list_id", F.element_at(F.col("_rk"), 1)["cid"])
-        .drop("_nv", "_rk")
+    meta = {"n_lists": len(centroids), "centroids": [[c, v] for c, v in centroids]}
+    ord_v = 0 if table_version is None else int(table_version)
+    idx = LakeTable.create(
+        corpus.sparkSession,
+        index_dir,
+        f"list_id bigint, vec_id {corpus.schema[id_col].dataType.simpleString()}, "
+        f"embedding array<double>, {_IVF_ORD} bigint",
+        key_columns=["list_id", "vec_id"],
+        order_columns=[_IVF_ORD],
+        n_buckets=len(centroids),
+        soft_delete=True,  # merge_apply requires it; the advance deletes
+        bucket_columns=["list_id"],
     )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        os.path.join(index_dir, "cells")
+    base = idx.snapshot()
+    rows = _with_cells(
+        corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+        ).where(F.col("embedding").isNotNull()),
+        "embedding",
+        centroids,
+        assign,
+    ).select(
+        "list_id",
+        "vec_id",
+        "embedding",
+        F.lit(ord_v).cast("long").alias(_IVF_ORD),
+        idx.bucket_expr(base).alias(_BUCKET_COL),
+        F.lit(False).alias(_DELETED_COL),
     )
-    meta = {
-        "n_lists": len(centroids),
-        "centroids": [[cid, cv] for cid, cv in centroids],
-    }
+    idx.commit(
+        base,
+        "ivf-build",
+        add=idx._write_delta(
+            rows.repartition(min(len(centroids), 256), _BUCKET_COL), base
+        ),
+        epoch_id=(
+            None if table_version is None
+            else interval_epoch_id(_IVF_PREFIX, 0, ord_v)
+        ),
+        centroids=meta["centroids"],
+    )
     if table_version is not None:
-        meta["table_version"] = int(table_version)
-    with open(os.path.join(index_dir, "centroids.json"), "w") as f:
-        json.dump(meta, f)
+        meta["table_version"] = ord_v
     return meta
+
+
+def _unstamped(*_):
+    raise ValueError(
+        "index carries no table_version — build it with "
+        "build_ivf_index(..., table_version=...) to make it advanceable"
+    )
 
 
 def ivf_index_advance(
@@ -647,165 +723,94 @@ def ivf_index_advance(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     assign: str = "auto",
-) -> dict:
-    """Advance a persisted IVF index to a newer LakeTable snapshot
-    using ONLY the changes feed — the CDC-maintained secondary index.
+) -> MergeResult | None:
+    """Advance a persisted IVF index to a newer snapshot of ``table``
+    (default: its current version) from the changes feed alone — the
+    CDC-maintained secondary index.
 
-    A 10^10-vector index cannot be rebuilt per epoch (O(corpus)
-    assignment + a full rewrite).  This advances it in
-    O(changes + affected cells): the Delta-CDF feed
-    (``read_changes(include_preimage=True)``) yields each changed
-    key's NEW vector and its OLD vector, and because cell assignment
-    is a pure function of (vector, centroids), the old vector tells
-    us exactly which cell the stale entry lives in — no inverted
-    lookup, no index scan.  Only the union of old-cells and
-    new-cells is rewritten: stale entries drop via a broadcast
-    anti-join on the changed keys (O(changes)), fresh entries come
-    from assigning the upserts (map-only, literal or broadcast
-    centroids — same bit-identical ranking as the build).  Untouched
-    cells keep their files byte-for-byte, so concurrent readers keep
-    their partition-pruning economics and the advance's write cost is
-    O(corpus x affected_cells / n_lists), not O(corpus).
+    A 10^10-vector index cannot be rebuilt per epoch.  Cell assignment
+    is a pure function of (vector, centroids), so the feed's pre-image
+    (``read_changes(include_preimage=True)``) names the cell each
+    stale entry lives in — no inverted lookup, no index scan.  Each
+    change becomes index events, stamped ``_ord = to_version``:
 
-    Centroids are pinned (cell geometry never moves); queries through
-    :func:`ivf_knn_indexed` are oblivious to how current the index
-    is.  Contract (tested): advance(v1→v2) == build at v2 over the
-    same centroids, cell for cell.  Rewrites stage to a temp dir and
-    swap per-partition, and the sidecar version is stamped LAST, so a
-    crashed advance simply re-runs: removals anti-join and re-adds
-    overwrite, making the advance idempotent.
+    - a net upsert with a non-null vector upserts ``(new_cell, key,
+      embedding)``;
+    - a key that was deleted, or whose cell changed (null-safe; a
+      vector that became null has no cell), deletes ``(old_cell,
+      key)``.
 
-    Rows whose ``vec_col`` is null are dropped from the index (a
-    vector-less key cannot be a neighbor); a key whose embedding
-    BECOMES null is treated as a delete of its index entry.
+    One copy-on-write ``merge_apply`` lands them, so only the buckets
+    of old and new cells are rewritten and untouched buckets keep
+    their files.  This is the value index's step
+    (lake/valueindex.py) with a computed value and a carried payload.
+
+    Exactly-once through :func:`interval_step`: the interval
+    ``(watermark, to]`` commits under the epoch id ``ivf:<from>-<to>``
+    in the same snapshot as its rows, so a crash before that commit
+    leaves the index at its old version (readers never see half an
+    advance) and the re-run applies the interval whole; a target at
+    or below the watermark is a no-op.  An index built without
+    ``table_version`` has no watermark and raises ValueError: it is
+    never bootstrapped over.  Contract (tested): advance(v1→v2) ==
+    build at v2 over the same centroids.  Returns the MergeResult, or
+    None for a no-op.
 
     Reference analogue: none — the reference re-scrapes and re-renders
     whole reports per run (realdeal/luigi/email_deals.py); incremental
     secondary-index maintenance is the Spark-first recast of "keep
     derived artifacts current without recomputing them".
     """
-    import json
-    import os
-    import shutil
+    idx = LakeTable(table.spark, index_dir)
+    if ivf_index_watermark(idx) is None:
+        _unstamped()
 
-    spark = table.spark
-    meta_path = os.path.join(index_dir, "centroids.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if "table_version" not in meta:
-        raise ValueError(
-            "index carries no table_version — build it with "
-            "build_ivf_index(..., table_version=...) to make it advanceable"
-        )
-    from_v = int(meta["table_version"])
-    if to_version is None:
-        to_version = table.current_version()
-    stats = {"from_version": from_v, "to_version": int(to_version)}
-    if int(to_version) <= from_v:
-        # at or past the target already (a replayed interval after a
-        # crash/restart) — never regress, never invert the feed range
-        return {**stats, "advanced": False, "affected_cells": 0}
-    centroids = [
-        (int(cid), [float(x) for x in cv]) for cid, cv in meta["centroids"]
-    ]
-
-    # ONE feed computation (same discipline as cdc.rollup): project to
-    # (key, vector, change_type) and materialize — O(changes) rows.
-    ch = (
-        table.read_changes(from_v, to_version, include_preimage=True)
-        .select(
+    def interval(epoch_id, fv, tv):
+        cents = _index_centroids(idx.snapshot())
+        ch = table.read_changes(fv, tv, include_preimage=True).select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
             "change_type",
         )
-        .localCheckpoint(eager=True)
+        live = (F.col("change_type") == "upsert") & F.col("embedding").isNotNull()
+        cur = _with_cells(
+            ch.where(F.col("change_type") != "update_preimage"),
+            "embedding", cents, assign,
+        ).withColumn("list_id", F.when(live, F.col("list_id")))
+        old = _with_cells(
+            ch.where(
+                (F.col("change_type") == "update_preimage")
+                & F.col("embedding").isNotNull()
+            ),
+            "embedding", cents, assign,
+        ).select("vec_id", F.col("list_id").alias("_old"))
+        j = cur.join(old, on="vec_id", how="left").withColumn(
+            _IVF_ORD, F.lit(int(tv)).cast("long")
+        )
+        ups = j.where(F.col("list_id").isNotNull()).select(
+            "list_id", "vec_id", "embedding", _IVF_ORD,
+            F.lit(OP_UPDATE).alias(OP_COL),
+        )
+        dels = j.where(
+            F.col("_old").isNotNull() & ~F.col("list_id").eqNullSafe(F.col("_old"))
+        ).select(
+            F.col("_old").alias("list_id"), "vec_id", _IVF_ORD,
+            F.lit(OP_DELETE).alias(OP_COL),
+        )
+        return merge_apply(
+            idx, ups.unionByName(dels, allowMissingColumns=True), epoch_id=epoch_id
+        )
+
+    return interval_step(
+        table, idx, _IVF_PREFIX, _unstamped, interval, to_version=to_version
     )
-    changed_ids = (
-        ch.where(F.col("change_type") != "update_preimage")
-        .select("vec_id")
-        .distinct()
-    )
-
-    def _assigned(df: DataFrame) -> DataFrame:
-        return (
-            _attach_ranking(
-                df.withColumn(
-                    "_nv", F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-                ),
-                "embedding",
-                "_nv",
-                centroids,
-                assign,
-            )
-            .withColumn("list_id", F.element_at(F.col("_rk"), 1)["cid"])
-            .drop("_nv", "_rk")
-        )
-
-    upserts = _assigned(
-        ch.where(
-            (F.col("change_type") == "upsert")
-            & F.col("embedding").isNotNull()
-        )
-    )
-    pre = _assigned(
-        ch.where(
-            (F.col("change_type") == "update_preimage")
-            & F.col("embedding").isNotNull()
-        )
-    )
-    affected = sorted(
-        r["list_id"]
-        for r in upserts.select("list_id")
-        .union(pre.select("list_id"))
-        .distinct()
-        .collect()
-        if r["list_id"] is not None
-    )  # metadata-sized: bounded by min(2 x changed keys, n_lists)
-    stats["affected_cells"] = len(affected)
-    stats["affected_list_ids"] = [int(x) for x in affected]
-    cells_dir = os.path.join(index_dir, "cells")
-    emptied = 0
-    if affected:
-        survivors = (
-            spark.read.parquet(cells_dir)
-            .where(F.col("list_id").isin(affected))
-            .join(F.broadcast(changed_ids), on="vec_id", how="left_anti")
-        )
-        out = survivors.select("vec_id", "embedding", "list_id").unionByName(
-            upserts.select("vec_id", "embedding", "list_id")
-        )
-        # stage, then swap per partition: the scan above reads the live
-        # cell files, so never overwrite them in place mid-plan
-        staging = os.path.join(index_dir, "cells.staging")
-        shutil.rmtree(staging, ignore_errors=True)
-        out.write.partitionBy("list_id").mode("overwrite").parquet(staging)
-        for lid in affected:
-            src = os.path.join(staging, f"list_id={lid}")
-            dst = os.path.join(cells_dir, f"list_id={lid}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-            else:  # every row of the cell was deleted this interval
-                emptied += 1
-        shutil.rmtree(staging, ignore_errors=True)
-    stats["emptied_cells"] = emptied
-    meta["table_version"] = int(to_version)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)
-    return {**stats, "advanced": True}
 
 
-def ivf_index_watermark(index_dir: str) -> int | None:
-    """The table version a persisted IVF index reflects (its sidecar
-    stamp), None if it was built without ``table_version``."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        v = json.load(f).get("table_version")
-    return None if v is None else int(v)
+def ivf_index_watermark(idx: LakeTable) -> int | None:
+    """The source version the IVF index table ``idx`` reflects (from
+    its ``ivf:<from>-<to>`` epoch ids), None if it was built without
+    ``table_version``."""
+    return interval_watermark(idx, _IVF_PREFIX)
 
 
 def ivf_surface(table, index_dir: str, **advance_kw):
@@ -820,7 +825,7 @@ def ivf_surface(table, index_dir: str, **advance_kw):
 
     return Surface(
         table,
-        partial(ivf_index_watermark, index_dir),
+        partial(ivf_index_watermark, LakeTable(table.spark, index_dir)),
         partial(ivf_index_advance, table, index_dir, **advance_kw),
     )
 
@@ -837,53 +842,22 @@ def ivf_knn_indexed(
 ) -> DataFrame:
     """Top-k over a persisted IVF index (see :func:`build_ivf_index`).
 
-    The probed cells arrive as a pushed ``list_id IN (...)`` partition
-    filter, so the scan reads only nprobe of n_lists directories —
-    check ``.explain``: PartitionFilters carries the IN list.  Query
-    cell ranking happens driver-side against the sidecar centroids
-    (a few float ops per query row is NOT worth a Spark job); the
-    candidate join and re-rank are the same plan as :func:`ivf_knn`.
+    One snapshot of the index table serves the whole query: its
+    centroids rank each query's cells, and the one collect of the
+    probed cell ids also returns their buckets, so the scan is
+    ``read(buckets=...)`` of at most ``nprobe`` buckets per query
+    (check ``inputFiles()``) filtered to ``list_id IN (probed)``.  A
+    concurrent advance commits a new snapshot and cannot change what
+    this query reads.  The candidate join and re-rank are the same
+    plan as :func:`ivf_knn`.
     """
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        meta = json.load(f)
-    centroids = [(int(cid), [float(x) for x in cv]) for cid, cv in meta["centroids"]]
-    if nprobe < 1 or nprobe > len(centroids):
-        raise ValueError(f"nprobe={nprobe} out of range 1..{len(centroids)}")
-    q = (
-        _attach_ranking(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("_qv"),
-            ).withColumn("_nq", F.sqrt(_dot(F.col("_qv"), F.col("_qv")))),
-            "_qv",
-            "_nq",
-            centroids,
-            assign,
-        )
-        .withColumn(
-            "list_id",
-            F.explode(
-                F.transform(F.slice(F.col("_rk"), 1, nprobe), lambda s: s["cid"])
-            ),
-        )
-        .drop("_nq", "_rk")
+    idx = LakeTable(spark, index_dir)
+    snap = idx.snapshot()
+    q = _probes(queries, vec_col, id_col, _index_centroids(snap), nprobe, assign)
+    probed = q.select("list_id", idx.bucket_expr(snap).alias("_b")).distinct().collect()
+    cells = (
+        idx.read(snapshot=snap, buckets=sorted({r["_b"] for r in probed}))
+        .where(F.col("list_id").isin([r["list_id"] for r in probed]))
+        .select("list_id", "vec_id", F.col("embedding").alias("_cv"))
     )
-    probed = [r["list_id"] for r in q.select("list_id").distinct().collect()]
-    cells = spark.read.parquet(os.path.join(index_dir, "cells")).where(
-        F.col("list_id").isin(probed)
-    )
-    scored = (
-        cells.withColumnRenamed("embedding", "_cv")
-        .join(F.broadcast(q), on="list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(cells, q, k)

@@ -266,8 +266,7 @@ class Surface(NamedTuple):
     """A maintained surface: a derived store kept current from one
     LakeTable's changes feed.  Any object with these three members
     works with :func:`stream_maintain` / :func:`maintainer_lag`;
-    ``JoinViewMaintainer`` implements them directly, every other
-    surface gets one from its module's ``*_surface`` factory.
+    every surface gets one from its module's ``*_surface`` factory.
 
     - ``source`` — the LakeTable the surface tails;
     - ``watermark()`` — the highest source version the surface

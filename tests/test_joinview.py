@@ -10,9 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.joinview import (
-    JoinViewMaintainer,
     advance_join_view,
     create_join_view,
+    join_view_surface,
     join_view_watermark,
 )
 from realdeal_spark.lake.merge import merge_apply
@@ -161,7 +161,7 @@ def test_replay_is_noop_and_lag(spark, jv):
     v = view.current_version()
     assert advance_join_view(fact, dim, view, {"fk": "dk"}) is None
     assert view.current_version() == v
-    m = JoinViewMaintainer(fact, dim, view, {"fk": "dk"})
+    m = join_view_surface(fact, dim, view, {"fk": "dk"})
     assert maintainer_lag(m)["versions_behind"] == 0
     assert join_view_watermark(view)[1] == dim.current_version()
 
@@ -197,7 +197,7 @@ def test_fk_index_arrangement_path(spark, tmp_path):
 
     fact, dim, view = _mk_tables(spark, str(tmp_path))
     idx = create_value_index(view, f"{tmp_path}/fkidx", "fk", n_buckets=4)
-    m = JoinViewMaintainer(fact, dim, view, {"fk": "dk"}, fk_index=idx)
+    m = join_view_surface(fact, dim, view, {"fk": "dk"}, fk_index=idx)
     _apply(fact, spark, FACT_SCHEMA, F1)
     _apply(dim, spark, DIM_SCHEMA, D1)
     m.advance()
@@ -222,7 +222,7 @@ def test_streaming_maintainer(spark, tmp_path):
     _apply(dim, spark, DIM_SCHEMA, D1)
     _apply(fact, spark, FACT_SCHEMA, [(5, 20, 200, 5.0, "update")])
     q = stream_maintain(
-        JoinViewMaintainer(fact, dim, view, {"fk": "dk"}),
+        join_view_surface(fact, dim, view, {"fk": "dk"}),
         f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
     )
@@ -231,7 +231,7 @@ def test_streaming_maintainer(spark, tmp_path):
     # a dim-only edit rides the next drain even with no fact traffic
     _apply(dim, spark, DIM_SCHEMA, [(200, 30, "b-v2", 0.66, "update")])
     q = stream_maintain(
-        JoinViewMaintainer(fact, dim, view, {"fk": "dk"}),
+        join_view_surface(fact, dim, view, {"fk": "dk"}),
         f"{tmp_path}/ckpt",
         trigger={"availableNow": True},
     )
@@ -273,7 +273,7 @@ def test_maintainer_compaction_amortizer(spark, jv):
     disturbing convergence, watermarks, or replay idempotence
     (compaction is a maintenance commit the feed skips)."""
     fact, dim, view = jv
-    m = JoinViewMaintainer(
+    m = join_view_surface(
         fact, dim, view, {"fk": "dk"}, mode="mor", compact_every=2,
     )
     _apply(fact, spark, FACT_SCHEMA, F1)
@@ -303,7 +303,7 @@ def test_streaming_maintainer_with_compaction(spark, tmp_path):
     _apply(dim, spark, DIM_SCHEMA, D1)
     _apply(fact, spark, FACT_SCHEMA, [(5, 20, 200, 5.0, "update")])
     q = stream_maintain(
-        JoinViewMaintainer(
+        join_view_surface(
             fact, dim, view, {"fk": "dk"}, mode="mor", compact_every=1
         ),
         f"{tmp_path}/ckpt",
@@ -316,7 +316,7 @@ def test_streaming_maintainer_with_compaction(spark, tmp_path):
     wm = join_view_watermark(view)
     v = view.current_version()
     q = stream_maintain(
-        JoinViewMaintainer(
+        join_view_surface(
             fact, dim, view, {"fk": "dk"}, mode="mor", compact_every=1
         ),
         f"{tmp_path}/ckpt",

@@ -9,15 +9,15 @@ join view:
   replica empty and a value index without a watermark);
 - an advance at or below the watermark is a no-op on every surface,
   which restarting a stream off an older checkpoint relies on;
-- a commit that fails mid-advance on any LakeTable-backed surface
-  leaves only orphan files, and the retry reconverges;
+- a commit that fails mid-advance on any of the six surfaces behind
+  ``interval_step`` leaves only orphan files, and the retry
+  reconverges;
 - a processingTime soak: all seven maintainers run while the base
   keeps taking commits; lag returns to zero and every surface equals
   its from-scratch twin."""
 
 from __future__ import annotations
 
-import json
 import os
 import random
 import shutil
@@ -26,7 +26,7 @@ import time as _time
 import pytest
 from pyspark.sql import functions as F
 
-from realdeal_spark.cdc.joinview import JoinViewMaintainer, create_join_view
+from realdeal_spark.cdc.joinview import create_join_view, join_view_surface
 from realdeal_spark.cdc.replicate import create_replica, replica_surface
 from realdeal_spark.cdc.rollup import (
     Measure,
@@ -140,18 +140,19 @@ def _dim(spark, root: str) -> LakeTable:
 
 
 def _create(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
-    """What a surface of ``kind`` persists: its LakeTable, or the IVF
-    index dir."""
+    """The LakeTable a surface of ``kind`` persists.  The IVF index is
+    built over the earliest retained version that holds rows (it has
+    no snapshot bootstrap), so its first advance has work to do."""
     if kind == "replica":
         return create_replica(src, f"{root}/replica", n_buckets=2)
     if kind == "rollup":
         return create_rollup_table(src, f"{root}/rollup", ["lang"], MEASURES)
     if kind == "ivf":
+        v = next(v for v in src.versions() if src.snapshot(v).files)
         build_ivf_index(
-            src.read(), f"{root}/ivf", n_lists=4,
-            table_version=src.current_version(),
+            src.read(version=v), f"{root}/ivf", n_lists=4, table_version=v
         )
-        return f"{root}/ivf"
+        return LakeTable(src.spark, f"{root}/ivf")
     if kind == "value_index":
         return create_value_index(src, f"{root}/vidx", "lang", n_buckets=4)
     if kind == "dedup_index":
@@ -167,14 +168,14 @@ def _surface(kind: str, src: LakeTable, dim: LakeTable | None, h):
     if kind == "rollup":
         return rollup_surface(src, h, ["lang"], MEASURES)
     if kind == "ivf":
-        return ivf_surface(src, h)
+        return ivf_surface(src, h.root)
     if kind == "value_index":
         return value_index_surface(src, h, "lang")
     if kind == "dedup_index":
         return dedup_index_surface(src, h, **LSH)
     if kind == "history":
         return history_surface(src, h)
-    return JoinViewMaintainer(src, dim, h, {"lang": "lang"})
+    return join_view_surface(src, dim, h, {"lang": "lang"})
 
 
 def _build(kind: str, src: LakeTable, dim: LakeTable | None, root: str):
@@ -191,12 +192,11 @@ def _state(t: LakeTable):
     )
 
 
-def _cells(spark, idx):
-    df = spark.read.parquet(os.path.join(idx, "cells"))
+def _cells(idx: LakeTable):
     return sorted(
         (r["vec_id"], r["list_id"],
          tuple(round(x, 9) for x in r["embedding"]))
-        for r in df.collect()
+        for r in idx.read().collect()
     )
 
 
@@ -289,30 +289,23 @@ def base_and_dim(spark, tmp_path_factory):
     return src, _dim(spark, root)
 
 
-def _content(spark, kind, s, h):
-    if kind == "ivf":
-        return _cells(spark, h)
-    return h.current_version()
-
-
 @pytest.mark.parametrize("kind", KINDS)
 def test_advance_at_or_below_watermark_is_noop(
     spark, tmp_path, base_and_dim, kind
 ):
     """After a bootstrap, advancing to any retained version at or
     below the watermark — a replayed interval from an older checkpoint
-    — commits nothing on a LakeTable-backed surface and changes
-    neither the cells nor the watermark of the IVF index."""
+    — commits nothing and leaves the watermark where it was."""
     src, dim = base_and_dim
     s, h = _build(kind, src, dim, str(tmp_path))
     s.advance()
     wm = s.watermark()
     assert wm == src.current_version()
-    before = _content(spark, kind, s, h)
+    before = h.current_version()
     for t in src.versions():
         s.advance(to_version=t)
     assert s.watermark() == wm
-    assert _content(spark, kind, s, h) == before
+    assert h.current_version() == before
 
 
 @pytest.fixture(scope="module")
@@ -348,7 +341,7 @@ def _parquet(t: LakeTable) -> set[str]:
 
 
 @pytest.mark.parametrize(
-    "kind", ["replica", "rollup", "value_index", "dedup_index", "history"]
+    "kind", ["replica", "rollup", "ivf", "value_index", "dedup_index", "history"]
 )
 def test_crash_mid_advance_retries_to_no_crash_result(
     spark, tmp_path, null_lang_base, monkeypatch, kind
@@ -454,17 +447,13 @@ def test_seven_maintainers_soak_processing_time(spark, tmp_path):
     )
     ivf = built["ivf"][1]
     rebuilt = f"{root}/ivf_rebuild"
-    with open(os.path.join(ivf, "centroids.json")) as f:
-        meta = json.load(f)
-    cents = [
-        (int(cid), [float(x) for x in cv]) for cid, cv in meta["centroids"]
-    ]
     build_ivf_index(
-        src.read(), rebuilt, centroids=cents,
+        src.read(), rebuilt,
+        centroids=[(int(c), v) for c, v in ivf.snapshot().centroids],
         table_version=src.current_version(),
     )
     assert ivf_index_watermark(ivf) == src.current_version()
-    assert _cells(spark, ivf) == _cells(spark, rebuilt)
+    assert _cells(ivf) == _cells(LakeTable(spark, rebuilt))
     vidx = built["value_index"][1]
     for langs in (["de"], ["en"], ["fr"], LANGS):
         assert _served(src, vidx, langs) == _scanned(src, langs)

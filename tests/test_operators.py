@@ -468,7 +468,8 @@ def test_decontaminate_corpus_is_never_shuffled_before_probe(spark):
 def test_ivf_index_build_query_matches_unindexed_and_prunes(spark, tmp_path):
     """The persisted IVF index returns exactly the ad-hoc ivf_knn
     result (same centroids, same ranking) while scanning only the
-    probed cells' files — partition pruning made physical."""
+    probed cells' buckets — the inverted file made physical."""
+    import os
     import random
 
     from realdeal_spark.operators.similarity import (
@@ -501,17 +502,21 @@ def test_ivf_index_build_query_matches_unindexed_and_prunes(spark, tmp_path):
     }
     assert got == want
 
-    # partition pruning: the probed list ids arrive as a partition
-    # filter on the list_id= directories (inputFiles() ignores
-    # partition filters, so assert on the physical plan instead)
+    # bucket pruning: a one-cell probe reads exactly the files of the
+    # bucket that holds the query vector's own cell
+    from urllib.parse import urlparse
+
+    from realdeal_spark.lake import LakeTable
+
+    index = LakeTable(spark, idx)
+    b0 = index.read(with_bucket=True).where("vec_id = 0").first()["_bucket"]
+    files = {
+        b: {os.path.join(idx, fe["path"]) for fe in fl}
+        for b, fl in index.snapshot().files.items()
+    }
     one = ivf_knn_indexed(spark, idx, df.where("vec_id = 0"), k=3, nprobe=1)
-    from tests.test_plans import plan
-
-    p = plan(one)
-    import re
-
-    m = re.search(r"PartitionFilters: \[[^\]]*list_id", p)
-    assert m, "probed-cell filter not pushed to the partition scan"
+    assert {urlparse(f).path for f in one.inputFiles()} == files[str(b0)]
+    assert len(files) > 1
 
     # kmeans-refined build still answers (recall sanity only)
     idx2 = str(tmp_path / "ivf2")

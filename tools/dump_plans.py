@@ -261,7 +261,7 @@ def main() -> None:
         )
     )
 
-    # round 3: persisted IVF — probed cells as a partition filter
+    # persisted IVF — the probed cells' buckets, read off one snapshot
     import tempfile
 
     from realdeal_spark.operators.similarity import (
@@ -273,29 +273,14 @@ def main() -> None:
     build_ivf_index(emb, idxdir, n_lists=8)
     sections.append(
         (
-            "Persisted IVF query (partition-pruned cell scan)",
-            "The probed cell ids arrive as PartitionFilters on the "
-            "list_id= directories — the scan reads nprobe of n_lists "
-            "cells, never the whole index; assignment cost was paid "
-            "once at build.",
+            "Persisted IVF query (bucket-pruned cell scan)",
+            "The index is a LakeTable bucketed on list_id alone: the "
+            "scan's file list holds only the probed cells' buckets "
+            "(pruned from one snapshot's manifest before any scan — at "
+            "most nprobe of n_lists buckets per query), and the probed "
+            "ids filter the scan (list_id IN ...); assignment cost was "
+            "paid once at build.",
             ivf_knn_indexed(spark, idxdir, emb.where("vec_id < 3"), k=3, nprobe=2),
-        )
-    )
-
-    # round 4: IVF advance survivors read — the exact plan shape
-    # ivf_index_advance builds when rewriting affected cells
-    changed = emb.where("vec_id % 97 = 0").select("vec_id")
-    sections.append(
-        (
-            "IVF advance survivors read (affected cells only)",
-            "The stale-entry drop scans ONLY the affected cells "
-            "(PartitionFilters on list_id=) and removes changed keys "
-            "via a BroadcastHashJoin LeftAnti on the O(changes) key "
-            "set — the index advance never reads untouched cells or "
-            "shuffles the corpus.",
-            spark.read.parquet(f"{idxdir}/cells")
-            .where(F.col("list_id").isin([1, 3]))
-            .join(F.broadcast(changed), on="vec_id", how="left_anti"),
         )
     )
 
