@@ -28,7 +28,9 @@ double; every returned ratio/score is ``round(x, 6)`` on both sides.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 from collections.abc import Callable
@@ -59,6 +61,20 @@ from realdeal_spark.operators.multimodal import binary_meta
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+_SCRATCH_ROOT: list[str] = []
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh dir for an entry's tables, under one per-process parent
+    that an atexit hook removes.  Entries return lazy DataFrames over
+    these tables and the caller reads them after the entry returns, so
+    nothing can be removed any earlier."""
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="rds_entry_"))
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT[0], True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
 # op mapping: events table → CDC ops (SURVEY §2.9 ST5)
@@ -169,7 +185,7 @@ def q_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_merge_")
+    root = _scratch_dir("rds_merge_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -201,7 +217,7 @@ def q_cdc_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_repl_")
+    root = _scratch_dir("rds_repl_")
     src = LakeTable.create(
         spark,
         f"{root}/src",
@@ -236,7 +252,7 @@ def q_cdc_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_roll_")
+    root = _scratch_dir("rds_roll_")
     table = LakeTable.create(
         spark, f"{root}/state", schema,
         key_columns=["user_id"], order_columns=["ts", "event_id"],
@@ -293,7 +309,7 @@ def q_cdc_ndv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type string, value double, last_op string, "
         "u_bucket bigint, v_bucket bigint"
     )
-    root = tempfile.mkdtemp(prefix="rds_ndv_")
+    root = _scratch_dir("rds_ndv_")
     table = LakeTable.create(
         spark, f"{root}/state", schema,
         key_columns=["user_id"], order_columns=["ts", "event_id"],
@@ -328,7 +344,7 @@ def q_cdc_merge_replay_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_mor_")
+    root = _scratch_dir("rds_mor_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -364,7 +380,7 @@ def q_cdc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_lkp_")
+    root = _scratch_dir("rds_lkp_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -406,7 +422,7 @@ def q_lake_value_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_vidx_")
+    root = _scratch_dir("rds_vidx_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -449,7 +465,7 @@ def q_lake_predicate_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_dml_")
+    root = _scratch_dir("rds_dml_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -488,7 +504,7 @@ def q_lake_check_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_check_")
+    root = _scratch_dir("rds_check_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -530,7 +546,7 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     which epoch each winner came from."""
     log = _change_log(spark, sf_dir)
     ts_type = log.schema["ts"].dataType.simpleString()
-    root = tempfile.mkdtemp(prefix="rds_evo_")
+    root = _scratch_dir("rds_evo_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -573,7 +589,7 @@ def q_cdc_enrich_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_scd_")
+    root = _scratch_dir("rds_scd_")
     table = LakeTable.create(
         spark, f"{root}/state", schema,
         key_columns=["user_id"], order_columns=["ts", "event_id"],
@@ -623,7 +639,7 @@ def q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double"
     )
-    root = tempfile.mkdtemp(prefix="rds_scd2_")
+    root = _scratch_dir("rds_scd2_")
     table = LakeTable.create(
         spark, f"{root}/state", schema,
         key_columns=["user_id"], order_columns=["ts", "event_id"],
@@ -678,7 +694,7 @@ def q_cdc_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from realdeal_spark.lake.merge import merge_apply
 
-    root = tempfile.mkdtemp(prefix="rds_jv_")
+    root = _scratch_dir("rds_jv_")
     fact = LakeTable.create(
         spark, f"{root}/fact", schema,
         key_columns=["user_id"], order_columns=["ts", "event_id"],
@@ -795,7 +811,7 @@ def q_cdc_quarantine_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double"
     )
-    root = tempfile.mkdtemp(prefix="rds_redrive_")
+    root = _scratch_dir("rds_redrive_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -830,7 +846,7 @@ def q_cdc_read_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_chg_")
+    root = _scratch_dir("rds_chg_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -860,7 +876,7 @@ def q_lake_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level, so the result is exactly the SQL range filter."""
     ev = _t(spark, sf_dir, "events")
     ts_type = ev.schema["ts"].dataType.simpleString()
-    root = tempfile.mkdtemp(prefix="rds_rng_")
+    root = _scratch_dir("rds_rng_")
     table = LakeTable.create(
         spark,
         f"{root}/log",
@@ -1205,7 +1221,7 @@ def q_sink_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.min("value"), 6).alias("min_value"),
         F.round(F.max("value"), 6).alias("max_value"),
     )
-    out = tempfile.mkdtemp(prefix="rds_csv_") + "/rollup"
+    out = _scratch_dir("rds_csv_") + "/rollup"
     write_partitioned_csv(agg, out, "event_type", mode="overwrite")
     return spark.read.option("header", "true").schema(
         "n bigint, min_value double, max_value double, event_type string"
@@ -1230,7 +1246,7 @@ def q_sink_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.round("value", 6).alias("value")
     )
-    out = tempfile.mkdtemp(prefix="rds_json_") + "/purchases"
+    out = _scratch_dir("rds_json_") + "/purchases"
     write_json_batch(slim, out, mode="overwrite")
     return read_json_batch(
         spark, out, "event_id bigint, user_id bigint, value double",
@@ -1392,7 +1408,7 @@ def q_polygon_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             pair(cxt, cyt + 9),
         ).alias("coordinates"),
     )
-    out = tempfile.mkdtemp(prefix="rds_polycsv_") + "/polys"
+    out = _scratch_dir("rds_polycsv_") + "/polys"
     csv_df.write.mode("overwrite").option("header", "true").csv(out)
     polys = read_polygon_csv(spark, out)
     return polys.select(
@@ -1497,7 +1513,7 @@ def q_cdc_epoch_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_adm_")
+    root = _scratch_dir("rds_adm_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -1555,7 +1571,7 @@ def q_cdc_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"user_id bigint, ts {ts_type}, event_id bigint, "
         "event_type string, value double, last_op string"
     )
-    root = tempfile.mkdtemp(prefix="rds_lin_")
+    root = _scratch_dir("rds_lin_")
     table = LakeTable.create(
         spark,
         f"{root}/state",
@@ -1837,7 +1853,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realdeal_spark.lake.merge import merge_apply
 
     c = _doubled_corpus(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="rds_didx_")
+    root = _scratch_dir("rds_didx_")
     table = LakeTable.create(
         spark, f"{root}/docs", "doc_id bigint, lsn bigint, text string",
         key_columns=["doc_id"], order_columns=["lsn"],
@@ -2175,19 +2191,18 @@ def q_knn_ivf_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-IVF roundtrip (similarity.py build_ivf_index /
-    ivf_knn_indexed): build the inverted file on disk (cells
-    partitioned by list_id), answer from it with the probed cells
-    arriving as a pushed partition filter.  Must equal the ad-hoc
-    ivf_knn answer — the oracle is the same SQL."""
-    import tempfile
-
+    ivf_knn_indexed): build the inverted file as a LakeTable bucketed
+    on list_id, answer from it with the scan pruned to the probed
+    cells' buckets of one snapshot, then filtered with
+    ``list_id IN …``.  Must equal the ad-hoc ivf_knn answer — the
+    oracle is the same SQL."""
     from realdeal_spark.operators.similarity import (
         build_ivf_index,
         ivf_knn_indexed,
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="rds_ivf_")
+    idx = _scratch_dir("rds_ivf_")
     build_ivf_index(e, idx, n_lists=16)
     queries = e.where(F.col("vec_id") < 5)
     return ivf_knn_indexed(spark, idx, queries, k=5, nprobe=4)
@@ -2203,9 +2218,6 @@ def q_knn_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected cells), never a rebuild — and answer from it.  Oracle =
     the IVF SQL with centroids pinned to the ORIGINAL corpus and the
     cell corpus set to the post-epoch state."""
-    import shutil
-    import tempfile
-
     from realdeal_spark.lake import LakeTable
     from realdeal_spark.lake.merge import merge_apply
     from realdeal_spark.operators.similarity import (
@@ -2217,10 +2229,9 @@ def q_knn_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    root = tempfile.mkdtemp(prefix="rds_ivfm_t_")
-    shutil.rmtree(root)
+    root = _scratch_dir("rds_ivfm_")
     t = LakeTable.create(
-        spark, root, "vec_id bigint, lsn bigint, embedding array<double>",
+        spark, f"{root}/table", "vec_id bigint, lsn bigint, embedding array<double>",
         key_columns=["vec_id"], order_columns=["lsn"],
         n_buckets=8, soft_delete=True,
     )
@@ -2231,8 +2242,7 @@ def q_knn_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("insert").alias("op"),
         ),
     )
-    idx = tempfile.mkdtemp(prefix="rds_ivfm_x_")
-    shutil.rmtree(idx)
+    idx = f"{root}/index"
     build_ivf_index(
         t.read().select("vec_id", "embedding"), idx, n_lists=16,
         table_version=t.current_version(),

@@ -9,8 +9,10 @@ The headline metric of the engine (BASELINE.json) is sustained
 MERGE-apply throughput, reported as ``merge_events_per_sec`` —
 computed from the ``cdc_merge_replay`` query, which replays the full
 change log through the lake-table MERGE path in lsn-range epochs.
+The full per-rep detail (timings, wall-clock stamps, first-run
+view) goes to ``BENCH_DETAIL.json`` next to this file (untracked).
 Scaling-efficiency evidence (N vs 4N cores) is produced by
-``tools/bench_scaling.py`` which shells out to this file at two
+``tools/bench_scaling.py``, which runs ``jobs/run_cdc.py`` at two
 parallelism levels.
 """
 
@@ -151,7 +153,7 @@ def main() -> None:
     # the stdout line must stay compact — the driver's tail-capture
     # window truncated round 4's line (BENCH_r04 parsed:null), so the
     # full detail (per-rep timings, wall-clock stamps, first-run view)
-    # goes to an in-repo file and stdout carries only the summary.
+    # goes to an untracked file and stdout carries only the summary.
     detail = {
         "sf": float(sf),
         "cpus": cpus,
@@ -163,7 +165,7 @@ def main() -> None:
         "medians": timings,
     }
     here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_DETAIL_r5.json"), "w") as f:
+    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
     out = {
         "metric": "headline-suite wall time (median of interleaved reps)",

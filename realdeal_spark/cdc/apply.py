@@ -97,8 +97,12 @@ class CdcApplier:
 
     ``salt_buckets`` (with ``conflate_strategy="window"`` only)
     enables the two-phase salted dedup for hot-key change logs —
-    see cdc.conflate and BENCH_SKEW.md for when the explicit salt
-    beats the AQE fallback.
+    see cdc.conflate.  Measured at local[8] on 6M events with one url
+    carrying half of them: the salt (32 buckets) lifts the pinned
+    window strategy from 101k to 169k events/s on the hot log, but
+    halves it on uniform input (179k → 84k), while light and max_by
+    stay at 197k–246k either way — so it is an opt-in skew remedy,
+    never a default.
 
     ``merge_mode="mor"`` switches the MERGE to merge-on-read (write
     only changed rows as per-bucket deltas; see lake.merge) — the

@@ -194,8 +194,9 @@ def advance_join_view(
     the TRICKLE regime (a few changed dim keys against a huge view)
     and only when the view was created with ``key_blooms=True`` — a
     bloom-less key lookup touches every bucket a key hashes to and
-    is never cheaper than the plain semi-scan (measured,
-    BENCH_JOINVIEW.md).  Without it the dim-side read is a
+    is never cheaper than the plain semi-scan (measured at local[32],
+    16M narrow fact rows: dim advance 27.2 s plain vs 41.1 s indexed;
+    a 5-key trickle 21.1 s vs 31.4 s).  Without it the dim-side read is a
     fk-semi-joined view scan — correct, O(view) input per dim epoch;
     fine for rare dim changes at bench scale, the indexed+bloomed
     path is the 100-TB trickle answer.
@@ -388,8 +389,9 @@ def join_view_surface(
     ``compact_every``: compact the view — and the ``fk_index``, if one
     is passed — after every N effective advances of this surface: the
     MoR delta-stack amortizer (the same lever as
-    ``CdcApplier(compact_every=…)``; BENCH_JOINVIEW.md's 64M trickle
-    outlier is what an uncompacted stack costs).  Compaction is a
+    ``CdcApplier(compact_every=…)``; a 5-key trickle over an
+    uncompacted 64M-row view measured 132.6 s against a 19.6 s full
+    recompute, which is what an uncompacted stack costs).  Compaction is a
     maintenance commit: the changes feed skips it and the in-band
     watermarks are untouched, so it composes with exactly-once replay
     (tested)."""

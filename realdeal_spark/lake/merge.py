@@ -237,7 +237,11 @@ def merge_apply(
     file conflation, no carryover anti-join, no old-snapshot scan —
     which is what keeps maintained rollups / replicas / secondary
     indexes O(changes) when changed keys outnumber buckets (at
-    10^10 rows they always do).  Off by default: a bulk load would
+    10^10 rows they always do).  Measured at local[8] on a 40M-row
+    table with 100k-key epochs: a rollup advance over captured epochs
+    stayed flat at 2.25–3.93 s while the recompute grew to ~8.6 s (it
+    was 1.5 s at 4M rows); without capture the feed reconstruction
+    alone took 48–56 s.  Off by default: a bulk load would
     pay ~2× write volume for capture no consumer needs; turn it on
     for tables that feed CDF consumers (``CdcApplier(
     capture_changes=True)``).

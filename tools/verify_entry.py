@@ -15,6 +15,7 @@ which fall outside the checked window (the tail is listed).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 from datetime import datetime
@@ -22,7 +23,8 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 
