@@ -35,6 +35,23 @@ from realdeal_spark.cdc.conflate import conflate
 from realdeal_spark.lake.merge import MergeResult, merge_apply
 from realdeal_spark.lake.table import LakeTable
 
+# Epoch-boundary driver GC fires once this many events were applied
+# since the last one.  Spark's ContextCleaner reclaims dead shuffle
+# files, broadcasts, and checkpoint blocks only when the driver JVM
+# collects — a long epoch loop on a large heap can run for hours
+# without one, and the accumulation compounds: measured per-epoch wall
+# grew 34s -> 124s over 8 epochs of a 160M-event replay (round-5
+# scaling soak).  The boundary is the RIGHT moment: no stage is
+# running and the live set is minimal, so the collection is cheap; a
+# timer-based periodicGC instead fires mid-epoch against a heap full
+# of live shuffle state and measurably regresses (765s -> 896s at
+# local[4]).  Same lifecycle discipline a streaming query gets from
+# micro-batch turnover.  A full System.gc() costs a measurable fixed
+# ~0.3-0.5s on a warm multi-GB heap, so tiny epochs must not pay it:
+# a 30k-row bench replay never GCs (measured 5.2s -> 4.3s); a
+# 20M-row soak epoch always does, which is where the reclaim matters.
+GC_MIN_ROWS = 1_000_000
+
 
 @dataclass
 class EpochReport:
@@ -128,8 +145,6 @@ class CdcApplier:
         salt_buckets: int | None = None,
         quarantine_dir: str | None = None,
         capture_changes: bool = False,
-        gc_every_epochs: int | None = 1,
-        gc_min_rows: int = 1_000_000,
     ):
         self.table = table
         self.lsn_col = lsn_col
@@ -151,27 +166,7 @@ class CdcApplier:
         self._epochs_since_compact = 0
         self.report_sink = report_sink
         self.reports: list[EpochReport] = []
-        # Epoch-boundary driver GC (every N applied epochs; None/0
-        # disables).  Spark's ContextCleaner reclaims dead shuffle
-        # files, broadcasts, and checkpoint blocks only when the
-        # driver JVM collects — a long epoch loop on a large heap can
-        # run for hours without one, and the accumulation compounds:
-        # measured per-epoch wall grew 34s -> 124s over 8 epochs of a
-        # 160M-event replay (round-5 scaling soak).  The boundary is
-        # the RIGHT moment: no stage is running and the live set is
-        # minimal, so the collection is cheap; a timer-based
-        # periodicGC instead fires mid-epoch against a heap full of
-        # live shuffle state and measurably regresses (765s -> 896s
-        # at local[4]).  Same lifecycle discipline a streaming query
-        # gets from micro-batch turnover.  A full System.gc() costs a
-        # measurable fixed ~0.3-0.5s on a warm multi-GB heap, so tiny
-        # epochs must not pay it: the trigger also requires gc_min_rows
-        # events applied since the last collection (a 30k-row bench
-        # replay never GCs — measured 5.2s -> 4.3s; a 20M-row soak
-        # epoch always does, which is where the reclaim matters).
-        self.gc_every_epochs = gc_every_epochs
-        self.gc_min_rows = gc_min_rows
-        self._epochs_since_gc = 0
+        # events applied since the last epoch-boundary GC (GC_MIN_ROWS)
         self._rows_since_gc = 0
 
     # ------------------------------------------------------------ state
@@ -224,11 +219,7 @@ class CdcApplier:
         snapshot's applied set returns a skipped report carrying that
         snapshot's version."""
         t0 = time.monotonic()
-        from realdeal_spark.lake.merge import _phase_timer
-
-        mark = _phase_timer()
         snap = self.table.snapshot()
-        mark("epoch.snapshot")
         if epoch_id in snap.applied_epochs:
             return self._record(
                 EpochReport(
@@ -282,7 +273,6 @@ class CdcApplier:
             # iff the winner set surely fits; gate on keys, not
             # events).
             n_in, est_keys, bcast = admission_stats(batch, snap.key_columns)
-            mark("epoch.admission")
             conflate_kwargs["broadcast_winners"] = bcast
             if not bcast:
                 # over-cap winner set: Bloom-prefilter the payload side
@@ -442,32 +432,23 @@ class CdcApplier:
         return out
 
     def _maybe_driver_gc(self, report: EpochReport) -> None:
-        """Trigger a driver GC at the epoch boundary (see __init__
-        gc_every_epochs / gc_min_rows) so the ContextCleaner reclaims
-        the finished epoch's shuffle/broadcast state before the next
-        one starts.  Skipped epochs (idempotent replays) don't count —
-        they created no state — and small epochs accumulate toward the
-        gc_min_rows threshold instead of paying the fixed GC cost."""
-        if not self.gc_every_epochs or report.skipped:
+        """Trigger a driver GC at the epoch boundary (see GC_MIN_ROWS)
+        so the ContextCleaner reclaims the finished epoch's
+        shuffle/broadcast state before the next one starts.  Skipped
+        epochs (idempotent replays) don't count — they created no
+        state — and small epochs accumulate toward GC_MIN_ROWS instead
+        of paying the fixed GC cost."""
+        if report.skipped:
             return
-        self._epochs_since_gc += 1
         self._rows_since_gc += report.events_in
-        if (
-            self._epochs_since_gc >= self.gc_every_epochs
-            and self._rows_since_gc >= self.gc_min_rows
-        ):
-            self._epochs_since_gc = 0
+        if self._rows_since_gc >= GC_MIN_ROWS:
             self._rows_since_gc = 0
             self._fire_driver_gc()
 
     def _fire_driver_gc(self) -> None:
-        from realdeal_spark.lake.merge import _phase_timer
-
-        mark = _phase_timer()
         try:
             jvm = self.table.spark.sparkContext._jvm
             jvm.System.gc()
-            mark("epoch.gc")
         except Exception:
             pass  # py4j unavailable (e.g. Spark Connect): backstop
             # timer in session.py still bounds the accumulation

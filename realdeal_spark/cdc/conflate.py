@@ -9,8 +9,11 @@ keeps the first rowid per key) plus its intra-batch key-set dedup
 Three strategies, identical results (tested against each other):
 
 - ``light`` (the engine default — see :func:`conflate`): winner-find
-  on a (key, order) projection + semi join.  Never shuffles the
-  payload; the scale-correct choice for wide/binary rows (html).
+  on a (key, order) projection + semi join + an exact-replay
+  ``dropDuplicates(key, order)``.  The winner-find never shuffles the
+  payload; the collapse's exchange carries the winners' full rows, so
+  the payload crosses one exchange sized by the winners, not the
+  batch.  The scale-correct choice for wide/binary rows (html).
 
 - ``max_by``: ``groupBy(key).agg(max_by(struct(*), order))``.
   Plans as **SortAggregate** (struct-typed agg buffers are not
@@ -38,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from realdeal_spark.operators.relational import latest_per_key
+
 
 def conflate(
     df: DataFrame,
@@ -54,12 +59,14 @@ def conflate(
     ``max_by`` strategy partial aggregation already bounds
     per-partition hot-key volume.
 
-    The ``light`` strategy never shuffles the payload: winners are
-    found on a (key, order) projection only — for a web-page change
-    log that's ~30 bytes/row instead of the ~KBs of html — and a
-    left-semi join on (key, order) pulls the winner rows.  With
+    The ``light`` strategy finds winners on a (key, order) projection
+    only — for a web-page change log that's ~30 bytes/row instead of
+    the ~KBs of html — and a left-semi join on (key, order) pulls the
+    winner rows.  The exact-replay ``dropDuplicates`` that ends it
+    plans an ``Exchange hashpartitioning(key, order)`` over the
+    winners' full rows: the payload crosses that one exchange.  With
     ``broadcast_winners`` the semi join broadcasts the winner list so
-    the payload side is not shuffled at all (valid while winners-per-
+    the join does not shuffle the payload side (valid while winners-per-
     epoch fit the broadcast budget — bounded by the per-trigger
     admission budget, SURVEY ST4).  Beyond the cap the appliers drop
     the broadcast AND pass ``bloom_expected_keys`` (the admission
@@ -127,14 +134,7 @@ def conflate(
         return out.dropDuplicates(key_columns + order_columns)
 
     if strategy == "max_by":
-        ordert = F.struct(*[F.col(c) for c in order_columns])
-        row = F.struct(*[F.col(c) for c in df.columns])
-        out = (
-            df.groupBy(*key_columns)
-            .agg(F.max_by(row, ordert).alias("_row"))
-            .select("_row.*")
-        )
-        return out
+        return latest_per_key(df, key_columns, order_columns)
 
     if strategy == "window":
         order_desc = [F.desc(c) for c in order_columns]

@@ -41,7 +41,6 @@ from realdeal_spark.lake.merge import (
     OP_DELETE,
     OP_UPDATE,
     MergeResult,
-    _phase_timer,
     merge_apply,
 )
 from realdeal_spark.lake.table import LakeTable, interval_step, interval_watermark
@@ -184,7 +183,6 @@ def advance_dedup_index(
     built with silently corrupts it, exactly as mixing permutation
     families would in any LSH store; keep them pinned at the call
     site (:func:`dedup_index_surface` does)."""
-    mark = _phase_timer()
     key, orders, _ = _base_columns(src)
 
     def bootstrap(epoch_id: str, tv: int) -> MergeResult:
@@ -210,7 +208,6 @@ def advance_dedup_index(
             .select(key, text_col, "_old_text", "change_type", *orders)
             .localCheckpoint(eager=True)
         )
-        mark("didx.feed")
         ups_rows = j.where(
             (F.col("change_type") == "upsert") & F.col(text_col).isNotNull()
         ).select(key, text_col, *orders)
@@ -240,10 +237,7 @@ def advance_dedup_index(
             ups.withColumn(OP_COL, F.lit(OP_UPDATE))
             .unionByName(dels.withColumn(OP_COL, F.lit(OP_DELETE)))
         )
-        mark("didx.banding_plan")
-        out = merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
-        mark("didx.merge")
-        return out
+        return merge_apply(idx, events, epoch_id=epoch_id, mode=mode)
 
     return interval_step(
         src, idx, _EPOCH_PREFIX, bootstrap, interval, to_version=to_version

@@ -33,7 +33,6 @@ zillow_client.py:119-129, lifted to file level).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -54,24 +53,6 @@ OP_INSERT = "insert"
 OP_UPDATE = "update"
 OP_DELETE = "delete"
 
-
-def _phase_timer():
-    """Opt-in per-phase wall clock (RDS_PHASE_TIMING=1): prints
-    ``PHASE <name> <seconds>`` lines to stderr.  Diagnostic surface
-    for decomposing an epoch's fixed cost; zero overhead when unset."""
-    if os.environ.get("RDS_PHASE_TIMING") != "1":
-        return lambda name: None
-    import sys
-    import time as _t
-
-    state = {"t": _t.monotonic()}
-
-    def mark(name: str) -> None:
-        now = _t.monotonic()
-        print(f"PHASE {name} {now - state['t']:.2f}", file=sys.stderr, flush=True)
-        state["t"] = now
-
-    return mark
 
 # winner-key sets at or below this row count are broadcast when routing
 # payload rows (MoR winner semi join); above it the join falls back to
@@ -285,12 +266,10 @@ def merge_apply(
         return _merge_apply_mor(table, source, column_merge, epoch_id, extra_summary)
     if mode != "cow":
         raise ValueError(f"unknown merge mode: {mode}")
-    mark = _phase_timer()
     snap = table.snapshot()
     cur_fields, data_cols, key_cols, order_cols, src = _prep_source(
         table, snap, source
     )
-    mark("merge.prep")
 
     # persist the conflated batch: it is read by the touched-bucket
     # probe, the join, and (via the resolved cache) nothing else — one
@@ -299,7 +278,6 @@ def merge_apply(
     src, check_obs = _observe_checks(src, snap.checks)
     src = src.persist(StorageLevel.MEMORY_AND_DISK)
     touched = sorted(r[0] for r in src.select(_BUCKET_COL).distinct().collect())
-    mark("merge.materialize_src")
     if not touched:
         src.unpersist()
         return _empty_batch_result(table, snap, epoch_id, extra_summary)
@@ -453,7 +431,6 @@ def merge_apply(
                 sort_by=list(snap.order_columns or []),
             )
             cdf = None
-        mark("merge.write_delta")
         m = obs.get
         result = MergeResult(
             snapshot=None,
@@ -483,7 +460,6 @@ def merge_apply(
             snap, new_files=new_files, touched_buckets=touched,
             summary=summary, epoch_id=epoch_id,
         )
-        mark("merge.commit")
         return result
     finally:
         src.unpersist()
@@ -517,7 +493,6 @@ def _merge_apply_mor(
             "coalesce patch needs the target's full values — use the "
             "cow path for partial updates"
         )
-    mark = _phase_timer()
     snap = table.snapshot()
     _, data_cols, key_cols, order_cols, src = _prep_source(table, snap, source)
 
@@ -528,7 +503,6 @@ def _merge_apply_mor(
     per_bucket = src.groupBy(_BUCKET_COL).count().collect()
     touched = sorted(r[0] for r in per_bucket)
     n_src = sum(r[1] for r in per_bucket)
-    mark("mor.prep")
     if not touched:
         src.unpersist()
         return _empty_batch_result(table, snap, epoch_id, extra_summary)
@@ -570,7 +544,6 @@ def _merge_apply_mor(
                 _, bloom_allow, bloom_stats, _ = table._lookup_candidates(
                     snap, src.select(*key_cols)
                 )
-            mark("mor.bloom_probe")
         # narrow current state of the touched buckets (reconciled
         # across any earlier MoR deltas; parquet reads only these
         # columns thanks to column pruning through read()'s projection)
@@ -660,7 +633,6 @@ def _merge_apply_mor(
             .localCheckpoint(eager=True)
         )
         n_winners = winner_keys.count()
-        mark("mor.classify")
         try:
             m = {k: int(v or 0) for k, v in obs.get.items()}
         except Exception:
@@ -735,7 +707,6 @@ def _merge_apply_mor(
                 .repartition(min(max(len(touched), 1), 256), _BUCKET_COL)
             )
             new_files = table._write_delta(winners, snap, mor=True)
-            mark("mor.write_delta")
         result.rewritten_buckets = sorted(int(b) for b in new_files)
         summary = {
             "inserted": result.inserted,
@@ -753,7 +724,6 @@ def _merge_apply_mor(
         result.snapshot = table.commit_file_additions(
             snap, new_files=new_files, summary=summary, epoch_id=epoch_id
         )
-        mark("mor.commit")
         return result
     finally:
         src.unpersist()

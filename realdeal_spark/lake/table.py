@@ -594,13 +594,13 @@ class LakeTable:
         include_deleted: bool = False,
         range_filters: dict[str, tuple[Any, Any]] | None = None,
         snapshot: Snapshot | None = None,
-        tag: str | None = None,
         file_allowlist: set[str] | None = None,
     ) -> DataFrame:
         """Read the table at a snapshot, optionally pruned to buckets.
         ``snapshot`` overrides ``version`` with an explicit Snapshot
         object (used by :meth:`read_staged` for not-yet-published
-        state); ``tag`` time-travels by name (:meth:`set_tag`).
+        state); ``version=t.resolve_tag(name)`` time-travels by name
+        (:meth:`set_tag`).
 
         Bucket pruning is the scale lever: a MERGE whose source batch
         hashes into k of N buckets scans only those buckets' files.
@@ -613,9 +613,10 @@ class LakeTable:
         **Merge-on-read reconcile:** if any selected file is a MoR
         delta (written by ``merge_apply(mode="mor")``), a key may
         appear in several file generations; the reader keeps the
-        max-order-tuple row per key (payload-light winner-find + semi
-        join — one narrow shuffle over the selected buckets) *before*
-        the tombstone filter, so a winning delete still hides the key.
+        max-order-tuple row per key (the light conflation: a narrow
+        winner-find, a semi join and an exact-replay collapse, see
+        below) *before* the tombstone filter, so a winning delete
+        still hides the key.
         ``compact()`` folds deltas into base files and removes this
         read-time cost; base-only reads skip it entirely.
 
@@ -643,12 +644,7 @@ class LakeTable:
         filter row-level after the reconcile — always-correct, and
         ``compact()`` restores skippability.
         """
-        if tag is not None:
-            if version is not None or snapshot is not None:
-                raise ValueError("pass at most one of version/snapshot/tag")
-            version = self.resolve_tag(tag)
         snap = snapshot if snapshot is not None else self.snapshot(version)
-        cur = self._schema_version(snap, snap.current_schema)
         want = {str(b) for b in buckets} if buckets is not None else None
         enc_filters = {
             c: (
@@ -657,20 +653,12 @@ class LakeTable:
             )
             for c, (lo, hi) in (range_filters or {}).items()
         }
-
-        # group pruned file list by writer schema version
-        by_sv: dict[int, list[str]] = {}
         selected = [
-            (
-                b,
-                [
-                    fe
-                    for fe in flist
-                    if file_allowlist is None or fe["path"] in file_allowlist
-                ],
-            )
+            fe
             for b, flist in snap.files.items()
             if want is None or b in want
+            for fe in flist
+            if file_allowlist is None or fe["path"] in file_allowlist
         ]
         # The latest-per-key reconcile below runs over the WHOLE selected
         # read when any selected bucket is MoR — so a winner row in a
@@ -679,41 +667,22 @@ class LakeTable:
         # in-range copy survives and resurrects.  File skipping is
         # therefore only safe when the read needs no reconcile at all:
         # has_mor false across every selected bucket.
-        has_mor = any(
-            bool(fe.get("mor")) for _, flist in selected for fe in flist
+        has_mor = any(bool(fe.get("mor")) for fe in selected)
+        skip = bool(enc_filters) and not has_mor
+        out = self._scan(
+            snap,
+            [fe for fe in selected if not (skip and _stats_disjoint(fe, enc_filters))],
         )
-        for b, flist in selected:
-            for fe in flist:
-                if (
-                    enc_filters
-                    and not has_mor
-                    and _stats_disjoint(fe, enc_filters)
-                ):
-                    continue
-                by_sv.setdefault(fe["schema_version"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
-
-        parts: list[DataFrame] = []
-        for sv_id, paths in sorted(by_sv.items()):
-            parts.append(self._read_aligned(snap, cur, sv_id, paths))
-
-        if not parts:
-            schema = cur.struct().add(_BUCKET_COL, T.IntegerType(), True)
-            if snap.soft_delete:
-                schema = schema.add(_DELETED_COL, T.BooleanType(), True)
-            out = self.spark.createDataFrame([], schema)
-        else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
 
         if has_mor:
             # latest-per-key over (key, order): the light conflation —
-            # winner-find on a narrow projection, then a semi join on
-            # (key, order) — never shuffles the payload columns.  The
-            # winner set here is table-sized (every live key of the
-            # selected buckets), so it is NOT broadcast.  Correct
+            # winner-find on a narrow projection, a semi join on (key,
+            # order), then the exact-replay dropDuplicates.  Only the
+            # winner-find is payload-free.  The winner set here is
+            # table-sized (every live key of the selected buckets), so
+            # it is NOT broadcast: at scale the semi join shuffles the
+            # payload side, and the dropDuplicates exchange carries the
+            # winners' full rows.  Correct
             # because MoR writes guarantee (key, order) is unique
             # across file generations (strictly-newer-only deltas).
             from realdeal_spark.cdc.conflate import conflate
@@ -740,35 +709,57 @@ class LakeTable:
             out = out.drop(_BUCKET_COL)
         return out
 
-    def _read_aligned(
-        self, snap: Snapshot, cur: _SchemaVersion, sv_id: int, paths: list[str]
+    def _scan(
+        self,
+        snap: Snapshot,
+        entries: Iterable[dict[str, Any]],
+        schema: Snapshot | None = None,
     ) -> DataFrame:
-        """Read one group of files written under schema version
-        ``sv_id`` and align it to the current schema ``cur``: columns
+        """The one reader of manifest file ``entries``: group them by
+        the schema version that wrote them, align each group to the
+        current schema of ``schema`` (default ``snap``) — columns
         matched by field id (rename-safe), cast to current types
-        (widen-safe), added-later columns filled with typed nulls.
-        Shared by :meth:`read` and :meth:`read_changes`."""
-        sv = self._schema_version(snap, sv_id)
-        read_schema = sv.struct().add(_BUCKET_COL, T.IntegerType(), True)
+        (widen-safe), added-later columns filled with typed nulls — and
+        union the groups.  The frame carries ``_bucket`` (and
+        ``_deleted`` on a soft-delete table); no entries give the typed
+        empty frame.  ``schema`` lets a changes feed read an older
+        snapshot's files through the newer snapshot's schema map, which
+        holds every historical schema version."""
+        schema = schema or snap
+        cur = self._schema_version(schema, schema.current_schema)
+        meta = [T.StructField(_BUCKET_COL, T.IntegerType(), True)]
         if snap.soft_delete:
-            read_schema = read_schema.add(_DELETED_COL, T.BooleanType(), True)
-        df = self.spark.read.schema(read_schema).parquet(*paths)
-        sv_by_id = sv.by_id()
-        cols = []
-        for f in cur.fields:
-            fid = f["id"]
-            if fid in sv_by_id:
-                cols.append(
-                    F.col(sv_by_id[fid]["name"]).cast(f["type"]).alias(f["name"])
-                )
-            else:  # column added after these files were written
-                cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        cols.append(F.col(_BUCKET_COL))
-        if snap.soft_delete:
-            cols.append(
-                F.coalesce(F.col(_DELETED_COL), F.lit(False)).alias(_DELETED_COL)
+            meta.append(T.StructField(_DELETED_COL, T.BooleanType(), True))
+        by_sv: dict[int, list[str]] = {}
+        for fe in entries:
+            by_sv.setdefault(fe["schema_version"], []).append(
+                os.path.join(self.root, fe["path"])
             )
-        return df.select(*cols)
+        if not by_sv:
+            return self.spark.createDataFrame(
+                [], T.StructType(cur.struct().fields + meta)
+            )
+        parts = []
+        for sv_id, paths in sorted(by_sv.items()):
+            sv = self._schema_version(schema, sv_id)
+            df = self.spark.read.schema(
+                T.StructType(sv.struct().fields + meta)
+            ).parquet(*paths)
+            sv_by_id = sv.by_id()
+            cols = [
+                F.col(sv_by_id[f["id"]]["name"]).cast(f["type"]).alias(f["name"])
+                if f["id"] in sv_by_id
+                # column added after these files were written
+                else F.lit(None).cast(f["type"]).alias(f["name"])
+                for f in cur.fields
+            ]
+            cols.append(F.col(_BUCKET_COL))
+            if snap.soft_delete:
+                cols.append(
+                    F.coalesce(F.col(_DELETED_COL), F.lit(False)).alias(_DELETED_COL)
+                )
+            parts.append(df.select(*cols))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     # ------------------------------------------------------ point lookup
 
@@ -896,12 +887,10 @@ class LakeTable:
         from realdeal_spark.lake import bloomidx
 
         key_cols = snap.key_columns
-        bcols = snap.bucket_columns or key_cols
         kdf = keys_df.select(*key_cols).na.drop().distinct()
-        kdf = kdf.withColumn(
-            "_b",
-            F.pmod(F.xxhash64(*bcols), F.lit(snap.n_buckets)).cast("int"),
-        ).localCheckpoint(eager=True)
+        kdf = kdf.withColumn("_b", self.bucket_expr(snap)).localCheckpoint(
+            eager=True
+        )
         buckets = sorted(r["_b"] for r in kdf.select("_b").distinct().collect())
         covered: list[tuple[str, int, str, int | None]] = []
         allow: set[str] = set()
@@ -935,7 +924,6 @@ class LakeTable:
         self,
         keys: Any,
         version: int | None = None,
-        tag: str | None = None,
         snapshot: Snapshot | None = None,
         include_deleted: bool = False,
     ) -> DataFrame:
@@ -954,10 +942,6 @@ class LakeTable:
         paths on the driver); keys themselves stay distributed, so a
         10^5-key batch lookup plans exactly like a 1-key one.
         """
-        if tag is not None:
-            if version is not None or snapshot is not None:
-                raise ValueError("pass at most one of version/snapshot/tag")
-            version = self.resolve_tag(tag)
         snap = snapshot if snapshot is not None else self.snapshot(version)
         keys_df = self._keys_frame(snap, keys)
         buckets, allow, _stats, kdf = self._lookup_candidates(snap, keys_df)
@@ -1046,15 +1030,12 @@ class LakeTable:
                 f"from_version {from_snap.version} is newer than "
                 f"to_version {to_snap.version}"
             )
-        cur = self._schema_version(to_snap, to_snap.current_schema)
         keys, orders = to_snap.key_columns, to_snap.order_columns
 
         if use_capture is not False:
             caps = self._capture_chain(from_snap.version, to_snap.version)
             if caps is not None:
-                return self._changes_from_capture(
-                    caps, to_snap, cur, include_preimage
-                )
+                return self._changes_from_capture(caps, to_snap, include_preimage)
             if use_capture:
                 raise ValueError(
                     f"use_capture=True but interval ({from_snap.version}, "
@@ -1063,12 +1044,13 @@ class LakeTable:
                     "or let use_capture=None fall back)"
                 )
 
-        old_paths = {fe["path"] for fl in from_snap.files.values() for fe in fl}
-        # group the new files by (commit generation, writer schema):
-        # the generation (parsed from the delta dir the commit wrote)
-        # disambiguates the same (key, order) row carried through
-        # several rewrites inside the interval — newest wins.
-        groups: dict[tuple[int, int], list[str]] = {}
+        old_files = [fe for fl in from_snap.files.values() for fe in fl]
+        old_paths = {fe["path"] for fe in old_files}
+        # group the new files by commit generation: the generation
+        # (parsed from the delta dir the commit wrote) disambiguates the
+        # same (key, order) row carried through several rewrites inside
+        # the interval — newest wins.
+        gens: dict[int, list[dict[str, Any]]] = {}
         for fl in to_snap.files.values():
             for fe in fl:
                 if fe["path"] in old_paths:
@@ -1078,32 +1060,25 @@ class LakeTable:
                 # yield their version as the generation, or carried
                 # copies tie at gen 0 and duplicate change rows.
                 m = re.search(r"delta-(\d+)", fe["path"])
-                gen = int(m.group(1)) if m else 0
-                groups.setdefault((gen, fe["schema_version"]), []).append(
-                    os.path.join(self.root, fe["path"])
-                )
-
-        base = cur.struct().add(_BUCKET_COL, T.IntegerType(), True)
-        if to_snap.soft_delete:
-            base = base.add(_DELETED_COL, T.BooleanType(), True)
-        empty = self.spark.createDataFrame([], base.add("_gen", T.IntegerType(), True))
-        if not groups:
-            out = empty
-        else:
+                gens.setdefault(int(m.group(1)) if m else 0, []).append(fe)
+        parts = [
+            self._scan(to_snap, fes).withColumn("_gen", F.lit(gen))
+            for gen, fes in sorted(gens.items())
+        ]
+        if not parts:
+            # no new files: a typed empty frame whose _gen is a column —
+            # a literal one would fold into the conflation plans below
+            empty = self._scan(to_snap, []).schema
             parts = [
-                self._read_aligned(to_snap, cur, sv_id, paths).withColumn(
-                    "_gen", F.lit(gen)
-                )
-                for (gen, sv_id), paths in sorted(groups.items())
+                self.spark.createDataFrame([], empty.add("_gen", T.IntegerType()))
             ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, parts)
 
         # newest generation per (key, order): drops older carried
         # copies of the SAME row so the light conflation's unique-
         # order precondition holds across rewrite generations.
-        # Narrow winner-find + semi join — payload never shuffles.
+        # Narrow winner-find; the semi join and the exact-replay
+        # collapse move the added rows' payload (O(changes)).
         from realdeal_spark.cdc.conflate import conflate
 
         out = conflate(
@@ -1124,24 +1099,11 @@ class LakeTable:
         # winner or superseded — proves the new row is a carried
         # copy, not a change, so the superset is correct and skips
         # the reconcile shuffle.
-        old_by_sv: dict[int, list[str]] = {}
-        for fl in from_snap.files.values():
-            for fe in fl:
-                old_by_sv.setdefault(fe["schema_version"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
-        if old_by_sv and not self._interval_additive(
+        if old_files and not self._interval_additive(
             from_snap.version, to_snap.version
         ):
-            olds = [
-                self._read_aligned(to_snap, cur, sv_id, paths).select(
-                    *keys, *orders
-                )
-                for sv_id, paths in sorted(old_by_sv.items())
-            ]
-            old = olds[0]
-            for p in olds[1:]:
-                old = old.unionByName(p)
+            old = self._scan(from_snap, old_files, schema=to_snap)
+            old = old.select(*keys, *orders)
             out = out.join(old, on=keys + orders, how="left_anti")
 
         if to_snap.soft_delete:
@@ -1154,12 +1116,12 @@ class LakeTable:
         else:
             out = out.withColumn("change_type", F.lit("upsert"))
         out = out.drop(_BUCKET_COL)
-        if not include_preimage or not old_by_sv:
+        if not include_preimage or not old_files:
             return out
         changed_keys = (
             out.select(*keys).distinct().localCheckpoint(eager=True)
         )
-        pre = self._preimage_frame(from_snap, to_snap, cur, changed_keys)
+        pre = self._preimage_frame(from_snap, to_snap, changed_keys)
         if pre is None:
             return out
         pre = (
@@ -1219,7 +1181,7 @@ class LakeTable:
         return out
 
     def _changes_from_capture(
-        self, caps, to_snap, cur, include_preimage: bool
+        self, caps, to_snap, include_preimage: bool
     ) -> DataFrame:
         """Compose the interval feed purely from per-version capture
         files (see ``merge_apply(capture_changes=True)``).
@@ -1237,34 +1199,23 @@ class LakeTable:
         from realdeal_spark.cdc.conflate import conflate
 
         keys, orders = to_snap.key_columns, to_snap.order_columns
-        data_cols = [f["name"] for f in cur.fields]
+        data_cols = self.schema(to_snap).names
 
-        def _read_entries(entries, v):
-            by_sv: dict[int, list[str]] = {}
-            for fe in entries:
-                by_sv.setdefault(fe["schema_version"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
+        def captured(kind: str) -> DataFrame | None:
+            # one scan per version of its ``kind`` capture files, tagged
+            # with the version; None when no version has any
             parts = [
-                self._read_aligned(to_snap, cur, sv_id, paths)
-                for sv_id, paths in sorted(by_sv.items())
+                self._scan(to_snap, c[kind]).withColumn("_v", F.lit(v))
+                for v, c in caps
+                if c.get(kind)
             ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df.withColumn("_v", F.lit(v))
+            return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
-        empty = self.spark.createDataFrame(
-            [], cur.struct().add("change_type", T.StringType())
-        )
-        chg_parts = [
-            _read_entries(c["chg"], v) for v, c in caps if c.get("chg")
-        ]
-        if not chg_parts:
-            return empty
-        chg = chg_parts[0]
-        for p in chg_parts[1:]:
-            chg = chg.unionByName(p)
+        chg = captured("chg")
+        if chg is None:
+            return self.spark.createDataFrame(
+                [], self.schema(to_snap).add("change_type", T.StringType())
+            )
         chg = conflate(
             chg, keys, orders, strategy="light", broadcast_winners=False
         )
@@ -1277,16 +1228,9 @@ class LakeTable:
             )
             .select(*data_cols, "change_type")
         )
-        if not include_preimage:
+        pre = captured("pre") if include_preimage else None
+        if pre is None:
             return out
-        pre_parts = [
-            _read_entries(c["pre"], v) for v, c in caps if c.get("pre")
-        ]
-        if not pre_parts:
-            return out
-        pre = pre_parts[0]
-        for p in pre_parts[1:]:
-            pre = pre.unionByName(p)
         # earliest touch per key == state at from_version
         pre = conflate(
             pre.withColumn("_negv", -F.col("_v")),
@@ -1303,7 +1247,7 @@ class LakeTable:
         return out.unionByName(pre)
 
     def _preimage_frame(
-        self, from_snap, to_snap, cur, changed_keys: DataFrame
+        self, from_snap, to_snap, changed_keys: DataFrame
     ) -> DataFrame | None:
         """Old-snapshot rows (live, latest-per-key) for ``changed_keys``
         — the Delta-CDF ``update_preimage`` side of the changes feed.
@@ -1315,15 +1259,10 @@ class LakeTable:
         schema map, so pre-images survive renames/widens inside the
         interval."""
         keys, orders = to_snap.key_columns, to_snap.order_columns
-        bcols = from_snap.bucket_columns or keys
         # one action: the touched bucket ids and, per bucket, the key
         # count the bloom-probe gate reads
         per_bucket = (
-            changed_keys.groupBy(
-                F.pmod(
-                    F.xxhash64(*bcols), F.lit(from_snap.n_buckets)
-                ).cast("int").alias("b")
-            )
+            changed_keys.groupBy(self.bucket_expr(from_snap).alias("b"))
             .count()
             .collect()
         )
@@ -1349,25 +1288,16 @@ class LakeTable:
                 _, allow, _, _ = self._lookup_candidates(
                     from_snap, changed_keys
                 )
-        pre_by_sv: dict[int, list[str]] = {}
-        for bucket, fl in from_snap.files.items():
-            if int(bucket) not in bkts:
-                continue
-            for fe in fl:
-                if allow is not None and fe["path"] not in allow:
-                    continue
-                pre_by_sv.setdefault(fe["schema_version"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
-        if not pre_by_sv:
-            return None
-        pres = [
-            self._read_aligned(to_snap, cur, sv_id, paths)
-            for sv_id, paths in sorted(pre_by_sv.items())
+        entries = [
+            fe
+            for bucket, fl in from_snap.files.items()
+            if int(bucket) in bkts
+            for fe in fl
+            if allow is None or fe["path"] in allow
         ]
-        pre = pres[0]
-        for p in pres[1:]:
-            pre = pre.unionByName(p)
+        if not entries:
+            return None
+        pre = self._scan(from_snap, entries, schema=to_snap)
         # MoR reconcile: latest order-tuple per key among the selected
         # files (same rule as read()); then live rows only — a key
         # whose from_version state was a tombstone has no pre-image.
@@ -2078,9 +2008,10 @@ class LakeTable:
     def set_tag(
         self, name: str, version: int | None = None, replace: bool = False
     ) -> int:
-        """Name a snapshot (the Iceberg tag analogue): ``read(tag=…)``
-        time-travels by name, and ``expire_snapshots`` pins tagged
-        versions (and their files) no matter how old — the audit /
+        """Name a snapshot (the Iceberg tag analogue):
+        ``read(version=t.resolve_tag(…))`` time-travels by name, and
+        ``expire_snapshots`` pins tagged versions (and their files) no
+        matter how old — the audit /
         release / reproducibility anchor ("the snapshot training run
         X read") that a bare version number can't provide, because
         untagged versions are retention-managed.

@@ -75,17 +75,14 @@ def get_spark(
         # measured failure: an 8-epoch 160M-event run's per-epoch wall
         # grew 34s -> 124s as dead shuffle state accumulated.  The
         # PRIMARY fix is epoch-boundary GC in the applier (see
-        # CdcApplier gc_every_epochs — between epochs the live set is
+        # cdc.apply.GC_MIN_ROWS — between epochs the live set is
         # minimal, so the collection is cheap and never stalls a
         # running stage); this timer is only the backstop for callers
         # not driving an epoch loop.  A short timer measurably HURTS:
         # at 30s it fires full GCs mid-epoch while the heap is full of
         # live shuffle state (160M-event run: local[4] regressed
         # 765s -> 896s).  10min keeps the backstop off the hot path.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "10min")
     )
     # Shuffle/spill scratch location.  On this single-box sandbox every
     # executor thread shares ONE /tmp device, so disk-backed shuffle is

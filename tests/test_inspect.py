@@ -187,9 +187,9 @@ def test_physical_rows_none_on_legacy_manifest(spark, tmp_path):
 
 
 def test_tags_pin_snapshots_and_name_reads(spark, tmp_path):
-    """set_tag names a version; read(tag=) time-travels by name;
-    expire_snapshots keeps tagged versions alive; drop_tag releases
-    them to the next sweep."""
+    """set_tag names a version; read(version=resolve_tag()) time-travels
+    by name; expire_snapshots keeps tagged versions alive; drop_tag
+    releases them to the next sweep."""
     import pytest as _pytest
 
     from realdeal_spark.lake.table import CommitConflict
@@ -202,7 +202,7 @@ def test_tags_pin_snapshots_and_name_reads(spark, tmp_path):
     t.set_tag("release-1", v_tagged)
     assert t.tags() == {"release-1": v_tagged}
     want = sorted(r["k"] for r in t.read(version=v_tagged).collect())
-    assert sorted(r["k"] for r in t.read(tag="release-1").collect()) == want
+    assert sorted(r["k"] for r in t.read(version=t.resolve_tag("release-1")).collect()) == want
 
     with _pytest.raises(CommitConflict):
         t.set_tag("release-1", vs[3])
@@ -212,7 +212,7 @@ def test_tags_pin_snapshots_and_name_reads(spark, tmp_path):
 
     t.expire_snapshots(keep_last=1)
     assert v_tagged in t.versions()  # pinned
-    assert sorted(r["k"] for r in t.read(tag="release-1").collect()) == want
+    assert sorted(r["k"] for r in t.read(version=t.resolve_tag("release-1")).collect()) == want
 
     t.drop_tag("release-1")
     t.expire_snapshots(keep_last=1)
@@ -230,8 +230,6 @@ def test_tag_validation_and_read_arg_conflicts(spark, tmp_path):
     with _pytest.raises(Exception):
         t.set_tag("ok", version=999)  # unknown snapshot
     t.set_tag("ok")
-    with _pytest.raises(ValueError, match="at most one"):
-        t.read(version=1, tag="ok")
 
 
 def test_auto_maintain_executes_plan(spark, tmp_path):

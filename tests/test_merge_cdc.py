@@ -271,15 +271,17 @@ def test_auto_conflate_strategy_resolution(spark, tmp_path):
     assert resolve_strategy(wide, wide.snapshot(), "window") == "window"
 
 
-def test_epoch_gc_gated_on_rows(spark, tmp_path):
+def test_epoch_gc_gated_on_rows(spark, tmp_path, monkeypatch):
     """The epoch-boundary driver GC must not fire for small epochs:
     it costs a fixed ~0.3-0.5s per System.gc() that a 30k-row bench
-    epoch cannot amortize.  Rows accumulate toward gc_min_rows across
+    epoch cannot amortize.  Rows accumulate toward GC_MIN_ROWS across
     epochs; skipped (replayed) epochs contribute nothing."""
+    from realdeal_spark.cdc import apply as cdc_apply
     from realdeal_spark.cdc.apply import EpochReport
 
+    monkeypatch.setattr(cdc_apply, "GC_MIN_ROWS", 100)
     table = _mk_table(spark, tmp_path)
-    a = CdcApplier(table, gc_every_epochs=1, gc_min_rows=100)
+    a = CdcApplier(table)
     fired = []
     a._fire_driver_gc = lambda: fired.append(True)
 
@@ -297,13 +299,8 @@ def test_epoch_gc_gated_on_rows(spark, tmp_path):
     assert fired == []  # replayed epoch created no state
     a._maybe_driver_gc(rep(40))
     assert fired == [True]  # 120 >= 100: fires and resets
-    assert a._rows_since_gc == 0 and a._epochs_since_gc == 0
+    assert a._rows_since_gc == 0
     a._maybe_driver_gc(rep(40))
-    assert fired == [True]
-    # disabled applier never fires regardless of volume
-    b = CdcApplier(table, gc_every_epochs=None)
-    b._fire_driver_gc = lambda: fired.append("b")
-    b._maybe_driver_gc(rep(10**9))
     assert fired == [True]
 
 

@@ -104,9 +104,12 @@ def test_embedding_bucketed_is_not_cartesian(spark):
 
 def test_mor_classification_target_read_is_narrow(spark, tmp_path):
     """The MoR classify join must read only (key, order, deleted) from
-    the target parquet — payload columns pruned at the scan."""
+    the target parquet — payload columns pruned at every scan, through
+    the latest-per-key reconcile of a MoR delta.  A bucket without a
+    delta skips the reconcile."""
     import datetime as dt
 
+    from realdeal_spark.lake.merge import merge_apply
     from realdeal_spark.lake.table import _DELETED_COL, LakeTable
 
     t = LakeTable.create(
@@ -124,10 +127,23 @@ def test_mor_classification_target_read_is_narrow(spark, tmp_path):
             "url string, warc_ts timestamp_ntz, lsn bigint, html binary",
         )
     )
-    narrow = t.read(include_deleted=True).select("url", "warc_ts", "lsn", _DELETED_COL)
-    p = plan(narrow)
-    scan = p[p.index("ReadSchema") :].splitlines()[0]
-    assert "html" not in scan
+    merge_apply(
+        t,
+        spark.createDataFrame(
+            [("u7", dt.datetime(2024, 1, 2), 100, b"y" * 10, "update")],
+            "url string, warc_ts timestamp_ntz, lsn bigint, html binary, op string",
+        ),
+        mode="mor",
+    )
+    cols = ("url", "warc_ts", "lsn", _DELETED_COL)
+    p = plan(t.read(include_deleted=True).select(*cols))
+    assert "LeftSemi" in p  # the reconcile is in this plan
+    scans = [ln for ln in p.splitlines() if "ReadSchema" in ln]
+    assert scans and not any("html" in ln for ln in scans)
+    files = t.snapshot().files
+    base_only = next(b for b, fl in files.items() if not any(fe.get("mor") for fe in fl))
+    p = plan(t.read(buckets=[int(base_only)], include_deleted=True).select(*cols))
+    assert "LeftSemi" not in p
 
 
 def test_connected_components_round_is_equi_join(spark):
@@ -178,9 +194,8 @@ def test_preimage_read_prunes_buckets(spark, tmp_path):
     # every old file through the narrow carried-copy anti join, so
     # inputFiles on the feed can't see the pruning)
     from_snap, to_snap = t.snapshot(v1), t.snapshot()
-    cur = t._schema_version(to_snap, to_snap.current_schema)
     changed = spark.createDataFrame([("u7",)], "url string")
-    pre = t._preimage_frame(from_snap, to_snap, cur, changed)
+    pre = t._preimage_frame(from_snap, to_snap, changed)
     in_files = {
         f.replace("file:", "").replace("///", "/") for f in pre.inputFiles()
     }

@@ -66,10 +66,11 @@ def render(spark, root: str) -> str:
         ),
         (
             "Per-key conflation (light / payload-free)",
-            "The winner-find aggregate reads only (url, warc_ts, lsn); the "
-            "payload column appears exclusively on the stream side of a "
-            "BroadcastHashJoin LeftSemi — the html bytes are never "
-            "shuffled.",
+            "The winner-find aggregate reads only (url, warc_ts, lsn), and "
+            "the payload column enters the BroadcastHashJoin LeftSemi on its "
+            "stream side only.  The exact-replay dropDuplicates after the "
+            "join is the one exchange that carries html: Exchange "
+            "hashpartitioning(url, warc_ts, lsn) over the winners' full rows.",
             conflate(gen, ["url"], ["warc_ts", "lsn"], strategy="light"),
         ),
         (
@@ -215,7 +216,6 @@ def render(spark, root: str) -> str:
     merge_apply(t, src)
     from_snap = t.snapshot(t.current_version() - 1)
     to_snap = t.snapshot()
-    cur = t._schema_version(to_snap, to_snap.current_schema)
     changed = spark.createDataFrame([("u7",)], "url string")
     sections.append(
         (
@@ -225,7 +225,7 @@ def render(spark, root: str) -> str:
             "the single pb= path against the table's 4 buckets); the "
             "winner-find reconcile and the changed-key semi join are "
             "narrow.",
-            t._preimage_frame(from_snap, to_snap, cur, changed),
+            t._preimage_frame(from_snap, to_snap, changed),
         )
     )
 
