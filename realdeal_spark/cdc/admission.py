@@ -79,9 +79,7 @@ def resolve_strategy(table, snap, configured: str, batch=None) -> str:
 
 
 def admission_stats(
-    batch: DataFrame,
-    key_columns: list[str],
-    broadcast_keys_max: int | None = None,
+    batch: DataFrame, key_columns: list[str]
 ) -> tuple[int, int, bool]:
     """One narrow pass over the batch → ``(events_in, est_distinct_keys,
     broadcast_winners)``.
@@ -91,11 +89,9 @@ def admission_stats(
     the result is two longs — this is the cheapest admission check
     that can gate the winner broadcast correctly.
     """
-    if broadcast_keys_max is None:
-        # late import + attribute read so tests can monkeypatch the cap
-        from realdeal_spark.lake import merge as _merge
+    # late import + attribute read so tests can monkeypatch the cap
+    from realdeal_spark.lake import merge as _merge
 
-        broadcast_keys_max = _merge.BROADCAST_KEYS_MAX
     stats = batch.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(F.xxhash64(*key_columns), rsd=0.05).alias("d"),
@@ -104,4 +100,4 @@ def admission_stats(
     est_keys = int(stats["d"])
     # 1.3 = HLL rsd guard band: never broadcast a set that might
     # exceed the cap, never shuffle one that surely fits.
-    return n_in, est_keys, est_keys * 1.3 <= broadcast_keys_max
+    return n_in, est_keys, est_keys * 1.3 <= _merge.BROADCAST_KEYS_MAX

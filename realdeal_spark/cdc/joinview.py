@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, types as T
 from pyspark.sql import functions as F
 
 from realdeal_spark.cdc.evolve import reconcile
-from realdeal_spark.lake.merge import MergeResult, merge_apply
+from realdeal_spark.lake.merge import MergeResult, commit_marker, merge_apply
 from realdeal_spark.lake.table import LakeTable
 
 _F_COL = "_jv_f"
@@ -351,21 +351,9 @@ def advance_join_view(
         # marker so the epoch id (and with it the watermark) still
         # advances; otherwise every later advance re-reads this
         # interval and the feed read stops being O(new changes)
-        res = MergeResult(
-            snapshot=view.commit(
-                view.snapshot(),
-                "merge-mor",
-                summary={
-                    "inserted": 0,
-                    "updated": 0,
-                    "deleted": 0,
-                    "unchanged": 0,
-                    "stale": 0,
-                    "jv_fact_version": vf2,
-                    "jv_dim_version": vd2,
-                },
-                epoch_id=eid,
-            )
+        res = commit_marker(
+            view, view.snapshot(), eid,
+            {"jv_fact_version": vf2, "jv_dim_version": vd2},
         )
     return res
 

@@ -20,12 +20,12 @@ words of every data file the commit produced::
     w bigint        -- word index (bit_position div 64)
     word bigint     -- packed 64 bits
 
-Same packed-words representation as the MERGE winner pushdown
-(operators/bloom.py): the build is one distributed job (read ONLY the
-key columns of the just-written files — column-pruned parquet —
-explode each key into k=``BLOOM_K`` xxhash64 bit positions, bit_or
-into words), so the driver never holds keys; the probe is a
-words-table join.  Because the sidecar lives inside the delta dir,
+Same packed-words bit layout as the MERGE winner pushdown, built
+and probed through the same helpers (operators/bloom.py): the build
+is one distributed job (read ONLY the key columns of the just-written
+files — column-pruned parquet — explode each key into k=``BLOOM_K``
+xxhash64 bit positions, bit_or into words), so the driver never
+holds keys; the probe is a words-table join.  Because the sidecar lives inside the delta dir,
 snapshot expiration garbage-collects it with the commit's data files
 (referenced sidecars are pinned by the manifest ``bloom`` entry).
 
@@ -71,6 +71,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from realdeal_spark.operators.bloom import (
+    bit_positions,
+    pack_words,
+    word_bit,
+    word_index,
+)
 
 BLOOM_K = 4
 BLOOM_BITS_PER_KEY = 16
@@ -156,16 +163,6 @@ def bloom_m_bits(rows: int) -> int:
     return max(256, ((rows * BLOOM_BITS_PER_KEY + 63) // 64) * 64)
 
 
-def _positions(key_cols: list[F.Column], m_bits: F.Column) -> F.Column:
-    """Array of the BLOOM_K bit positions of one key tuple."""
-    return F.array(
-        *[
-            F.pmod(F.xxhash64(*key_cols, F.lit(i)), m_bits)
-            for i in range(BLOOM_K)
-        ]
-    )
-
-
 def _norm_uri(col: F.Column) -> F.Column:
     """input_file_name() URI → plain absolute path.  A literal ``+``
     in the path is pre-encoded before url_decode — form decoding
@@ -225,25 +222,12 @@ def build_bloom_sidecar(
         ],
         "_abs string, path string, m_bits bigint",
     )
-    words = (
-        keys.join(F.broadcast(meta), on="_abs")
-        .select(
-            "path",
-            "m_bits",
-            F.explode(
-                _positions([F.col(c) for c in key_cols], F.col("m_bits"))
-            ).alias("_pos"),
-        )
-        .select(
-            "path",
-            "m_bits",
-            F.expr("_pos div 64").alias("w"),
-            # shift amount must be a column -> SQL shiftleft; bit 63 is
-            # the sign bit, which bit_or treats as a plain bit
-            F.expr("shiftleft(1L, cast(_pos % 64 as int))").alias("_b"),
-        )
-        .groupBy("path", "m_bits", "w")
-        .agg(F.bit_or("_b").alias("word"))
+    words = pack_words(
+        keys.join(F.broadcast(meta), on="_abs"),
+        bit_positions([F.col(c) for c in key_cols], F.col("m_bits"), BLOOM_K),
+        ["path", "m_bits"],
+        "w",
+        "word",
     )
     out = os.path.join(root, sidecar_rel)
     # fail LOUDLY if the build matched nothing despite non-empty
@@ -373,14 +357,8 @@ def bloom_candidate_paths(
         est_probe_rows is not None and est_probe_rows <= 5_000_000
     )
     pairs = keys_df.join(F.broadcast(fmeta), on="_b")
-    pos_arr = F.array(
-        *[
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(i)),
-                F.col("m_bits"),
-            )
-            for i in range(BLOOM_K)
-        ]
+    pos_arr = bit_positions(
+        [F.col(c) for c in key_cols], F.col("m_bits"), BLOOM_K
     )
     probes = pairs.select(
         "path", *key_cols, F.posexplode(pos_arr).alias("_i", "_pos")
@@ -388,8 +366,8 @@ def bloom_candidate_paths(
         "path",
         *key_cols,
         "_i",
-        F.expr("_pos div 64").alias("w"),
-        F.expr("shiftleft(1L, cast(_pos % 64 as int))").alias("_bit"),
+        word_index("_pos").alias("w"),
+        word_bit("_pos").alias("_bit"),
     )
     # inner join: a probe position with no words row targets an
     # all-zero word (the writer only emits words with a bit set) —

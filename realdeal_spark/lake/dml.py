@@ -22,7 +22,8 @@ guarantees:
   state.  A non-integral final order column has no safe "+1", so the
   default raises and ``order_stamp`` becomes required;
 - **exactly-once** — pass ``epoch_id``; a retried statement with the
-  same id is a no-op (the snapshot's applied-epochs guard);
+  same id is a no-op (:func:`merge_apply`'s applied-epochs guard —
+  the matching read is lazy, so the retry runs no job);
 - **changes-feed visibility** — downstream rollups / replicas /
   value indexes see the DML as ordinary upsert/delete change rows
   (with write-time CDF capture on CoW tables if requested).
@@ -60,16 +61,6 @@ from realdeal_spark.lake.table import LakeTable
 
 def _as_column(expr: Any) -> Column:
     return expr if isinstance(expr, Column) else F.expr(str(expr))
-
-
-def _already_applied(table: LakeTable, epoch_id: str | None) -> bool:
-    # same exactly-once composition as CdcApplier.apply_epoch and
-    # lake.table.interval_step: the applied-epoch ids live in the
-    # snapshot itself, so a retried statement needs no side state
-    return (
-        epoch_id is not None
-        and epoch_id in table.snapshot().applied_epochs
-    )
 
 
 def _matched_rows(
@@ -152,8 +143,6 @@ def delete_where(
     ride the row's own tuple — CoW only, ties there win on apply).
     Returns the MERGE's result; a no-match or already-applied
     statement commits nothing (``snapshot is None``)."""
-    if _already_applied(table, epoch_id):
-        return MergeResult(snapshot=None)
     snap, cols, rows = _matched_rows(table, condition, range_filters)
     batch = _stamp_order(rows, list(snap.order_columns), order_stamp)
     return merge_apply(
@@ -183,8 +172,6 @@ def update_where(
     so does ``{"lang": "upper(lang)"}``).  Key columns cannot be set
     (that is a delete + insert, not an update); order columns only
     through ``order_stamp``, keeping the replay story explicit."""
-    if _already_applied(table, epoch_id):
-        return MergeResult(snapshot=None)
     snap, cols, rows = _matched_rows(table, condition, range_filters)
     bad = set(set_exprs) & set(snap.key_columns)
     if bad:

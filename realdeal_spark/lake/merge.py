@@ -35,17 +35,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from realdeal_spark.lake.table import (
     _BUCKET_COL,
-    _DATA,
     _DELETED_COL,
     CheckViolation,
     LakeTable,
     Snapshot,
+    _write_partitions,
 )
 
 OP_COL = "op"
@@ -135,7 +135,7 @@ def _observe_checks(src: DataFrame, checks: dict[str, str]):
 def _raise_check_violations(obs, checks: dict[str, str]) -> None:
     if obs is None:
         return
-    # Both call sites invoke this only after a non-empty touched-bucket
+    # merge_apply invokes this only after a non-empty touched-bucket
     # collect has run the observed plan, so a failing ``obs.get`` means
     # the metrics genuinely went missing — swallowing it would silently
     # disable CHECK enforcement.  Surface it instead of returning.
@@ -152,31 +152,14 @@ def _raise_check_violations(obs, checks: dict[str, str]) -> None:
         raise CheckViolation(counts, checks)
 
 
-def _empty_batch_result(
-    table, snap, epoch_id: str | None, extra_summary: dict | None
-) -> MergeResult:
-    """Zero surviving rows in the batch.  Usually a pure no-op (a poll
-    loop with no new events must not grow the snapshot log) — EXCEPT
-    when the epoch *had* rows and every one was dead-lettered
-    (``extra_summary["quarantined"] > 0``, stamped by the applier
-    pre-merge): then commit a metadata-only marker snapshot so the
-    epoch still enters ``applied_epochs`` (exactly-once — a retry must
-    skip, not re-quarantine) and its lsn range + quarantined count
-    appear in the lineage table (``lake.inspect.lineage_df``'s
-    every-offset-range-landed-exactly-once audit would otherwise have
-    a hole)."""
-    if epoch_id is None or not (extra_summary or {}).get("quarantined"):
-        return MergeResult(snapshot=None)
-    summary = {
-        "inserted": 0,
-        "updated": 0,
-        "deleted": 0,
-        "unchanged": 0,
-        "stale": 0,
-        **(extra_summary or {}),
-    }
-    snapshot = table.commit(snap, "merge-mor", summary=summary, epoch_id=epoch_id)
-    return MergeResult(snapshot=snapshot)
+#: the MERGE's action counters, MergeResult field → action.  The first
+#: four are the winners, the rows an epoch writes as changes; a
+#: tombstone (the delete of an absent key) has no MergeResult field.
+_COUNTS = {
+    "inserted": "insert", "updated": "update", "deleted": "delete",
+    "tombstoned": "tombstone", "unchanged": "unchanged", "stale": "stale",
+}
+_WINNERS = list(_COUNTS.values())[:4]
 
 
 @dataclass
@@ -195,6 +178,64 @@ class MergeResult:
         return self.inserted + self.updated + self.deleted
 
 
+def commit_marker(
+    table: LakeTable, snap: Snapshot, epoch_id: str, summary: dict
+) -> MergeResult:
+    """Commit a metadata-only snapshot on ``snap`` that records
+    ``epoch_id`` (exactly-once: a retry skips) with zero action counts
+    plus ``summary`` (so the lineage table has no hole) — for an epoch
+    that changed no row but must still land."""
+    zeros = {k: 0 for k in _COUNTS if k != "tombstoned"}
+    return MergeResult(
+        table.commit(
+            snap, "merge-mor", summary={**zeros, **summary}, epoch_id=epoch_id
+        )
+    )
+
+
+def _sides(key_cols: list[str], order_cols: list[str]):
+    """The classify join's view of its ``s`` (batch) and ``t`` (table)
+    sides: ``(s_order, t_order, s_present, t_present, t_visible,
+    is_delete)``."""
+    t_present = F.col(f"t.{key_cols[0]}").isNotNull()
+    return (
+        F.struct(*[F.col(f"s.{c}") for c in order_cols]),
+        F.struct(*[F.col(f"t.{c}") for c in order_cols]),
+        F.col(f"s.{key_cols[0]}").isNotNull(),
+        t_present,
+        t_present & ~F.col(f"t.{_DELETED_COL}"),
+        F.col(f"s.{OP_COL}") == OP_DELETE,
+    )
+
+
+def _action(t_visible: Column, is_delete: Column, *head) -> Column:
+    """The action CASE: a mode's leading ``(condition, action)`` cases,
+    then the rules both modes share for a winning event."""
+    cases = [
+        *head,
+        (is_delete & t_visible, "delete"),
+        (is_delete, "tombstone"),  # delete of absent/deleted key
+        (~t_visible, "insert"),  # new key or resurrect
+    ]
+    action = F.when(cases[0][0], F.lit(cases[0][1]))
+    for cond, a in cases[1:]:
+        action = action.when(cond, F.lit(a))
+    return action.otherwise(F.lit("update"))
+
+
+def _observe_actions(df: DataFrame, is_data: Column, *extra: Column):
+    """``df`` with the six action counters (plus ``extra`` aggregates)
+    riding its next job as an Observation; ``is_data`` keeps capture
+    rows out of the counts."""
+    obs = Observation()
+    cnt = lambda a: F.sum(
+        F.when(is_data & (F.col("_action") == a), 1).otherwise(0).cast("long")
+    )
+    return df.observe(
+        obs, *[cnt(a).alias(k) for k, a in _COUNTS.items()], *extra
+    ), obs
+
+
 def merge_apply(
     table: LakeTable,
     source: DataFrame,
@@ -205,6 +246,11 @@ def merge_apply(
     capture_changes: bool = False,
 ) -> MergeResult:
     """Apply one conflated change batch to the table.
+
+    ``epoch_id`` — the exactly-once token: the commit records it in
+    ``applied_epochs``, and a call whose id is already there is a
+    no-op that returns ``MergeResult(snapshot=None)`` before any Spark
+    job runs.
 
     ``capture_changes`` (CoW only) — write-time CDF capture, the
     Delta-CDF ``_change_data`` analogue: the MERGE already holds both
@@ -255,38 +301,94 @@ def merge_apply(
         ``column_merge="replace"`` (coalesce needs the target's full
         values — use cow for partial updates).
     """
-    if mode == "mor":
-        if capture_changes:
-            raise ValueError(
-                "capture_changes requires mode='cow': the MoR write "
-                "never reads the target payload, so pre-images are not "
-                "available at write time (MoR intervals fall back to "
-                "read-time reconstruction by design)"
-            )
-        return _merge_apply_mor(table, source, column_merge, epoch_id, extra_summary)
-    if mode != "cow":
+    if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode: {mode}")
+    if column_merge not in ("replace", "coalesce"):
+        raise ValueError(f"unknown column_merge: {column_merge}")
+    if mode == "mor" and column_merge != "replace":
+        raise ValueError(
+            "mode='mor' supports column_merge='replace' only: a "
+            "coalesce patch needs the target's full values — use the "
+            "cow path for partial updates"
+        )
+    if mode == "mor" and capture_changes:
+        raise ValueError(
+            "capture_changes requires mode='cow': the MoR write "
+            "never reads the target payload, so pre-images are not "
+            "available at write time (MoR intervals fall back to "
+            "read-time reconstruction by design)"
+        )
     snap = table.snapshot()
-    cur_fields, data_cols, key_cols, order_cols, src = _prep_source(
-        table, snap, source
-    )
+    if epoch_id is not None and epoch_id in snap.applied_epochs:
+        return MergeResult(snapshot=None)
+    _, data_cols, _, _, src = _prep_source(table, snap, source)
 
-    # persist the conflated batch: it is read by the touched-bucket
-    # probe, the join, and (via the resolved cache) nothing else — one
-    # materialization instead of re-running conflation (and whatever
-    # upstream extraction feeds it) per phase.
+    # persist the conflated batch: the sizing action, the classify
+    # join and the payload write all read it — one materialization
+    # instead of re-running conflation (and whatever upstream
+    # extraction feeds it) per phase.
     src, check_obs = _observe_checks(src, snap.checks)
     src = src.persist(StorageLevel.MEMORY_AND_DISK)
-    touched = sorted(r[0] for r in src.select(_BUCKET_COL).distinct().collect())
-    if not touched:
-        src.unpersist()
-        return _empty_batch_result(table, snap, epoch_id, extra_summary)
     try:
+        # one action sizes the batch: the touched buckets, plus the key
+        # count the MoR bloom-probe gate needs.  CoW needs no count and
+        # keeps the group-only distinct, which Spark plans as a bare
+        # projection over a one-row batch: a job fewer than a count.
+        per_bucket = (
+            src.groupBy(_BUCKET_COL).count()
+            if mode == "mor"
+            else src.select(_BUCKET_COL).distinct()
+        ).collect()
+        touched = sorted(r[0] for r in per_bucket)
+        if not touched:
+            # Usually a pure no-op (a poll loop with no new events must
+            # not grow the snapshot log) — EXCEPT when the epoch had
+            # rows and the applier dead-lettered every one
+            # (``extra_summary["quarantined"] > 0``): its marker enters
+            # the epoch into ``applied_epochs`` (a retry must skip, not
+            # re-quarantine) and its lsn range + quarantined count into
+            # the lineage table (``lake.inspect.lineage_df``'s
+            # every-offset-range-landed-exactly-once audit would
+            # otherwise have a hole).
+            if epoch_id is None or not (extra_summary or {}).get("quarantined"):
+                return MergeResult(snapshot=None)
+            return commit_marker(table, snap, epoch_id, extra_summary)
         _raise_check_violations(check_obs, snap.checks)
-    except CheckViolation:
+        if mode == "cow":
+            step = _cow(table, snap, src, touched, data_cols, column_merge, capture_changes)
+        else:
+            n_src = sum(r[1] for r in per_bucket)
+            step = _mor(table, snap, src, touched, n_src, data_cols)
+        counts, files, extras = step
+        tombstoned = counts.pop("tombstoned")
+        result = MergeResult(snapshot=None, touched_buckets=touched, **counts)
+        if result.effective_changes + tombstoned == 0 and epoch_id is None:
+            # pure no-op batch: drop the just-written delta, commit nothing
+            table._discard_delta(files)
+            return result
+        result.rewritten_buckets = sorted(int(b) for b in files)
+        summary = {**counts, **extras, **(extra_summary or {})}
+        if mode == "cow":
+            result.snapshot = table.commit_bucket_replacement(
+                snap, new_files=files, touched_buckets=touched,
+                summary=summary, epoch_id=epoch_id,
+            )
+        else:
+            # no winners → no files: a pure epoch-id marker
+            result.snapshot = table.commit_file_additions(
+                snap, new_files=files, summary=summary, epoch_id=epoch_id
+            )
+        return result
+    finally:
         src.unpersist()
-        raise
 
+
+def _cow(table, snap, src, touched, data_cols, column_merge, capture_changes):
+    """Copy-on-write classify-and-write: the batch full-outer-joins the
+    touched buckets' rows, and every touched bucket is rewritten whole
+    (carried rows included).  Returns ``(counts, files, summary
+    extras)``."""
+    key_cols, order_cols = snap.key_columns, snap.order_columns
     tgt = table.read(buckets=touched, with_bucket=True, include_deleted=True)
 
     s = src.alias("s")
@@ -294,21 +396,15 @@ def merge_apply(
     joined = s.join(
         t, on=[F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols], how="full_outer"
     )
-
-    s_order = F.struct(*[F.col(f"s.{c}") for c in order_cols])
-    t_order = F.struct(*[F.col(f"t.{c}") for c in order_cols])
-    s_present = F.col(f"s.{key_cols[0]}").isNotNull()
-    t_present = F.col(f"t.{key_cols[0]}").isNotNull()
-    t_visible = t_present & ~F.col(f"t.{_DELETED_COL}")
-    is_delete = F.col(f"s.{OP_COL}") == OP_DELETE
+    s_order, t_order, s_present, t_present, t_visible, is_delete = _sides(
+        key_cols, order_cols
+    )
     wins = s_present & (~t_present | (s_order >= t_order))
 
     if column_merge == "coalesce":
         src_val = {c: F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")) for c in data_cols}
-    elif column_merge == "replace":
-        src_val = {c: F.col(f"s.{c}") for c in data_cols}
     else:
-        raise ValueError(f"unknown column_merge: {column_merge}")
+        src_val = {c: F.col(f"s.{c}") for c in data_cols}
     # order columns always come from the winning event itself, even in
     # coalesce mode — recency must advance.
     for c in order_cols:
@@ -320,14 +416,9 @@ def merge_apply(
     for c in data_cols:
         differs = differs | ~src_val[c].eqNullSafe(F.col(f"t.{c}"))
 
-    action = (
-        F.when(~s_present, F.lit("carry"))
-        .when(~wins, F.lit("stale"))
-        .when(~differs, F.lit("unchanged"))
-        .when(is_delete & t_visible, F.lit("delete"))
-        .when(is_delete, F.lit("tombstone"))  # delete of absent/deleted key
-        .when(~t_visible, F.lit("insert"))  # new key or resurrect
-        .otherwise(F.lit("update"))
+    action = _action(
+        t_visible, is_delete,
+        (~s_present, "carry"), (~wins, "stale"), (~differs, "unchanged"),
     )
 
     take_src = F.col("_action").isin("insert", "update", "unchanged", "delete", "tombstone")
@@ -350,7 +441,7 @@ def merge_apply(
         # with null payload — no extra marker column, so data and
         # capture files share one schema).  Same single output pass:
         # the array/explode multiplies only changed rows.
-        eff = F.col("_action").isin("insert", "update", "delete", "tombstone")
+        eff = F.col("_action").isin(*_WINNERS)
         post_struct = F.struct(F.lit("d").alias("_cdf"), deleted_out, *out_cols)
         chg_struct = F.struct(F.lit("c").alias("_cdf"), deleted_out, *out_cols)
         # the pre row must keep its KEY even when the pre-state is
@@ -392,88 +483,32 @@ def merge_apply(
     # pass — the wrong trade for a CDC stream where touched buckets
     # almost always carry changes.  A fully no-op batch is detected
     # from the observation and its files discarded before commit.
-    cnt = lambda a: F.sum(
-        F.when(is_data & (F.col("_action") == a), 1).otherwise(0).cast("long")
-    )
-    obs = Observation()
-    observed = resolved.observe(
-        obs,
-        cnt("insert").alias("ins"),
-        cnt("update").alias("upd"),
-        cnt("delete").alias("del"),
-        cnt("tombstone").alias("tomb"),
-        cnt("unchanged").alias("unch"),
-        cnt("stale").alias("stale"),
-    )
+    observed, obs = _observe_actions(resolved, is_data)
     new_rows = observed.drop("_action").repartition(
-        min(max(len(touched), 1), 256), _BUCKET_COL
+        _write_partitions(len(touched)), _BUCKET_COL
     )
-    try:
-        # CoW rewrites whole buckets anyway, so keep them in the
-        # table's write sort order (order columns, i.e. event time /
-        # lsn): a task-local sort, no extra shuffle, and every base
-        # file stays row-group-prunable for time-range scans without
-        # waiting for a maintenance compact() (Iceberg write-order
-        # analogue).  The MoR path stays sort-free — its deltas are
-        # O(changes) and file skipping is disabled in MoR buckets
-        # until compaction regardless.
-        if capture_changes:
-            new_files, cdf = table._write_delta(
-                new_rows,
-                snap,
-                sort_by=list(snap.order_columns or []),
-                cdf_col="_cdf",
-            )
-        else:
-            new_files = table._write_delta(
-                new_rows,
-                snap,
-                sort_by=list(snap.order_columns or []),
-            )
-            cdf = None
-        m = obs.get
-        result = MergeResult(
-            snapshot=None,
-            inserted=int(m["ins"]),
-            updated=int(m["upd"]),
-            deleted=int(m["del"]),
-            unchanged=int(m["unch"]),
-            stale=int(m["stale"]),
-            touched_buckets=touched,
-        )
-        if result.effective_changes + int(m["tomb"]) == 0 and epoch_id is None:
-            # pure no-op batch: drop the just-written delta, commit nothing
-            table._discard_delta(new_files)
-            return result
-        result.rewritten_buckets = sorted(int(b) for b in new_files)
-        summary = {
-            "inserted": result.inserted,
-            "updated": result.updated,
-            "deleted": result.deleted,
-            "unchanged": result.unchanged,
-            "stale": result.stale,
-            **(extra_summary or {}),
-        }
-        if cdf is not None:
-            summary["cdf"] = cdf
-        result.snapshot = table.commit_bucket_replacement(
-            snap, new_files=new_files, touched_buckets=touched,
-            summary=summary, epoch_id=epoch_id,
-        )
-        return result
-    finally:
-        src.unpersist()
+    # CoW rewrites whole buckets anyway, so keep them in the table's
+    # write sort order (order columns, i.e. event time / lsn): a
+    # task-local sort, no extra shuffle, and every base file stays
+    # row-group-prunable for time-range scans without waiting for a
+    # maintenance compact() (Iceberg write-order analogue).  The MoR
+    # path stays sort-free — its deltas are O(changes) and file
+    # skipping is disabled in MoR buckets until compaction regardless.
+    out = table._write_delta(
+        new_rows,
+        snap,
+        sort_by=list(order_cols or []),
+        cdf_col="_cdf" if capture_changes else None,
+    )
+    files, cdf = out if capture_changes else (out, None)
+    counts = {k: int(v) for k, v in obs.get.items()}
+    return counts, files, {} if cdf is None else {"cdf": cdf}
 
 
-def _merge_apply_mor(
-    table: LakeTable,
-    source: DataFrame,
-    column_merge: str,
-    epoch_id: str | None,
-    extra_summary: dict | None,
-) -> MergeResult:
-    """Merge-on-read apply: write only the changed rows as per-bucket
-    delta files; never rewrite untouched rows.
+def _mor(table, snap, src, touched, n_src, data_cols):
+    """Merge-on-read classify-and-write: write only the changed rows as
+    per-bucket delta files; never rewrite untouched rows.  Returns
+    ``(counts, files, summary extras)``.
 
     Classification joins the conflated batch against a **narrow
     projection** of the current state (key, order, deleted) — the
@@ -487,243 +522,150 @@ def _merge_apply_mor(
     (key, order) unique across file generations, which the read-time
     reconcile's semi join relies on.
     """
-    if column_merge != "replace":
+    key_cols, order_cols = snap.key_columns, snap.order_columns
+    # On a key_blooms table, probe the touched buckets' per-file
+    # sidecars with the batch keys first (lake/bloomidx.py): the
+    # classification read then opens only files that MAY contain a
+    # batch key.  Safe because blooms have no false negatives —
+    # every existing generation of every batch key survives, so
+    # the left join below sees the complete target state FOR THE
+    # BATCH KEYS (non-batch keys never exit a left join on src).
+    # The probe pays about six jobs whatever it prunes, so
+    # bloomidx.probe_skip lets it run only where it can win, from
+    # numbers already on the driver: past ~1k keys per touched
+    # bucket every file is bloom-positive (a bulk epoch), and under
+    # BLOOM_PROBE_MIN_ROWS manifest rows in the touched buckets
+    # the plain narrow scan is cheaper than the probe.  Wide
+    # fan-out batches over large buckets (the dedup index: 20 k
+    # band hashes over 64 bh-buckets ≈ 312/bucket of a 64 M-entry
+    # table) pass both and keep their measured pruning win
+    # (BENCH_DEDUPIDX.md).  A skip records its reason.
+    bloom_allow = bloom_stats = None
+    if snap.key_blooms:
+        from realdeal_spark.lake import bloomidx
+
+        bloom_stats = bloomidx.probe_skip(
+            n_src,
+            snap.n_buckets,
+            bloomidx.rows_in_buckets(snap.files, touched),
+        )
+        if bloom_stats is None:
+            _, bloom_allow, bloom_stats, _ = table._lookup_candidates(
+                snap, src.select(*key_cols)
+            )
+    # narrow current state of the touched buckets (reconciled
+    # across any earlier MoR deltas; parquet reads only these
+    # columns thanks to column pruning through read()'s projection)
+    tgt = table.read(
+        buckets=touched, include_deleted=True, file_allowlist=bloom_allow
+    ).select(*key_cols, *order_cols, _DELETED_COL)
+    # classification is fully NARROW: only (key, order, op) of the
+    # source meets the target projection — the html/binary payload
+    # never enters this join's shuffle.  The winner keys then route
+    # the payload rows out of the persisted source with a broadcast
+    # hash join when they fit (payload side map-only), falling back
+    # to a shuffled join for huge batches (initial loads) — the
+    # same payload-light discipline as cdc.conflate's light
+    # strategy, applied to the MERGE itself.
+    s = src.select(*key_cols, *order_cols, OP_COL).alias("s")
+    t = tgt.alias("t")
+    joined = s.join(
+        t, on=[F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols], how="left"
+    )
+    s_order, t_order, _, t_present, t_visible, is_delete = _sides(
+        key_cols, order_cols
+    )
+    action = _action(
+        t_visible, is_delete,
+        (t_present & (s_order < t_order), "stale"),
+        (t_present & (s_order == t_order), "unchanged"),
+    )
+    # precondition guard: MoR classifies equal-order events as
+    # "unchanged" (exact replay of the stored event), which is
+    # only equivalent to CoW's tie-wins under the documented
+    # unique-order-tuple rule.  The dangerous violation — a
+    # *conflicting* event carrying the stored row's exact order
+    # tuple but implying different visibility (e.g. a tying
+    # delete of a visible row, which MoR would silently drop and
+    # CoW would apply) — is detectable payload-free, so it is
+    # counted on the same job and raises instead of diverging.
+    # (An equal-order update with different payload values is not
+    # detectable without reading the payload; that residual case
+    # remains the documented precondition.)
+    order_conflict = (
+        t_present
+        & (s_order == t_order)
+        & (is_delete != F.col(f"t.{_DELETED_COL}"))
+    )
+    classified = joined.select(
+        action.alias("_action"),
+        order_conflict.cast("long").alias("_order_conflict"),
+        *[F.col(f"s.{c}").alias(c) for c in key_cols],
+    )
+    observed, obs = _observe_actions(
+        classified, F.lit(True), F.sum("_order_conflict").alias("conflict")
+    )
+    # localCheckpoint materializes the classification ONCE: the
+    # Observation and the winner-routing semi join both read the
+    # checkpointed (narrow: keys only) result — without it the
+    # observed plan re-executed the target scan + classify join a
+    # second time inside the routing join.
+    winner_keys = (
+        observed.where(F.col("_action").isin(*_WINNERS))
+        .select(*key_cols)
+        .localCheckpoint(eager=True)
+    )
+    try:
+        m = {k: int(v or 0) for k, v in obs.get.items()}
+    except Exception:
+        # AQE's empty-relation propagation can eliminate the
+        # CollectMetrics node when nothing survives the winner
+        # filter; recompute the (narrow) action counts directly —
+        # only the all-noop epoch pays this.
+        rows = (
+            classified.groupBy("_action")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("_order_conflict").alias("c"),
+            )
+            .collect()
+        )
+        n = {r["_action"]: r["n"] for r in rows}
+        m = {k: n.get(a, 0) for k, a in _COUNTS.items()}
+        m["conflict"] = sum(int(r["c"] or 0) for r in rows)
+    if m.pop("conflict", 0):
         raise ValueError(
-            "mode='mor' supports column_merge='replace' only: a "
-            "coalesce patch needs the target's full values — use the "
-            "cow path for partial updates"
-        )
-    snap = table.snapshot()
-    _, data_cols, key_cols, order_cols, src = _prep_source(table, snap, source)
-
-    src, check_obs = _observe_checks(src, snap.checks)
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
-    # one action sizes the batch: the touched buckets and the key
-    # count the bloom-probe gate needs
-    per_bucket = src.groupBy(_BUCKET_COL).count().collect()
-    touched = sorted(r[0] for r in per_bucket)
-    n_src = sum(r[1] for r in per_bucket)
-    if not touched:
-        src.unpersist()
-        return _empty_batch_result(table, snap, epoch_id, extra_summary)
-    try:
-        _raise_check_violations(check_obs, snap.checks)
-    except CheckViolation:
-        src.unpersist()
-        raise
-
-    try:
-        # On a key_blooms table, probe the touched buckets' per-file
-        # sidecars with the batch keys first (lake/bloomidx.py): the
-        # classification read then opens only files that MAY contain a
-        # batch key.  Safe because blooms have no false negatives —
-        # every existing generation of every batch key survives, so
-        # the left join below sees the complete target state FOR THE
-        # BATCH KEYS (non-batch keys never exit a left join on src).
-        # The probe pays about six jobs whatever it prunes, so
-        # bloomidx.probe_skip lets it run only where it can win, from
-        # numbers already on the driver: past ~1k keys per touched
-        # bucket every file is bloom-positive (a bulk epoch), and under
-        # BLOOM_PROBE_MIN_ROWS manifest rows in the touched buckets
-        # the plain narrow scan is cheaper than the probe.  Wide
-        # fan-out batches over large buckets (the dedup index: 20 k
-        # band hashes over 64 bh-buckets ≈ 312/bucket of a 64 M-entry
-        # table) pass both and keep their measured pruning win
-        # (BENCH_DEDUPIDX.md).  A skip records its reason.
-        bloom_allow = None
-        bloom_stats = None
-        if snap.key_blooms:
-            from realdeal_spark.lake import bloomidx
-
-            bloom_stats = bloomidx.probe_skip(
-                n_src,
-                snap.n_buckets,
-                bloomidx.rows_in_buckets(snap.files, touched),
-            )
-            if bloom_stats is None:
-                _, bloom_allow, bloom_stats, _ = table._lookup_candidates(
-                    snap, src.select(*key_cols)
-                )
-        # narrow current state of the touched buckets (reconciled
-        # across any earlier MoR deltas; parquet reads only these
-        # columns thanks to column pruning through read()'s projection)
-        tgt = (
-            table.read(
-                buckets=touched,
-                include_deleted=True,
-                file_allowlist=bloom_allow,
-            )
-            .select(*key_cols, *order_cols, _DELETED_COL)
-        )
-        # classification is fully NARROW: only (key, order, op) of the
-        # source meets the target projection — the html/binary payload
-        # never enters this join's shuffle.  The winner keys then route
-        # the payload rows out of the persisted source with a broadcast
-        # hash join when they fit (payload side map-only), falling back
-        # to a shuffled join for huge batches (initial loads) — the
-        # same payload-light discipline as cdc.conflate's light
-        # strategy, applied to the MERGE itself.
-        s = src.select(*key_cols, *order_cols, OP_COL).alias("s")
-        t = tgt.alias("t")
-        joined = s.join(
-            t, on=[F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols], how="left"
+            "MoR merge: source batch carries event(s) with an order "
+            "tuple equal to the stored row's but conflicting "
+            "visibility (e.g. a tying delete of a live row) — the "
+            "order tuple must be unique per key (binlog lsn); use "
+            "mode='cow' if ties must win"
         )
 
-        s_order = F.struct(*[F.col(f"s.{c}") for c in order_cols])
-        t_order = F.struct(*[F.col(f"t.{c}") for c in order_cols])
-        t_present = F.col(f"t.{key_cols[0]}").isNotNull()
-        t_visible = t_present & ~F.col(f"t.{_DELETED_COL}")
-        is_delete = F.col(f"s.{OP_COL}") == OP_DELETE
+    extras = {} if bloom_stats is None else {"classify_bloom": bloom_stats}
+    # winner_keys holds exactly the rows the winner counters counted
+    n_winners = sum(m[k] for k in list(_COUNTS)[:4])
+    if not n_winners:
+        return m, {}, extras
+    wk = winner_keys
+    routed = src
+    if n_winners <= BROADCAST_KEYS_MAX:
+        wk = F.broadcast(wk)
+    else:
+        # over-cap winner set: the routing semi join must shuffle the
+        # payload — Bloom-prefilter src so only winner rows (+ ~1.4%
+        # fp) enter it.  winner_keys is already localCheckpointed, so
+        # the bloom build and the semi join share one materialization.
+        from realdeal_spark.operators.bloom import bloom_prefilter
 
-        action = (
-            F.when(t_present & (s_order < t_order), F.lit("stale"))
-            .when(t_present & (s_order == t_order), F.lit("unchanged"))
-            .when(is_delete & t_visible, F.lit("delete"))
-            .when(is_delete, F.lit("tombstone"))  # delete of absent/deleted key
-            .when(~t_visible, F.lit("insert"))  # new key or resurrect
-            .otherwise(F.lit("update"))
+        routed = bloom_prefilter(src, wk, key_cols, n_winners)
+    winners = (
+        routed.join(wk, on=key_cols, how="left_semi")
+        .select(
+            *data_cols,
+            F.col(_BUCKET_COL),
+            (F.col(OP_COL) == OP_DELETE).alias(_DELETED_COL),
         )
-        # precondition guard: MoR classifies equal-order events as
-        # "unchanged" (exact replay of the stored event), which is
-        # only equivalent to CoW's tie-wins under the documented
-        # unique-order-tuple rule.  The dangerous violation — a
-        # *conflicting* event carrying the stored row's exact order
-        # tuple but implying different visibility (e.g. a tying
-        # delete of a visible row, which MoR would silently drop and
-        # CoW would apply) — is detectable payload-free, so it is
-        # counted on the same job and raises instead of diverging.
-        # (An equal-order update with different payload values is not
-        # detectable without reading the payload; that residual case
-        # remains the documented precondition.)
-        order_conflict = (
-            t_present
-            & (s_order == t_order)
-            & (is_delete != F.col(f"t.{_DELETED_COL}"))
-        )
-        classified = joined.select(
-            action.alias("_action"),
-            order_conflict.cast("long").alias("_order_conflict"),
-            *[F.col(f"s.{c}").alias(c) for c in key_cols],
-        )
-
-        cnt = lambda a: F.sum(
-            F.when(F.col("_action") == a, 1).otherwise(0).cast("long")
-        )
-        obs = Observation()
-        observed = classified.observe(
-            obs,
-            cnt("insert").alias("ins"),
-            cnt("update").alias("upd"),
-            cnt("delete").alias("del"),
-            cnt("tombstone").alias("tomb"),
-            cnt("unchanged").alias("unch"),
-            cnt("stale").alias("stale"),
-            F.sum("_order_conflict").alias("conflict"),
-        )
-        # localCheckpoint materializes the classification ONCE: the
-        # count below, the Observation, and the winner-routing semi
-        # join all read the checkpointed (narrow: keys only) result —
-        # without it the observed plan re-executed the target scan +
-        # classify join a second time inside the routing join.
-        winner_keys = (
-            observed.where(
-                F.col("_action").isin("insert", "update", "delete", "tombstone")
-            )
-            .select(*key_cols)
-            .localCheckpoint(eager=True)
-        )
-        n_winners = winner_keys.count()
-        try:
-            m = {k: int(v or 0) for k, v in obs.get.items()}
-        except Exception:
-            # AQE's empty-relation propagation can eliminate the
-            # CollectMetrics node when nothing survives the winner
-            # filter; recompute the (narrow) action counts directly —
-            # only the all-noop epoch pays this.
-            rows = (
-                classified.groupBy("_action")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("_order_conflict").alias("c"),
-                )
-                .collect()
-            )
-            counts = {r["_action"]: r["n"] for r in rows}
-            m = {
-                "ins": counts.get("insert", 0),
-                "upd": counts.get("update", 0),
-                "del": counts.get("delete", 0),
-                "tomb": counts.get("tombstone", 0),
-                "unch": counts.get("unchanged", 0),
-                "stale": counts.get("stale", 0),
-                "conflict": sum(int(r["c"] or 0) for r in rows),
-            }
-        if m.pop("conflict", 0):
-            raise ValueError(
-                "MoR merge: source batch carries event(s) with an order "
-                "tuple equal to the stored row's but conflicting "
-                "visibility (e.g. a tying delete of a live row) — the "
-                "order tuple must be unique per key (binlog lsn); use "
-                "mode='cow' if ties must win"
-            )
-
-        result = MergeResult(
-            snapshot=None,
-            inserted=m["ins"],
-            updated=m["upd"],
-            deleted=m["del"],
-            unchanged=m["unch"],
-            stale=m["stale"],
-            touched_buckets=touched,
-        )
-        if n_winners == 0:
-            # pure no-op epoch: nothing to write; still commit a
-            # marker snapshot if an epoch id must be recorded for
-            # exactly-once.
-            if epoch_id is None:
-                return result
-            new_files: dict = {}
-        else:
-            wk = winner_keys
-            routed = src
-            if n_winners <= BROADCAST_KEYS_MAX:
-                wk = F.broadcast(wk)
-            else:
-                # over-cap winner set: the routing semi join must
-                # shuffle the payload — Bloom-prefilter src so only
-                # winner rows (+ ~1.4% fp) enter it.  winner_keys is
-                # already localCheckpointed, so the bloom build and the
-                # semi join share one materialization.
-                from realdeal_spark.operators.bloom import bloom_prefilter
-
-                routed = bloom_prefilter(src, wk, key_cols, n_winners)
-            winners = (
-                routed.join(wk, on=key_cols, how="left_semi")
-                .select(
-                    *data_cols,
-                    F.col(_BUCKET_COL),
-                    (F.col(OP_COL) == OP_DELETE).alias(_DELETED_COL),
-                )
-                .repartition(min(max(len(touched), 1), 256), _BUCKET_COL)
-            )
-            new_files = table._write_delta(winners, snap, mor=True)
-        result.rewritten_buckets = sorted(int(b) for b in new_files)
-        summary = {
-            "inserted": result.inserted,
-            "updated": result.updated,
-            "deleted": result.deleted,
-            "unchanged": result.unchanged,
-            "stale": result.stale,
-            **(
-                {"classify_bloom": bloom_stats}
-                if bloom_stats is not None
-                else {}
-            ),
-            **(extra_summary or {}),
-        }
-        result.snapshot = table.commit_file_additions(
-            snap, new_files=new_files, summary=summary, epoch_id=epoch_id
-        )
-        return result
-    finally:
-        src.unpersist()
+        .repartition(_write_partitions(len(touched)), _BUCKET_COL)
+    )
+    return m, table._write_delta(winners, snap, mor=True), extras

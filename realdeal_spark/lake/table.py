@@ -62,6 +62,13 @@ _BUCKET_COL = "_bucket"
 _DELETED_COL = "_deleted"
 _PART_DIR_COL = "pb"
 
+
+def _write_partitions(n: int) -> int:
+    """Partition count of a bucketed write spanning ``n`` buckets: one
+    task per bucket, capped at 256."""
+    return min(max(n, 1), 256)
+
+
 # int→long etc. widening lattice: widen_column may only move rightward.
 _WIDEN_CHAINS = [
     ["int", "bigint", "double"],
@@ -1510,7 +1517,7 @@ class LakeTable:
             *[F.col(f["name"]).cast(f["type"]) for f in cur.fields],
             self.bucket_expr(snap).alias(_BUCKET_COL),
             *extra,
-        ).repartition(min(snap.n_buckets, 256), _BUCKET_COL)
+        ).repartition(_write_partitions(snap.n_buckets), _BUCKET_COL)
         obs = None
         aggs = []
         if snap.order_columns:
@@ -1649,7 +1656,7 @@ class LakeTable:
         groups inside the file (the Iceberg write-sort-order lever).
         """
         snap = base_snapshot or self.snapshot()
-        out = df.repartition(min(max(len(touched_buckets), 1), 256), _BUCKET_COL)
+        out = df.repartition(_write_partitions(len(touched_buckets)), _BUCKET_COL)
         new_files = self._write_delta(out, snap, sort_by=sort_by)
         return self.commit(
             snap,
@@ -1902,7 +1909,6 @@ class LakeTable:
         max_files_per_bucket: int = 1,
         sort_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
-        zorder_bits: int = 8,
     ) -> Snapshot | None:
         """Rewrite buckets whose file count exceeds the target.
 
@@ -1950,8 +1956,8 @@ class LakeTable:
         if zorder_by:
             from realdeal_spark.lake.zorder import zorder_boundaries, zorder_expr
 
-            bounds = zorder_boundaries(df, zorder_by, bits=zorder_bits)
-            sort_by = [zorder_expr(zorder_by, bounds, bits=zorder_bits)]
+            bounds = zorder_boundaries(df, zorder_by)
+            sort_by = [zorder_expr(zorder_by, bounds)]
         return self.replace_buckets(
             df,
             fat,
@@ -1985,7 +1991,7 @@ class LakeTable:
             F.lit(new_n),
         ).cast("int")
         out = df.withColumn(_BUCKET_COL, bucket).repartition(
-            min(new_n, 256), _BUCKET_COL
+            _write_partitions(new_n), _BUCKET_COL
         )
         # full rewrite anyway — keep the write sort order (see
         # compact()) so the new base files stay row-group-prunable

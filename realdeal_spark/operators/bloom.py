@@ -17,7 +17,7 @@ not a selective filter over a scan, and the expressions it uses
 public SQL functions.  This module builds the same shape out of
 public DataFrame ops:
 
-- **build**: explode each key into its ``n_hashes`` bit positions
+- **build**: explode each key into its ``N_HASHES`` bit positions
   (``xxhash64(key, seed) mod m``), pack into 64-bit words with
   ``bit_or`` (a HashAggregate with map-side partial combine — fully
   distributed, the driver never holds keys), yielding a words table
@@ -29,8 +29,8 @@ public DataFrame ops:
   set (a missing word ⇒ bit unset ⇒ filtered).
 
 No false negatives by construction (every member's bits are set);
-false-positive rate ≈ ``(1 - e^(-k·n/m))^k`` — at the defaults
-(16 bits/key, k=2) ≈ 1.4%.
+false-positive rate ≈ ``(1 - e^(-k·n/m))^k`` — at 16 bits/key and
+k=2 ≈ 1.4%.
 
 Reference analogue: none (the reference shuttles one row per HTTP
 request, fusion_tables_client.py:21-26); this is pure engine-mandate
@@ -43,22 +43,50 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # number of hash functions (k) and filter bits per expected key (m/n)
-DEFAULT_N_HASHES = 2
-DEFAULT_BITS_PER_KEY = 16
+N_HASHES = 2
+BITS_PER_KEY = 16
 
 
-def _bit_position(cols: list[Column], seed: int, m_bits: int) -> Column:
-    """Bit position of hash ``seed`` over the key tuple: xxhash64 with
-    a per-hash literal seed column appended, folded into [0, m)."""
-    return F.pmod(F.xxhash64(*cols, F.lit(seed)), F.lit(m_bits))
+def bit_positions(cols: list[Column], m_bits: int | Column, k: int) -> Column:
+    """Array of the ``k`` bit positions of one key tuple: xxhash64 with
+    the hash index appended as a literal seed column, folded into
+    [0, m_bits).  With :func:`word_index` and :func:`word_bit` this is
+    the one bit layout of this filter and of the per-file key sidecars
+    (lake/bloomidx.py), whose words are on disk: changing it would
+    make every existing sidecar probe wrong."""
+    m = m_bits if isinstance(m_bits, Column) else F.lit(m_bits)
+    return F.array(*[F.pmod(F.xxhash64(*cols, F.lit(i)), m) for i in range(k)])
+
+
+def word_index(pos: str) -> Column:
+    """Index of the 64-bit word holding bit position column ``pos``."""
+    return F.expr(f"{pos} div 64")
+
+
+def word_bit(pos: str) -> Column:
+    """Mask of bit position column ``pos`` inside its word.  The shift
+    amount must be a column -> SQL shiftleft (the pyspark builtin only
+    takes a literal); bit 63 lands on the sign bit, which bit_or/&
+    treat as a plain bit."""
+    return F.expr(f"shiftleft(1L, cast({pos} % 64 as int))")
+
+
+def pack_words(
+    df: DataFrame, positions: Column, group: list[str], w: str, word: str
+) -> DataFrame:
+    """``(*group, w, word)``: the bit ``positions`` of every row of
+    ``df`` packed into 64-bit words — one row per word with a bit set,
+    combined by ``bit_or`` (map-side partial aggregate)."""
+    return (
+        df.select(*group, F.explode(positions).alias("_pos"))
+        .select(*group, word_index("_pos").alias(w), word_bit("_pos").alias("_b"))
+        .groupBy(*group, w)
+        .agg(F.bit_or("_b").alias(word))
+    )
 
 
 def bloom_build(
-    keys_df: DataFrame,
-    cols: list[str],
-    expected_keys: int,
-    bits_per_key: int = DEFAULT_BITS_PER_KEY,
-    n_hashes: int = DEFAULT_N_HASHES,
+    keys_df: DataFrame, cols: list[str], expected_keys: int
 ) -> tuple[DataFrame, int]:
     """Build the packed-words Bloom table over ``cols`` of ``keys_df``.
 
@@ -66,37 +94,16 @@ def bloom_build(
     ``(_bf_w bigint, _bf_word bigint)`` — at most ``m_bits/64`` rows.
     ``expected_keys`` sizes the filter (the exact count where known,
     else the admission pass's HLL estimate); overshooting wastes
-    ``bits_per_key/8`` bytes per phantom key, undershooting only
+    ``BITS_PER_KEY/8`` bytes per phantom key, undershooting only
     raises the false-positive rate — never correctness.
     """
-    m_bits = max(1024, int(expected_keys) * bits_per_key)
-    key_cols = [F.col(c) for c in cols]
-    pos = F.array(
-        *[_bit_position(key_cols, i, m_bits) for i in range(n_hashes)]
-    )
-    words = (
-        keys_df.select(F.explode(pos).alias("_pos"))
-        .select(
-            F.expr("_pos div 64").alias("_bf_w"),
-            # shift amount must be a column -> SQL shiftleft (the
-            # pyspark builtin only takes a literal); bit 63 lands on
-            # the sign bit, which bit_or/& treat as a plain bit
-            F.expr("shiftleft(1L, cast(_pos % 64 as int))").alias("_b"),
-        )
-        .groupBy("_bf_w")
-        .agg(F.bit_or("_b").alias("_bf_word"))
-    )
-    return words, m_bits
+    m_bits = max(1024, int(expected_keys) * BITS_PER_KEY)
+    pos = bit_positions([F.col(c) for c in cols], m_bits, N_HASHES)
+    return pack_words(keys_df, pos, [], "_bf_w", "_bf_word"), m_bits
 
 
 def bloom_prefilter(
-    df: DataFrame,
-    keys_df: DataFrame,
-    cols: list[str],
-    expected_keys: int,
-    bits_per_key: int = DEFAULT_BITS_PER_KEY,
-    n_hashes: int = DEFAULT_N_HASHES,
-    materialize: bool = True,
+    df: DataFrame, keys_df: DataFrame, cols: list[str], expected_keys: int
 ) -> DataFrame:
     """Rows of ``df`` whose key tuple *might* be in ``keys_df``.
 
@@ -104,32 +111,28 @@ def bloom_prefilter(
     false negatives); of the rest ≈ fpp survive — follow with the
     exact semi join, which now shuffles only the survivors.
 
-    ``materialize=True`` localCheckpoints the words table so the k
-    broadcast probes (and whatever later consumes ``keys_df``) don't
-    re-run its upstream plan per probe — the words table is tiny
-    (≤ ``expected_keys · bits_per_key / 64`` rows of two longs).
+    The words table is localCheckpointed so the k broadcast probes
+    (and whatever later consumes ``keys_df``) don't re-run its
+    upstream plan per probe — it is tiny (≤ ``expected_keys ·
+    BITS_PER_KEY / 64`` rows of two longs).
     """
-    words, m_bits = bloom_build(
-        keys_df, cols, expected_keys, bits_per_key, n_hashes
-    )
-    if materialize:
-        words = words.localCheckpoint(eager=True)
-    key_cols = [F.col(c) for c in cols]
+    words, m_bits = bloom_build(keys_df, cols, expected_keys)
+    words = words.localCheckpoint(eager=True)
+    positions = bit_positions([F.col(c) for c in cols], m_bits, N_HASHES)
     out = df
     keep = F.lit(True)
     probe_cols: list[str] = []
-    for i in range(n_hashes):
+    for i in range(N_HASHES):
         pos_c, w_c, word_c = f"_bf_pos{i}", f"_bf_w{i}", f"_bf_word{i}"
-        out = out.withColumn(pos_c, _bit_position(key_cols, i, m_bits))
-        out = out.withColumn(w_c, F.expr(f"{pos_c} div 64"))
+        out = out.withColumn(pos_c, positions[i])
+        out = out.withColumn(w_c, word_index(pos_c))
         probe = words.select(
             F.col("_bf_w").alias(w_c), F.col("_bf_word").alias(word_c)
         )
         out = out.join(F.broadcast(probe), on=w_c, how="left")
-        bit = F.expr(f"shiftleft(1L, cast({pos_c} % 64 as int))")
         # null word (index absent from the table) -> bit unset -> drop
         keep = keep & (
-            F.coalesce(F.col(word_c), F.lit(0)).bitwiseAND(bit) != 0
+            F.coalesce(F.col(word_c), F.lit(0)).bitwiseAND(word_bit(pos_c)) != 0
         )
         probe_cols += [pos_c, w_c, word_c]
     return out.where(keep).drop(*probe_cols)

@@ -47,6 +47,7 @@ from realdeal_spark.lake.table import (
     _BUCKET_COL,
     _DELETED_COL,
     LakeTable,
+    _write_partitions,
     interval_epoch_id,
     interval_step,
     interval_watermark,
@@ -696,7 +697,7 @@ def build_ivf_index(
         base,
         "ivf-build",
         add=idx._write_delta(
-            rows.repartition(min(len(centroids), 256), _BUCKET_COL), base
+            rows.repartition(_write_partitions(len(centroids)), _BUCKET_COL), base
         ),
         epoch_id=(
             None if table_version is None

@@ -5,6 +5,7 @@ skewed hot keys, replay equivalence across different epoch sizes."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -52,6 +53,24 @@ def _state(table):
     }
 
 
+def _count_jobs(spark, fn):
+    """``(fn(), n)``: ``n`` is the number of Spark jobs ``fn`` ran, read
+    off the status tracker through a job group.  Job counts are
+    deterministic where wall time is not, so they pin a code path's
+    cost."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # ------------------------------------------------------------ conflate
 
 
@@ -74,7 +93,12 @@ def test_merge_insert_update_delete(spark, tmp_path):
     t = _mk_table(spark, tmp_path)
     merge_apply(t, _events_df(spark, [(1, "insert", "a", 10, "A1"), (2, "insert", "b", 11, "B1")]))
     assert set(_state(t)) == {"a", "b"}
-    merge_apply(t, _events_df(spark, [(3, "update", "a", 20, "A2")]))
+    res, jobs = _count_jobs(
+        spark, lambda: merge_apply(t, _events_df(spark, [(3, "update", "a", 20, "A2")]))
+    )
+    # the CoW MERGE's job count, pinned: a change that adds a job to
+    # the epoch body must show up here
+    assert res.updated == 1 and jobs == 6, jobs
     st = _state(t)
     assert bytes(st["a"]["html"]).decode() == "A2"
     merge_apply(t, _events_df(spark, [(4, "delete", "b", 21, None)]))
@@ -184,6 +208,18 @@ def test_exactly_once_epoch_skip(spark, tmp_path):
     reports = a2.run(ev, epoch_size=100, from_lsn=0)
     assert all(r.skipped for r in reports)
     assert t.current_version() == v
+    # merge_apply itself honours an applied epoch id: no job, no commit
+    eid = "lsn:0-99"
+    assert eid in t.snapshot().applied_epochs
+    res, jobs = _count_jobs(
+        spark,
+        lambda: merge_apply(
+            t, _events_df(spark, [(0, "insert", "x", 1, "X")]), epoch_id=eid
+        ),
+    )
+    assert res.snapshot is None and jobs == 0
+    assert t.current_version() == v
+    assert t.snapshot().applied_epochs.count(eid) == 1
     _assert_matches_oracle(t, ev)
 
 

@@ -10,7 +10,13 @@ from realdeal_spark.cdc.events import generate_change_events, naive_replay
 from realdeal_spark.lake.merge import merge_apply
 from realdeal_spark.lake.table import LakeTable
 
-from tests.test_merge_cdc import PAGES_SCHEMA, _events_df, _mk_table, _state
+from tests.test_merge_cdc import (
+    PAGES_SCHEMA,
+    _count_jobs,
+    _events_df,
+    _mk_table,
+    _state,
+)
 
 
 def _assert_oracle(table, events_df):
@@ -162,6 +168,19 @@ def test_mor_exactly_once_and_noop_epoch(spark, tmp_path):
     assert r2.snapshot is not None  # marker commit carries the epoch id
     assert "lsn:10001-10001" in t.snapshot().applied_epochs
     assert r.snapshot.version + 1 == r2.snapshot.version
+    # a retry of the applied id is a no-op: no job, no second commit
+    r3, jobs = _count_jobs(
+        spark,
+        lambda: merge_apply(
+            t,
+            _events_df(spark, [(10_000, "insert", "nn", 1, "N")]),
+            mode="mor",
+            epoch_id="lsn:10001-10001",
+        ),
+    )
+    assert r3.snapshot is None and jobs == 0
+    assert t.current_version() == r2.snapshot.version
+    assert t.snapshot().applied_epochs.count("lsn:10001-10001") == 1
 
 
 def test_mor_coalesce_rejected(spark, tmp_path):
@@ -208,10 +227,19 @@ def test_mor_classification_materialized_once(spark, tmp_path, monkeypatch):
         return real(self, eager=eager)
 
     monkeypatch.setattr(df_cls, "localCheckpoint", spy)
-    r = merge_apply(t, _events_df(spark, [(2, "update", "a", 20, "A2")]), mode="mor")
+    r, jobs = _count_jobs(
+        spark,
+        lambda: merge_apply(
+            t, _events_df(spark, [(2, "update", "a", 20, "A2")]), mode="mor"
+        ),
+    )
     assert r.updated == 1
     # exactly one checkpoint during the MoR apply, of the key projection
     assert ["url"] in calls
+    # the MoR epoch's job count, pinned: the winner count is read off
+    # the classification's own counters, so the checkpointed keys are
+    # never counted again
+    assert jobs == 13, jobs
 
 
 def test_mor_tying_conflict_raises(spark, tmp_path):
